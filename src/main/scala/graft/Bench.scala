@@ -1,10 +1,27 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   * Results are fully materialized via the `noop` sink (forces every
   * operator — joins, sorts, writes — without driver collect). */
 object Bench {
+  private val ShortKey = "^(q\\d+b?)".r
+
+  /** The keys one rung of the stdout per-query map emits for `names`: the
+    * unique qNN[b] prefix (the full name when there is none), without its
+    * 'q' when `bareQ`. None when two names emit the same key — e.g. `q102_x`
+    * and a literal `102` under `bareQ` — so the rung is skipped rather than
+    * printing a duplicate JSON key. */
+  def rungKeys(names: Seq[String], bareQ: Boolean): Option[Seq[String]] = {
+    val keys = names.map { n =>
+      val sk = ShortKey.findFirstIn(n).getOrElse(n)
+      if (bareQ) sk.stripPrefix("q") else sk
+    }
+    if (keys.distinct.size == keys.size) Some(keys) else None
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -110,13 +127,22 @@ object Bench {
         (foreignPpm, stealPpm, loadAvg100())
       }
     }
+    // Janino compiles in this JVM (driver and tasks) and their total time,
+    // JVM-wide counters; a run's delta of them is what the run compiled
+    // because it missed the compiled-class cache (GraftSession).
+    def codegen(): (Long, Long) =
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val results = selected.map { case (name, fn) =>
       val timed = (1 to runs).flatMap { _ =>
         val ticks0 = hostTicks()
+        val cg0 = codegen()
         val t0 = System.nanoTime()
         val res = try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some(((System.nanoTime() - t0) / 1e9, diag(), envDelta(ticks0)))
+          val t = (System.nanoTime() - t0) / 1e9
+          val cg = codegen()
+          Some((t, diag(), envDelta(ticks0),
+            (cg._1 - cg0._1, (cg._2 - cg0._2) / 1000000L)))
         } catch { case e: Throwable =>
           if (!failed.contains(name)) failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -142,16 +168,17 @@ object Bench {
       val times = timed.map(_._1)
       val diags = timed.map(_._2)
       val envs = timed.map(_._3)
+      val cgs = timed.map(_._4)
       val sec =
         if (times.isEmpty) 0.0
         else times.sorted.apply((times.size - 1) / 2) // lower median
       System.err.println(
         f"[bench] $name%-28s $sec%8.2f s  (runs: ${times.map(t => f"$t%.2f").mkString(" ")})")
-      (name, sec, times, diags, envs)
+      (name, sec, times, diags, envs, cgs)
     }
     // a failed query must not masquerade as a fast one in the JSON record
     val ok = results.filterNot(r => failed.contains(r._1))
-    val qs = ok.map { case (k, v, _, _, _) => "\"" + k + f"\":$v%.3f" }
+    val qs = ok.map { case (k, v, _, _, _, _) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     // Every per-query number lives in BENCH_RUNS.json, NOT on stdout: the
     // driver keeps only the last ~2000 bytes of stdout, and at 88+ queries
@@ -159,12 +186,12 @@ object Bench {
     // the line start and making it unparseable (this nulled BENCH_r05,
     // _r11 and _r12's parse). The stdout line carries only the totals —
     // metric/value/n/failed/sf, a few hundred bytes at any registry size.
-    val runsJson = ok.map { case (k, _, ts, _, _) =>
+    val runsJson = ok.map { case (k, _, ts, _, _, _) =>
         "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     // one diag object per run: [heapMB, storageUsedMB, persistentRdds,
     // broadcastBlocks] — see diag() above
-    val diagJson = ok.map { case (k, _, _, ds, _) =>
+    val diagJson = ok.map { case (k, _, _, ds, _, _) =>
         "\"" + k + "\":" + ds.map { case (h, st, r, b) => s"[$h,$st,$r,$b]" }
           .mkString("[", ",", "]")
       }.mkString("{", ",", "}")
@@ -172,9 +199,14 @@ object Bench {
     // host-contention record CheckFreeze's classifier reads (an
     // over-threshold query with a foreign/steal spike on its slow runs
     // is "contended" — host noise, not a plan regression)
-    val envJson = ok.map { case (k, _, _, _, es) =>
+    val envJson = ok.map { case (k, _, _, _, es, _) =>
         "\"" + k + "\":" + es.map { case (f, s, l) => s"[$f,$s,$l]" }
           .mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+    // one value per run: classes compiled and ms spent compiling them
+    def codegenJson(f: ((Long, Long)) => Long): String = ok.map {
+        case (k, _, _, _, _, cs) =>
+          "\"" + k + "\":" + cs.map(f).mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     val ncpu = Runtime.getRuntime.availableProcessors()
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -192,31 +224,27 @@ object Bench {
     // stream). Full-fidelity numbers stay in BENCH_RUNS.json; the total
     // line's existing fields are byte-identical to the r21 format.
     val tailBudget = 1880
-    val shortKey = "^(q\\d+b?)".r
-    // bareQ additionally strips the leading 'q' (keys stay unique — same
-    // uniqueness check below): measured at the 176-query registry, the
+    // bareQ additionally strips the leading 'q' (rungKeys skips a rung
+    // whose emitted keys collide): measured at the 176-query registry, the
     // 1-decimal qNN map is 1948 chars assembled — NEVER fits the 2000-byte
     // window next to sbt's ~76-char "[success]" trailer — while the bare
     // variant (1772) fits with ~150 bytes of slack. The first r22 session
     // shipped only the qNN rungs, so the map was silently dropped on the
     // full registry; the bare rungs make the ladder actually land.
-    def pqJson(dec: Int, bareQ: Boolean): String = ok.map { case (k, v, _, _, _) =>
-        val sk = shortKey.findFirstIn(k).getOrElse(k)
-        val key = if (bareQ) sk.stripPrefix("q") else sk
-        "\"" + key + "\":" + (if (dec == 2) f"$v%.2f" else f"$v%.1f")
-      }.mkString("{", ",", "}")
+    def pqJson(dec: Int, bareQ: Boolean): Option[String] =
+      rungKeys(ok.map(_._1), bareQ).map(_.zip(ok).map { case (key, r) =>
+        "\"" + key + "\":" + (if (dec == 2) f"${r._2}%.2f" else f"${r._2}%.1f")
+      }.mkString("{", ",", "}"))
     def assemble(pq: Option[String]): String = {
       val qfield = pq.map(m => s""""queries":$m,""").getOrElse("")
       f"""{"metric":"total","value":$total%.3f,"unit":"sec",$qfield"n":${ok.size},"failed":$failedJson,"sf":"$sfDir"}"""
     }
-    val shortsUnique =
-      ok.map(r => shortKey.findFirstIn(r._1).getOrElse(r._1)).distinct.size == ok.size
-    val line = Seq(Some(pqJson(2, false)), Some(pqJson(1, false)),
-        Some(pqJson(2, true)), Some(pqJson(1, true)), None)
-      .map(pq => assemble(pq.filter(_ => shortsUnique)))
+    val line = Seq(pqJson(2, false), pqJson(1, false),
+        pqJson(2, true), pqJson(1, true)).flatten
+      .map(pq => assemble(Some(pq)))
       .find(_.length <= tailBudget)
       .getOrElse(assemble(None))
-    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"diag":$diagJson,"env":$envJson,"ncpu":$ncpu,"failed":$failedJson,"sf":"$sfDir"}"""
+    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"diag":$diagJson,"env":$envJson,"codegen_compiles":${codegenJson(_._1)},"codegen_ms":${codegenJson(_._2)},"ncpu":$ncpu,"failed":$failedJson,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("BENCH_RUNS.json", "UTF-8")
       try w.println(full) finally w.close()

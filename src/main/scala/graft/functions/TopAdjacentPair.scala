@@ -22,7 +22,8 @@ final class PairCounts(
 /** `top_adjacent_pair(weight, syms)`: the single most frequent adjacent
   * symbol pair across all rows — each position of each row's `syms`
   * array contributes `weight` (a run of k equal symbols contributes
-  * k−1 positions, the reference BPE statistic) — with the trainer's
+  * k−1 positions, the reference BPE statistic; a pair with a NULL side
+  * is skipped, so a NULL element contributes no pair) — with the trainer's
   * pinned total tie order (count desc, left asc, right asc, string
   * order = UTF-8 binary, exactly Spark's own string sort). Returns
   * struct(left, right, n) or NULL when no row has ≥ 2 symbols.
@@ -75,8 +76,9 @@ case class TopAdjacentPair(
       val n = a.numElements()
       var i = 0
       while (i < n - 1) {
-        add(buf, a.getUTF8String(i), a.getUTF8String(i + 1),
-          w.asInstanceOf[Long])
+        if (!a.isNullAt(i) && !a.isNullAt(i + 1))
+          add(buf, a.getUTF8String(i), a.getUTF8String(i + 1),
+            w.asInstanceOf[Long])
         i += 1
       }
     }

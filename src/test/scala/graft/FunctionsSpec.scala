@@ -239,20 +239,23 @@ class FunctionsSpec extends AnyFunSuite with SharedSpark {
     // weighted symbol rows: runs of equal symbols (k−1 positions), short
     // arrays (< 2 symbols — contribute nothing), engineered count ties
     // (broken by UTF-8-binary (left, right)), shuffled across partitions
-    // so the partial/merge/serialize path is exercised
+    // so the partial/merge/serialize path is exercised; NULL elements
+    // drop every pair they sit in (heavy enough to win if counted)
     val rows: Seq[(Long, Seq[String])] =
       (1 to 120).map { _ =>
         val n = rnd.nextInt(6)
         (rnd.nextInt(5).toLong + 1L,
           Seq.fill(n)(alphabet(rnd.nextInt(alphabet.size))))
       } ++ Seq((3L, Seq("a", "a", "a")), (1L, Seq.empty[String]),
-        (2L, Seq("only")))
+        (2L, Seq("only")), (50L, Seq(null, "z", null, "z", null)),
+        (1L, Seq("é", "ß", null, "é")))
     val df = rows.toDF("f", "syms").repartition(7)
     val want = df.filter(size(col("syms")) >= 2)
       .select(col("f"), explode(
         transform(sequence(lit(1), size(col("syms")) - 1),
           j => struct(element_at(col("syms"), j).as("s1"),
             element_at(col("syms"), j + lit(1)).as("s2")))).as("p"))
+      .filter(col("p.s1").isNotNull && col("p.s2").isNotNull)
       .groupBy(col("p.s1").as("s1"), col("p.s2").as("s2"))
       .agg(sum(col("f")).as("n"))
       .orderBy(desc("n"), col("s1"), col("s2"))
