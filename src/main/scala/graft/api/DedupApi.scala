@@ -726,11 +726,10 @@ private[api] trait DedupApi { self: GraftOps.type =>
     * except the edge list, which is unpersisted before returning (on the
     * throw path too) — library callers' own persisted frames are never
     * touched, and `spark.sharedState.cacheManager` stays as the caller
-    * left it (spec-asserted). Round checkpoints live in executor
-    * block storage and are reclaimed by the ContextCleaner as the loop
-    * drops its references. (localCheckpoint trades fault recovery for
-    * speed — an executor loss mid-consumption fails the job; on a
-    * long-lived cluster pipeline, write the result out instead.) */
+    * left it (spec-asserted). Round checkpoints live in a [[Checkpoints]]
+    * scope: each superseded round is freed as soon as the next one is
+    * materialized, and only the final round — the one the result reads
+    * — outlives the call (none on the throw path; spec-asserted). */
   def dedupClusters(pairs: DataFrame, idA: Column, idB: Column,
       maxIter: Int = 30, driverLimit: Long = 1000000L): DataFrame = {
     // Null ids are dropped EXPLICITLY: left in, they would fall out of the
@@ -798,9 +797,6 @@ private[api] trait DedupApi { self: GraftOps.type =>
     // union of q16+q18 pairs) in the same exchange that symmetrizes
     val edges = halfP.union(halfP.select(col("b").as("a"), col("a").as("b")))
       .distinct().persist()
-    var converged = false
-    var iter = 0
-    var labels: DataFrame = null
     // Each round both CHECKPOINTS (truncate lineage — the plan otherwise
     // grows ~4^rounds and analysis OOMs) and REPLACES the checkpoint's
     // inherited statistics (size-only join estimation multiplies child
@@ -808,27 +804,26 @@ private[api] trait DedupApi { self: GraftOps.type =>
     // round ~12 one stats pass is minutes of BigInteger math; see
     // StatsBridge) with the honest estimate rows × width: the vertex
     // count is invariant across rounds (inner joins on id preserve every
-    // vertex), so one count on the first checkpoint prices all of them —
-    // small label tables keep broadcasting, huge ones keep shuffling.
-    // Both failure modes are invisible at 2–4 rounds and bite on deep
-    // graphs — exactly the case pointer jumping exists for.
-    var nVertices = -1L
-    def roundCheckpoint(df: DataFrame): DataFrame = {
-      val ck = df.localCheckpoint(eager = true)
-      if (nVertices < 0) nVertices = ck.count()
-      org.apache.spark.sql.graftbridge.StatsBridge.withStats(ck,
-        BigInt(nVertices) * (16L + 8L * ck.schema.length),
-        Some(BigInt(nVertices)))
-    }
-    try {
-      labels = roundCheckpoint(edges.select(col("a").as("id")).distinct()
-        .withColumn("lbl", col("id")))
+    // vertex), so one count, observed on the first checkpoint, prices
+    // all of them — small label tables keep broadcasting, huge ones keep
+    // shuffling. Both failure modes are invisible at 2–4 rounds and bite
+    // on deep graphs — exactly the case pointer jumping exists for.
+    try Checkpoints.scoped { cp =>
+      val (init, nv) = cp(edges.select(col("a").as("id")).distinct()
+        .withColumn("lbl", col("id")), count(lit(1)))
+      val nVertices = BigInt(nv.getLong(0))
+      def priced(ck: DataFrame): DataFrame =
+        org.apache.spark.sql.graftbridge.StatsBridge.withStats(ck,
+          nVertices * (16L + 8L * ck.schema.length), Some(nVertices))
       // halfP is released only AFTER the eager checkpoint above has
       // materialized `edges` into its cache — unpersisting earlier lets
       // the pair blocks be evicted before the union's two branches read
       // them, rescanning the upstream source twice. (The finally below
       // covers the throw path; unpersist is idempotent.)
       halfP.unpersist()
+      var labels = priced(init)
+      var converged = false
+      var iter = 0
       while (!converged && iter < maxIter) {
         val nbrMin = edges
           .join(labels.select(col("id").as("b"), col("lbl").as("__nlbl")), "b")
@@ -856,26 +851,24 @@ private[api] trait DedupApi { self: GraftOps.type =>
                 col("__old"))
           }
         // labels are monotone non-increasing, so "no label decreased" is
-        // an exact fixpoint test — harvested from the checkpoint job
-        // itself (r22, the linkRank observe idiom): sum(when(decreased))
-        // is NULL iff no label decreased, so the former per-round count
-        // job over the checkpoint disappears.
-        val decObs = org.apache.spark.sql.Observation()
-        val next = roundCheckpoint(stepped.observe(decObs,
-          sum(when(col("lbl") < col("__old"), 1L)).as("__dec")))
-        converged = decObs.getAsJava.get("__dec") == null
-        labels = next.select(col("id"), col("lbl"))
+        // an exact fixpoint test, observed on the round's own checkpoint
+        // job: sum(when(decreased)) is NULL iff no label decreased
+        val (next, dec) =
+          cp(stepped, sum(when(col("lbl") < col("__old"), 1L)).as("__dec"))
+        converged = dec.isNullAt(0)
+        cp.release(labels)
+        labels = priced(next).select(col("id"), col("lbl"))
         iter += 1
       }
+      if (!converged)
+        throw new IllegalStateException(
+          s"dedupClusters did not converge in $maxIter rounds — component " +
+            "diameter exceeds the pointer-jumping bound; raise maxIter")
+      labels.select(col("lbl").as("survivor"), col("id").as("member"))
     } finally {
       halfP.unpersist()
       edges.unpersist()
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"dedupClusters did not converge in $maxIter rounds — component " +
-          "diameter exceeds the pointer-jumping bound; raise maxIter")
-    labels.select(col("lbl").as("survivor"), col("id").as("member"))
   }
 
   /** The apply step of near-dup dedup: given the corpus and candidate
@@ -949,12 +942,11 @@ private[api] trait DedupApi { self: GraftOps.type =>
     * and the ranks⋈dangling semi-join are both gone — each iteration
     * is one narrow contribution projection feeding the per-edge join +
     * one hash agg on dst + one left join back to the node state. Ranks
-    * are eagerly `localCheckpoint`ed per round (the [[dedupClusters]]
-    * idiom: truncate lineage so the next join doesn't re-execute the
-    * whole chain), and the NEXT round's dangling mass is harvested
-    * from that same materialization job via `Dataset.observe` — a
-    * model-sized scalar metric, not a separate aggregate job (nor a
-    * corpus collect). At cluster scale, bucket the edge list by src
+    * are checkpointed per round in a [[Checkpoints]] scope (truncate
+    * lineage so the next join doesn't re-execute the whole chain), and
+    * the NEXT round's dangling mass is observed on that same checkpoint
+    * job — a model-sized scalar metric, not a separate aggregate job
+    * (nor a corpus collect). At cluster scale, bucket the edge list by src
     * once and every iteration's big join co-locates; `iterations` is
     * bounded because authority signals saturate in single digits. */
   def linkRank(edgeList: DataFrame, src: Column, dst: Column,
@@ -973,77 +965,52 @@ private[api] trait DedupApi { self: GraftOps.type =>
       .select(src.cast("long").as("src"), dst.cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .persist()
-    // every cached intermediate is released even if an iteration throws
-    // (review r15: the loop used to strand up to `iterations` superseded
-    // rank tables + the edge list in the block manager); the RETURNED
-    // ranks is the one survivor — its lineage is its own checkpoint, so
-    // freeing nodes/outdeg/dangling cannot invalidate it
-    var toFree: List[DataFrame] = Nil
-    var inFlight: DataFrame = null
-    var done = false
-    try {
+    // every intermediate is released even if an iteration throws (review
+    // r15: the loop used to strand up to `iterations` superseded rank
+    // tables + the edge list in the block manager); the RETURNED ranks
+    // is the one survivor — its lineage is its own checkpoint, so
+    // freeing the node state and `e` cannot invalidate it
+    try Checkpoints.scoped { cp =>
       // one checkpoint for the whole iteration-invariant node state:
       // node ∪-set with its out-degree attached, __deg NULL ⇔ dangling
       // (the dangling SET is iteration-invariant — who has out-edges
       // never changes; only its rank mass moves)
-      val state = e.select(col("src").as("node"))
+      val (state, nRow) = cp(e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
         .join(e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("__deg")), Seq("node"), "left_outer")
-        .localCheckpoint(true)
-      toFree ::= state
-      val n = state.count()
+          .agg(count(lit(1)).as("__deg")), Seq("node"), "left_outer"),
+        count(lit(1)))
+      val n = nRow.getLong(0)
       if (n == 0)
         throw new IllegalArgumentException(
           "linkRank needs at least one edge with non-null endpoints")
       val base = ((totalMass / n) * (1000000L - dampingPpm)) / 1000000L
       // each rank materialization doubles as the dangling-mass
-      // aggregate for the NEXT round: the observe metric is computed
+      // aggregate for the NEXT round: the observed metric is computed
       // while the checkpoint job streams the rows — exact (Long sum,
       // order-independent), no extra job, no join
-      def checkpointWithDangle(df: DataFrame)
-          : (DataFrame, org.apache.spark.sql.Observation) = {
-        val obs = org.apache.spark.sql.Observation()
-        (df.observe(obs,
-            sum(when(col("__deg").isNull, col("rank"))).as("__dangle"))
-          .localCheckpoint(true), obs)
-      }
-      def dangleOf(obs: org.apache.spark.sql.Observation): Long =
-        Option(obs.getAsJava.get("__dangle"))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-      var (ranks, obs) = checkpointWithDangle(
-        state.withColumn("rank", lit(totalMass / n)))
-      inFlight = ranks
+      val dangle = sum(when(col("__deg").isNull, col("rank"))).as("__dangle")
+      var (ranks, d) = cp(state.withColumn("rank", lit(totalMass / n)), dangle)
       for (_ <- 1 to iterations) {
-        val dangleShare = dangleOf(obs) / n
+        val dangleShare = (if (d.isNullAt(0)) 0L else d.getLong(0)) / n
         val inflow = ranks.filter(col("__deg").isNotNull)
           .select(col("node"), expr("rank div __deg").as("__contrib"))
           .join(e.select(col("src").as("node"), col("dst")), Seq("node"))
           .groupBy(col("dst").as("node")).agg(sum("__contrib").as("__in"))
         // `div`, not `/`: Spark's Divide on bigints returns double — the
         // truncating integral division is the portability contract here
-        val prev = ranks
-        val (next, nextObs) = checkpointWithDangle(
+        val (next, nextD) = cp(
           state.join(inflow, Seq("node"), "left_outer")
             .select(col("node"), col("__deg"),
               expr(s"${base}L + (${dampingPpm}L * (coalesce(__in, 0L) + " +
-                s"${dangleShare}L)) div 1000000").as("rank")))
-        ranks = next // eager — prev's blocks are now dead
-        obs = nextObs
-        inFlight = ranks
-        prev.unpersist()
+                s"${dangleShare}L)) div 1000000").as("rank")),
+          dangle)
+        cp.release(ranks) // eager — its blocks are now dead
+        ranks = next
+        d = nextD
       }
-      done = true
-      // narrow projection over the checkpointed survivor — freeing
-      // state/e below cannot invalidate it
       ranks.select(col("node"), col("rank"))
-    } finally {
-      e.unpersist()
-      toFree.foreach(_.unpersist())
-      // on the throw path the in-flight rank table is stranded too;
-      // on success it IS the returned survivor and must stay cached
-      if (!done && inFlight != null) inFlight.unpersist()
-    }
+    } finally e.unpersist()
   }
 
   /** Per-vertex triangle counts over an undirected graph — the local
@@ -1135,9 +1102,10 @@ private[api] trait DedupApi { self: GraftOps.type =>
     * semi-joins, all keyed by vertex — the edge table only SHRINKS, and
     * rounds are O(peel depth), not O(|V|) (each round deletes every
     * currently-underdegree vertex at once). Round results are
-    * localCheckpoint'd (the [[linkRank]] lineage hygiene: an
-    * un-truncated loop would replay every prior round per action), and
-    * every superseded checkpoint is freed even on failure. */
+    * checkpointed in a [[Checkpoints]] scope (an un-truncated loop would
+    * replay every prior round per action), each round's edge count is
+    * observed on its own checkpoint job, and every superseded checkpoint
+    * is freed, on failure too. */
   def kCore(edgeList: DataFrame, src: Column, dst: Column, k: Int,
       maxRounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1; got $k")
@@ -1147,33 +1115,31 @@ private[api] trait DedupApi { self: GraftOps.type =>
       .select(src.cast("long").as("__s"), dst.cast("long").as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull &&
         col("__s") =!= col("__d"))
-    var toFree: List[DataFrame] = Nil
-    var und: DataFrame = raw
-      .select(least(col("__s"), col("__d")).as("a"),
-        greatest(col("__s"), col("__d")).as("b"))
-      .distinct().localCheckpoint(true)
-    try {
-      var cnt = und.count()
+    Checkpoints.scoped { cp =>
+      var (und, c) = cp(raw
+        .select(least(col("__s"), col("__d")).as("a"),
+          greatest(col("__s"), col("__d")).as("b"))
+        .distinct(), count(lit(1)))
+      var cnt = c.getLong(0)
       var stable = cnt == 0L
       var round = 0
       while (!stable && round < maxRounds) {
         val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
           .groupBy(col("node")).agg(count(lit(1)).as("degree"))
         val keep = deg.filter(col("degree") >= k).select(col("node"))
-        val pruned = und
+        val (pruned, c2) = cp(und
           .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
-          .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-          .localCheckpoint(true)
-        val c2 = pruned.count()
-        toFree ::= und
+          .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"),
+          count(lit(1)))
+        cp.release(und)
         und = pruned
-        stable = c2 == cnt
-        cnt = c2
+        stable = c2.getLong(0) == cnt
+        cnt = c2.getLong(0)
         round += 1
       }
       und.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("degree"))
-    } finally toFree.foreach(_.unpersist())
+    }
   }
 
   /** SEMANTIC near-dup candidate pairs — embedding-CLUSTER routing:

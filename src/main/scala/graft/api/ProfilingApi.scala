@@ -897,10 +897,12 @@ private[api] trait ProfilingApi { self: GraftOps.type =>
       .filter(col("group").isNotNull && col("__v").isNotNull &&
         col("__w").isNotNull && col("__w") > 0)
     // pass 1: per-group range + total mass (map-side combined, O(G)
-    // rows). localCheckpoint (the linkRank/bpeFit lineage hygiene)
-    // materializes the tiny frame ONCE — without it every broadcast of
-    // stats/cand below re-runs its full corpus-scan lineage (measured:
-    // the un-checkpointed plan ran the lineitem scan five times).
+    // rows). localCheckpoint materializes the tiny frame ONCE — without
+    // it every broadcast of stats/cand below re-runs its full
+    // corpus-scan lineage (measured: the un-checkpointed plan ran the
+    // lineitem scan five times). It anchors the lazy result and takes
+    // no scalars, so it stays outside a `Checkpoints` scope: the
+    // ContextCleaner frees its blocks once the result is dropped.
     val stats = base.groupBy(col("group")).agg(
         min(col("__v")).as("__vmin"), max(col("__v")).as("__vmax"),
         sum(col("__w")).cast("decimal(38,0)").as("__tw"))

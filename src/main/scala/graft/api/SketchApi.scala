@@ -345,62 +345,43 @@ private[api] trait SketchApi { self: GraftOps.type =>
     * vocabulary; the k-centroid idiom). Each iteration is one
     * map-side-combined pair agg + a 1-ROW argmax collect (a trained
     * constant, NOT a corpus collect) + a narrow per-word fold, with
-    * the evolving symbol table localCheckpoint'd per round (the
-    * linkRank lineage hygiene — without it iteration k recomputes all
-    * k−1 prior folds). Eager like every trainer. */
+    * the evolving symbol table checkpointed per round in a
+    * [[Checkpoints]] scope (without it iteration k recomputes all k−1
+    * prior folds). Eager like every trainer. */
   def bpeFit(df: DataFrame, toks: Column, nMerges: Int): DataFrame = {
     require(nMerges >= 1 && nMerges <= 256,
       s"nMerges must be in [1, 256]; got $nMerges")
     val spark = df.sparkSession
     import spark.implicits._
     // r22 (guide §5 — one pass per merge round instead of two): each
-    // round's most-frequent-pair argmax is harvested from the SAME job
-    // that materializes the round's symbol table, via `Dataset.observe`
-    // of the [[graft.functions.TopAdjacentPair]] aggregate (the former
+    // round's most-frequent-pair argmax is observed on the SAME job
+    // that checkpoints the round's symbol table, via the
+    // [[graft.functions.TopAdjacentPair]] aggregate (the former
     // explode + groupBy + orderBy-limit-1 collect, bit-identical —
     // integer counts, the same UTF-8-binary tie order).
-    def checkpointWithTop(df0: DataFrame)
-        : (DataFrame, org.apache.spark.sql.Observation) = {
-      val obs = org.apache.spark.sql.Observation()
-      (df0.observe(obs, graft.functions.TopAdjacentPair.asColumn(
-          col("__f"), col("__syms")).as("__top"))
-        .localCheckpoint(true), obs)
-    }
-    def topOf(obs: org.apache.spark.sql.Observation)
-        : Option[(String, String, Long)] =
-      Option(obs.getAsJava.get("__top")).map { v =>
-        val r = v.asInstanceOf[org.apache.spark.sql.Row]
-        (r.getString(0), r.getString(1), r.getLong(2))
-      }
-    var (syms, obs) = checkpointWithTop(df.select(explode(toks).as("__w"))
-      .filter(col("__w").isNotNull)
-      .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
-      .select(col("__f"), charSyms(col("__w")).as("__syms")))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var done = false
-    try {
-      var rank = 1
-      var exhausted = false
-      while (rank <= nMerges && !exhausted) {
-        topOf(obs) match {
-          case None => exhausted = true
-          case Some((x, y, n)) =>
-            merges += ((rank, x, y, n))
-            val prev = syms
-            val (next, nextObs) = checkpointWithTop(prev.select(col("__f"),
-              applyMerge(col("__syms"), x, y).as("__syms")))
-            syms = next
-            obs = nextObs
-            prev.unpersist()
-            rank += 1
+    val top = graft.functions.TopAdjacentPair.asColumn(
+      col("__f"), col("__syms")).as("__top")
+    Checkpoints.scoped { cp =>
+      var (syms, t) = cp(df.select(explode(toks).as("__w"))
+        .filter(col("__w").isNotNull)
+        .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
+        .select(col("__f"), charSyms(col("__w")).as("__syms")), top)
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+      // NULL top pair: no adjacent pairs left — every word fully merged
+      while (merges.length < nMerges && !t.isNullAt(0)) {
+        val best = t.getStruct(0)
+        val (x, y) = (best.getString(0), best.getString(1))
+        merges += ((merges.length + 1, x, y, best.getLong(2)))
+        if (merges.length < nMerges) { // the last merge's table is unused
+          val (next, nextT) = cp(syms.select(col("__f"),
+            applyMerge(col("__syms"), x, y).as("__syms")), top)
+          cp.release(syms)
+          syms = next
+          t = nextT
         }
       }
-      done = true
-    } finally {
-      syms.unpersist()
-      if (!done) () // collected merges are driver state; nothing cached leaks
+      merges.toSeq.toDF("rank", "left", "right", "n")
     }
-    merges.toSeq.toDF("rank", "left", "right", "n")
   }
 
   /** The encode half of BPE: adds `pieces` (array<array<string>> — one
@@ -469,7 +450,7 @@ private[api] trait SketchApi { self: GraftOps.type =>
     * scale by contract (the bpeFit posture) — per round one narrow
     * codegen'd segmentation over ≤ topWords rows, one tiny agg, one
     * model-sized collect (the trained constants, never the corpus),
-    * localCheckpoint'd per round (the linkRank lineage hygiene).
+    * checkpointed per round in a [[Checkpoints]] scope.
     * Loud failure when total/mass would overflow the ladder's 2³³
     * contract or vocabSize can't hold the single-codepoint floor. */
   def unigramFit(df: DataFrame, toks: Column, vocabSize: Int,
@@ -480,13 +461,12 @@ private[api] trait SketchApi { self: GraftOps.type =>
     require(maxPieceLen >= 2, s"maxPieceLen must be >= 2; got $maxPieceLen")
     require(topWords >= 1, s"topWords must be >= 1; got $topWords")
     require(maxWordLen >= 1, s"maxWordLen must be >= 1; got $maxWordLen")
-    val words = df.select(explode(toks).as("__w"))
-      .filter(col("__w").isNotNull && col("__w") =!= "" &&
-        length(col("__w")) <= maxWordLen)
-      .groupBy(col("__w")).agg(count(lit(1)).as("__n"))
-      .orderBy(desc("__n"), col("__w")).limit(topWords)
-      .localCheckpoint(true)
-    try {
+    Checkpoints.scoped { cp =>
+      val (words, _) = cp(df.select(explode(toks).as("__w"))
+        .filter(col("__w").isNotNull && col("__w") =!= "" &&
+          length(col("__w")) <= maxWordLen)
+        .groupBy(col("__w")).agg(count(lit(1)).as("__n"))
+        .orderBy(desc("__n"), col("__w")).limit(topWords))
       // seed masses: every (position, length ≤ maxPieceLen) substring,
       // with multiplicity — word-table scale, the HOF stays off the
       // corpus
@@ -498,77 +478,60 @@ private[api] trait SketchApi { self: GraftOps.type =>
           .as("piece"))
       // r22 (guide §5 — fewer jobs per fit at equal hashes): the
       // single-codepoint count and each vocabulary's (Σ mass, min mass)
-      // scalars are harvested from the SAME materialization job that
-      // checkpoints the table (`Dataset.observe` — exact Long
-      // aggregates, order-independent), deleting one count job and one
-      // agg-head job per EM round (+ the final one). The tiny `singles`
-      // table KEEPS its own checkpoint: replacing it with a lazy filter
-      // over mass0's cached blocks was measured SLOWER (q148 plantax
-      // 1.8 → 2.7 s) — the LogicalRDD filter carries no usable size
-      // estimate, so the per-round survivor join loses its broadcast.
-      val mass0Obs = org.apache.spark.sql.Observation()
-      val mass0 = sub.groupBy(col("piece")).agg(sum(col("__n")).as("mass"))
-        .observe(mass0Obs,
-          sum(when(length(col("piece")) === 1, 1L)).as("__nSingles"))
-        .localCheckpoint(true)
-      val singles = mass0.filter(length(col("piece")) === 1)
-        .select(col("piece")).localCheckpoint(true)
-      try {
-        val nSingles = Option(mass0Obs.getAsJava.get("__nSingles"))
-          .map(_.asInstanceOf[Long].toInt).getOrElse(0)
-        require(nSingles >= 1, "unigramFit: no training words survived the filters")
-        require(vocabSize > nSingles,
-          s"vocabSize $vocabSize must exceed the $nSingles single-codepoint " +
-            "pieces (the coverage floor)")
-        def prune(masses: DataFrame): DataFrame = {
-          val s = singles.join(masses, Seq("piece"), "left")
-            .select(col("piece"), coalesce(col("mass"), lit(1L)).as("mass"))
-          val m = masses.filter(length(col("piece")) > 1)
-            .orderBy(desc("mass"), col("piece"))
-            .limit(vocabSize - nSingles)
-          s.unionByName(m)
-        }
-        def checkpointWithTotals(df: DataFrame)
-            : (DataFrame, org.apache.spark.sql.Observation) = {
-          val obs = org.apache.spark.sql.Observation()
-          (df.observe(obs, sum(col("mass")).as("__t"),
-            min(col("mass")).as("__m")).localCheckpoint(true), obs)
-        }
-        def score(vocab: DataFrame,
-            obs: org.apache.spark.sql.Observation): DataFrame = {
-          val m = obs.getAsJava
-          val total = m.get("__t").asInstanceOf[Long]
-          val minMass = m.get("__m").asInstanceOf[Long]
-          require(total / math.max(minMass, 1L) < (1L << 32),
-            s"unigramFit: total mass $total over min piece mass " +
-              s"$minMass exceeds the log2 ladder's 2^32 ratio " +
-              "contract — raise topWords granularity or shard")
-          log2Q10(vocab.withColumn("__tot", lit(total)), "mass", "__tot",
-            "sur_q10")
-        }
-        var (vocab, vObs) = checkpointWithTotals(prune(mass0))
-        for (_ <- 1 to iters) {
-          val model = score(vocab, vObs).select(col("piece"), col("sur_q10"))
-            .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-          val usage = words.select(col("__n"), explode(element_at(
-              graft.functions.UnigramSegment.asColumn(
-                array(col("__w")), model, maxPieceLen), 1)).as("piece"))
-            .groupBy(col("piece")).agg(sum(col("__n")).as("mass"))
-          val prev = vocab
-          val (nextVocab, nextObs) = checkpointWithTotals(prune(usage))
-          vocab = nextVocab
-          vObs = nextObs
-          prev.unpersist()
-        }
-        val out = score(vocab, vObs)
-          .withColumn("rank", row_number().over(
-            Window.orderBy(desc("mass"), col("piece"))).cast("long"))
-          .select(col("piece"), col("mass"), col("sur_q10"), col("rank"))
-          .localCheckpoint(true)
-        vocab.unpersist()
-        out
-      } finally { mass0.unpersist(); singles.unpersist() }
-    } finally words.unpersist()
+      // scalars are observed on the SAME job that checkpoints the table
+      // (exact Long aggregates, order-independent), deleting one count
+      // job and one agg-head job per EM round (+ the final one). The
+      // tiny `singles` table KEEPS its own checkpoint: replacing it with
+      // a lazy filter over mass0's cached blocks was measured SLOWER
+      // (q148 plantax 1.8 → 2.7 s) — the LogicalRDD filter carries no
+      // usable size estimate, so the per-round survivor join loses its
+      // broadcast.
+      val (mass0, m0) = cp(
+        sub.groupBy(col("piece")).agg(sum(col("__n")).as("mass")),
+        sum(when(length(col("piece")) === 1, 1L)).as("__nSingles"))
+      val (singles, _) =
+        cp(mass0.filter(length(col("piece")) === 1).select(col("piece")))
+      val nSingles = if (m0.isNullAt(0)) 0 else m0.getLong(0).toInt
+      require(nSingles >= 1, "unigramFit: no training words survived the filters")
+      require(vocabSize > nSingles,
+        s"vocabSize $vocabSize must exceed the $nSingles single-codepoint " +
+          "pieces (the coverage floor)")
+      def prune(masses: DataFrame): DataFrame = {
+        val s = singles.join(masses, Seq("piece"), "left")
+          .select(col("piece"), coalesce(col("mass"), lit(1L)).as("mass"))
+        val m = masses.filter(length(col("piece")) > 1)
+          .orderBy(desc("mass"), col("piece"))
+          .limit(vocabSize - nSingles)
+        s.unionByName(m)
+      }
+      val totals = Seq(sum(col("mass")).as("__t"), min(col("mass")).as("__m"))
+      def score(vocab: DataFrame, t: org.apache.spark.sql.Row): DataFrame = {
+        val (total, minMass) = (t.getLong(0), t.getLong(1))
+        require(total / math.max(minMass, 1L) < (1L << 32),
+          s"unigramFit: total mass $total over min piece mass " +
+            s"$minMass exceeds the log2 ladder's 2^32 ratio " +
+            "contract — raise topWords granularity or shard")
+        log2Q10(vocab.withColumn("__tot", lit(total)), "mass", "__tot",
+          "sur_q10")
+      }
+      var (vocab, vt) = cp(prune(mass0), totals: _*)
+      for (_ <- 1 to iters) {
+        val model = score(vocab, vt).select(col("piece"), col("sur_q10"))
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        val usage = words.select(col("__n"), explode(element_at(
+            graft.functions.UnigramSegment.asColumn(
+              array(col("__w")), model, maxPieceLen), 1)).as("piece"))
+          .groupBy(col("piece")).agg(sum(col("__n")).as("mass"))
+        val (next, nextT) = cp(prune(usage), totals: _*)
+        cp.release(vocab)
+        vocab = next
+        vt = nextT
+      }
+      cp(score(vocab, vt)
+        .withColumn("rank", row_number().over(
+          Window.orderBy(desc("mass"), col("piece"))).cast("long"))
+        .select(col("piece"), col("mass"), col("sur_q10"), col("rank")))._1
+    }
   }
 
   /** The encode half of the unigram tokenizer: adds `out`

@@ -461,6 +461,11 @@ private[api] trait TextApi { self: GraftOps.type =>
     val qb = qt.select(col("__qid"), col("__t").as("__tb"))
     val qpairs = qa.join(qb, Seq("__qid"))
       .filter(col("__ta") < col("__tb"))
+    // This head() is a second evaluation of qt: on a non-deterministic
+    // queries plan the count may disagree with the qpairs actually
+    // joined. The harm is bounded: nPairs only sizes the broadcast
+    // hint, which never changes rows — a wrong count can pin an
+    // oversized broadcast or skip a useful one, nothing more.
     val nPairsRow = qt.groupBy(col("__qid")).agg(count(lit(1)).as("__nt"))
       .agg(sum(expr("__nt * (__nt - 1) div 2"))).head()
     val nPairs = if (nPairsRow.isNullAt(0)) 0L else nPairsRow.getLong(0)

@@ -2553,6 +2553,32 @@ class GraftOpsSpec extends AnyFunSuite with SharedSpark {
       s"fast-path result must be parallelized, not plan-embedded:\n$logical")
   }
 
+  /** The persistent RDDs that `fit` leaves behind, split into those its
+    * returned plan does not reference (stranded: a superseded round, a
+    * released intermediate) and those it does (the result's own
+    * checkpoint). `Dataset.unpersist()` does not free a checkpoint, so
+    * the CacheManager alone cannot see these. */
+  private def persistedBy(fit: => org.apache.spark.sql.DataFrame)
+      : (Set[Int], Set[Int]) = {
+    val before = persistentIds
+    val out = fit
+    val left = persistentIds -- before
+    val refs = org.apache.spark.sql.graftbridge.CheckpointBridge
+      .leafRdds(out).map(_.id).toSet
+    (left -- refs, left & refs)
+  }
+
+  /** The persistent RDDs a throwing `fit` leaves behind. */
+  private def persistedByThrow[T <: AnyRef](fit: => Any)(
+      implicit ct: scala.reflect.ClassTag[T]): Set[Int] = {
+    val before = persistentIds
+    intercept[T](fit)
+    persistentIds -- before
+  }
+
+  private def persistentIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("dedupClusters/applyDedup leave no catalog-level cache behind") {
     import spark.implicits._
     spark.catalog.clearCache()
@@ -2563,13 +2589,55 @@ class GraftOpsSpec extends AnyFunSuite with SharedSpark {
     assert(kept == Set(1L, 3L, 9L))
     assert(spark.sharedState.cacheManager.isEmpty,
       "library contract: no persisted frame outlives the call")
-    // the throw path must also drop its caches
-    val deep = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalStateException](
-      GraftOps.dedupClusters(deep, col("a"), col("b"), maxIter = 1,
+    // the distributed rounds keep only the checkpoint the result reads
+    val chain = (0L until 9L).map(i => (i, i + 1)).toDF("a", "b")
+    val (stranded, survivors) = persistedBy(
+      GraftOps.dedupClusters(chain, col("a"), col("b"), driverLimit = 0))
+    assert(stranded.isEmpty && survivors.size <= 1,
+      s"rounds left behind: stranded $stranded, survivors $survivors")
+    // the throw path must also drop its caches and every round
+    val left = persistedByThrow[IllegalStateException](
+      GraftOps.dedupClusters(chain, col("a"), col("b"), maxIter = 1,
         driverLimit = 0))
     assert(spark.sharedState.cacheManager.isEmpty,
       "non-convergence throw must unpersist its rounds")
+    assert(left.isEmpty, s"non-convergence throw left RDDs $left")
+  }
+
+  test("iterative fits keep only the checkpoints their result references") {
+    import spark.implicits._
+    val graph = ((for (a <- 1L to 4L; b <- (a + 1) to 4L) yield (a, b)) ++
+      Seq((4L, 10L), (10L, 11L), (11L, 12L), (12L, 13L))).toDF("s", "t")
+    val words = Seq(Seq("low", "low", "lower"), Seq("newest", "widest"))
+      .toDF("toks")
+    val text = Seq("aa ab aa ba", "ab ab aa cc", "ba aa ab dd").toDF("text")
+    val labeled = (0 until 40).map(i =>
+      (Seq((i % 7).toFloat, (i % 5).toFloat), i % 3 == 0)).toDF("v", "y")
+    val fits = Seq[(String, () => org.apache.spark.sql.DataFrame, Int)](
+      ("linkRank", () => GraftOps.linkRank(graph, col("s"), col("t"),
+        iterations = 5), 1),
+      ("kCore", () => GraftOps.kCore(graph, col("s"), col("t"), k = 2,
+        maxRounds = 10), 1),
+      ("bpeFit", () => GraftOps.bpeFit(words, col("toks"), nMerges = 8), 0),
+      ("unigramFit", () => GraftOps.unigramFit(text,
+        graft.functions.Text.tokens(col("text")), vocabSize = 8, iters = 2,
+        maxPieceLen = 2, topWords = 10, maxWordLen = 5), 1),
+      ("logisticFit", () => GraftOps.logisticFit(labeled, col("v"), col("y"),
+        2, iters = 3, lambdaPpm = 1000L), 0))
+    val leaks = fits.flatMap { case (name, fit, maxSurvivors) =>
+      val (stranded, survivors) = persistedBy(fit())
+      if (stranded.isEmpty && survivors.size <= maxSurvivors) None
+      else Some(s"$name: stranded $stranded, survivors $survivors")
+    }
+    // the vocabSize guard fires after the word, mass and singles
+    // checkpoints exist: the throw path must free all of them
+    val left = persistedByThrow[IllegalArgumentException](
+      GraftOps.unigramFit(text, graft.functions.Text.tokens(col("text")),
+        vocabSize = 2, iters = 1, maxPieceLen = 2))
+    val throwLeaks =
+      if (left.isEmpty) Nil else Seq(s"unigramFit vocabSize guard: $left")
+    assert(leaks.isEmpty && throwLeaks.isEmpty,
+      (leaks ++ throwLeaks).mkString("; "))
   }
 
   test("embeddingNearDup LSH path reports null vectors readably") {
