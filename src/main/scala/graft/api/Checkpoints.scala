@@ -6,9 +6,12 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
-/** The checkpoint scope of an iterative fit: checkpoint each round
-  * eagerly, read its scalars from that same job, and free what the
-  * result does not need.
+/** The checkpoint scope of any operator that reads a scalar from a
+  * frame it later joins — an iterative fit's rounds, or a retrieval
+  * operator's query terms: checkpoint the frame eagerly, read its
+  * scalars from that same job, and free what the result does not need.
+  * The plan then joins exactly the rows the scalars were computed from,
+  * even when the source is non-deterministic.
   *
   * {{{
   * Checkpoints.scoped { cp =>
@@ -22,7 +25,8 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge
   * }}}
   *
   * `cp(df, metrics*)` truncates lineage (an un-truncated loop replays
-  * every prior round per action and its plan grows per round) and
+  * every prior round per action and its plan grows per round; a
+  * re-read source may differ from the one the scalars saw) and
   * returns the metric aggregates as a `Row`, computed through an
   * `Observation` by the checkpoint job itself — no separate `count()` or
   * `agg().head()` job. When the body returns, every checkpoint the

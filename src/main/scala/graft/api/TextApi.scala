@@ -259,9 +259,9 @@ private[api] trait TextApi { self: GraftOps.type =>
     * harder, the documented contract). k1/b arrive as ppm integers and
     * become doubles via one stated division each; every remaining step
     * is a fixed-order IEEE chain, and the per-(query, doc) term sum is
-    * a SORTED left fold (collect terms, sort by term, fold) — never a
-    * float SUM aggregate, whose addend order is engine-dependent. q112
-    * hash-gates rank AND micros-quantized score end to end.
+    * a left fold in term order — never a float SUM aggregate, whose
+    * addend order is engine-dependent. q112 hash-gates rank AND
+    * micros-quantized score end to end.
     *
     * Semantics: tf = term count in doc, dl = doc token count, both over
     * non-empty tokens; N and total-token count over docs with ≥ 1
@@ -273,7 +273,8 @@ private[api] trait TextApi { self: GraftOps.type =>
     * the corpus contribute nothing; a query with no surviving terms
     * emits no rows. Ties break (score desc, doc_id asc), exact.
     *
-    * Plan: posting list tf/dl/df aggregates (map-side combined, keyed
+    * Plan: query terms are one [[queryTerms]] snapshot (one eager job);
+    * posting list tf/dl/df aggregates (map-side combined, keyed
     * by (doc, term) / doc / term — the tfidfTopK shapes); corpus stats
     * are ONE 1-row aggregate crossJoin-broadcast back (no driver
     * collect); candidates = query-terms ⋈ posting on term — the
@@ -315,75 +316,73 @@ private[api] trait TextApi { self: GraftOps.type =>
     // df from the SAME shuffle files (one corpus pass, guide §2.4).
     val dfreq = tf.filter(col("__tf") >= 1)
       .groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-    val qterms = queries
+    Checkpoints.scoped { cp =>
+      val (qtr, rMax, _) = queryTerms(cp, queries, qid, qtext)
+      val cand = qtr.join(tf, "__t").join(dfreq, "__t")
+        .join(dl, "__doc")
+        .crossJoin(broadcast(st))
+        .withColumn("__x",
+          (col("__dl") * col("__n")).cast("double") / col("__tot").cast("double"))
+        .withColumn("__idf",
+          ((col("__n") - col("__df")) * 2 + 1).cast("double") /
+            (col("__df") * 2 + 1).cast("double"))
+        .withColumn("__tfp",
+          (col("__tf") * lit(k1 + 1.0)) /
+            (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__x"))))
+        .withColumn("__c", col("__idf") * col("__tfp"))
+      val w = Window.partitionBy(col("__q")).orderBy(desc("score"), col("__doc"))
+      // Per-(query, doc) term fold, slot form (r21): one codegen'd
+      // conditional SUM per term rank plus a left-to-right
+      // `coalesce(s_r, 0.0)` fold, in place of the sorted-list fold
+      // (ObjectHashAggregate collect_list + sort_array + aggregate —
+      // object mode, no codegen). Bitwise equal to the list fold: each
+      // slot sum covers at most ONE row (term ranks are unique per
+      // query), slot order is term order, every __c is a positive finite
+      // double, and x + 0.0 == x exactly in IEEE — an absent slot is the
+      // identity. rMax is read from the snapshot the candidates join, so
+      // every rank has its slot; a query with > 256 distinct terms falls
+      // back to the list fold rather than exploding the plan.
+      val scored =
+        if (rMax >= 1 && rMax <= 256) {
+          val slots = (1 to rMax).map(r =>
+            sum(when(col("__r") === r, col("__c"))).as(s"__s$r"))
+          cand.groupBy(col("__q"), col("__doc"))
+            .agg(slots.head, slots.tail: _*)
+            .withColumn("score", (1 to rMax).foldLeft(lit(0.0)) {
+              (acc, r) => acc + coalesce(col(s"__s$r"), lit(0.0)) })
+        } else {
+          cand.groupBy(col("__q"), col("__doc"))
+            .agg(sort_array(collect_list(struct(col("__t"), col("__c"))))
+              .as("__lst"))
+            .withColumn("score",
+              expr("aggregate(__lst, 0D, (acc, x) -> acc + x.__c)"))
+        }
+      scored
+        .withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= k)
+        .select(col("__q").as("query_id"), col("__doc").as("doc_id"),
+          col("rank"), col("score"))
+    }
+  }
+
+  /** The retrieval operators' query side, checkpointed once in `cp`:
+    * each query's distinct non-empty terms `(__q, __t)` ranked `__r` in
+    * term order (string asc — sort_array's order, so a rank-order fold
+    * is the sorted fold), plus rMax = max rank and nPairs = Σ(__r − 1) =
+    * Σ_q n_q(n_q − 1)/2, read from the checkpoint job itself. Every later
+    * reference reads that snapshot, so the scalars cannot disagree with
+    * the rows the plan joins, whatever the queries plan does. */
+  private def queryTerms(cp: Checkpoints.Scope, queries: DataFrame,
+      qid: Column, qtext: Column): (DataFrame, Int, Long) = {
+    val terms = queries
       .select(qid.as("__q"), explode(Text.tokens(qtext)).as("__t"))
       .filter(col("__t") =!= "").distinct()
-    // Each query term's rank in ITS query's term order (string asc —
-    // exactly sort_array's struct order over (__t, __c)): the per-
-    // (query, doc) score fold below adds contributions in slot order,
-    // which IS term order, so the IEEE chain is unchanged (r21).
-    val qtr = qterms.withColumn("__r", row_number().over(
-      Window.partitionBy(col("__q")).orderBy(col("__t"))))
-    val cand = qtr.join(tf, "__t").join(dfreq, "__t")
-      .join(dl, "__doc")
-      .crossJoin(broadcast(st))
-      .withColumn("__x",
-        (col("__dl") * col("__n")).cast("double") / col("__tot").cast("double"))
-      .withColumn("__idf",
-        ((col("__n") - col("__df")) * 2 + 1).cast("double") /
-          (col("__df") * 2 + 1).cast("double"))
-      .withColumn("__tfp",
-        (col("__tf") * lit(k1 + 1.0)) /
-          (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__x"))))
-      .withColumn("__c", col("__idf") * col("__tfp"))
-    val w = Window.partitionBy(col("__q")).orderBy(desc("score"), col("__doc"))
-    // Per-(query, doc) term fold, slot form (r21): the sorted-list fold
-    // (ObjectHashAggregate collect_list + sort_array + aggregate — object
-    // mode, no codegen) is replaced by one codegen'd conditional SUM per
-    // term rank plus a left-to-right `coalesce(s_r, 0.0)` fold. Bitwise
-    // equal to the list fold: each slot sum covers at most ONE row (term
-    // ranks are unique per query), slot order is term order, every __c is
-    // a positive finite double, and x + 0.0 == x exactly in IEEE — an
-    // absent slot is the identity. rMax is a query-table statistic
-    // (model-sized driver scalar, the max-scalar-agg contract); an
-    // adversarially wide query table (> 256 distinct terms in one query)
-    // falls back to the list fold rather than exploding the plan.
-    val rMaxRow = qtr.agg(max(col("__r"))).head()
-    val rMax = if (rMaxRow.isNullAt(0)) 0 else rMaxRow.getInt(0)
-    val scored =
-      if (rMax >= 1 && rMax <= 256) {
-        // r22 (ADVICE): a defensive overflow slot makes a stale rMax fail
-        // LOUDLY instead of silently under-scoring — if the queries plan
-        // is non-deterministic (sampling, rand) or its source moved
-        // between the snapshot job and execution, a recomputed __r > rMax
-        // would otherwise match no slot and drop its term contribution.
-        // The fold base evaluates 0.0 whenever the guard slot is NULL
-        // (always, on deterministic input), so the IEEE chain is
-        // unchanged: raise_error fires only on actual overflow.
-        val slots = (1 to rMax).map(r =>
-          sum(when(col("__r") === r, col("__c"))).as(s"__s$r")) :+
-          sum(when(col("__r") > rMax, col("__c"))).as("__sOver")
-        cand.groupBy(col("__q"), col("__doc"))
-          .agg(slots.head, slots.tail: _*)
-          .withColumn("score", (1 to rMax).foldLeft(
-            when(col("__sOver").isNotNull, raise_error(lit(
-              s"bm25TopK: a query term rank exceeded the rMax=$rMax " +
-                "snapshot — the queries plan re-evaluated differently " +
-                "than when the slot layout was built (non-deterministic " +
-                "or moving source)")).cast("double")).otherwise(lit(0.0))) {
-            (acc, r) => acc + coalesce(col(s"__s$r"), lit(0.0)) })
-      } else {
-        cand.groupBy(col("__q"), col("__doc"))
-          .agg(sort_array(collect_list(struct(col("__t"), col("__c"))))
-            .as("__lst"))
-          .withColumn("score",
-            expr("aggregate(__lst, 0D, (acc, x) -> acc + x.__c)"))
-      }
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("__q").as("query_id"), col("__doc").as("doc_id"),
-        col("rank"), col("score"))
+      .withColumn("__r", row_number().over(
+        Window.partitionBy(col("__q")).orderBy(col("__t"))))
+    val (snap, s) = cp(terms,
+      max(col("__r")).as("__rMax"), sum(col("__r") - 1).as("__nPairs"))
+    (snap, if (s.isNullAt(0)) 0 else s.getInt(0),
+      if (s.isNullAt(1)) 0L else s.getLong(1))
   }
 
   /** Proximity-scored retrieval — the relevance signal between bag-of-
@@ -411,84 +410,75 @@ private[api] trait TextApi { self: GraftOps.type =>
     * — kept as the cautionary note). Per-doc collected state is
     * doc-length-bounded — the winnow-window grain, posture-safe; both
     * the pair set and the matched-term set ride ONE collect per doc
-    * (the second consumer reuses the exchange). Query-term pairs
-    * (|q|²-scale, broadcast) then join the doc pair set by (ta, tb);
-    * postings are built only for the query vocabulary (left-semi —
-    * prunes hard when queries are selective, harmless when they are
-    * not). */
+    * (the second consumer reuses the exchange). The vocabulary, the
+    * query-term pairs (|q|²-scale, broadcast, joined to the doc pair set
+    * by (ta, tb)) and the matched-term join all read one [[queryTerms]]
+    * snapshot; postings are built only for the query vocabulary
+    * (left-semi — prunes hard when queries are selective, harmless when
+    * they are not). */
   def proximityTopK(docs: DataFrame, id: Column, text: Column,
       queries: DataFrame, qid: Column, qtext: Column, window: Int,
       k: Int = 5): DataFrame = {
     require(window >= 1, s"window must be >= 1; got $window")
     require(k >= 1, s"k must be >= 1; got $k")
-    val qt = queries.select(qid.as("__qid"),
-        explode(array_distinct(
-          filter(Text.tokens(qtext), t => t =!= lit("")))).as("__t"))
-      .distinct()
-    val vocab = qt.select(col("__t")).distinct()
-    val post = docs.select(id.as("__doc"),
-        posexplode(Text.tokens(text)).as(Seq("__pos", "__t")))
-      .filter(col("__t") =!= "")
-      .join(vocab, Seq("__t"), "left_semi")
-    // windowed co-occurrence per doc: one compiled pass over the
-    // position-sorted postings emits the distinct pair set — O(n·window)
-    // exactly, with the inner scan breaking at the first gap > window.
-    // sort_array orders by the struct's FIRST field (__pos, unique per
-    // doc via posexplode) — fully deterministic.
-    val byDoc = post.groupBy(col("__doc"))
-      .agg(sort_array(collect_list(struct(col("__pos"), col("__t"))))
-        .as("__ps"))
-    // per-doc pairs are distinct by construction and __doc is in the
-    // key, so no corpus-wide distinct is needed (equal to the former
-    // global distinct over (doc, ta, tb))
-    val dpairs = byDoc.select(col("__doc"),
-        explode(graft.functions.WindowTermPairs.asColumn(col("__ps"), window))
-          .as("__p"))
-      .select(col("__doc"), col("__p.__ta").as("__ta"),
-        col("__p.__tb").as("__tb"))
-    // query-term pairs: |q|²-scale — broadcast EXPLICITLY: the compiled
-    // pair generator's explode carries no cardinality estimate, so the
-    // planner would otherwise build the hash relation on the
-    // corpus-derived pair stream (observed at the sf1 degenerate grain:
-    // a BuildLeft flip broadcasting 22M doc pairs, 2.3× the whole
-    // query); the hint pins the build side to the model-sized table.
-    // r22 (ADVICE): the hint is GUARDED by the exact pair count — one
-    // model-sized scalar aggregate over the query-term table (the bm25
-    // rMax idiom) — so an adversarially wide query table past the
-    // threshold keeps the planner's shuffle fallback instead of pinning
-    // an oversized broadcast into driver/executor memory.
-    val qa = qt.select(col("__qid"), col("__t").as("__ta"))
-    val qb = qt.select(col("__qid"), col("__t").as("__tb"))
-    val qpairs = qa.join(qb, Seq("__qid"))
-      .filter(col("__ta") < col("__tb"))
-    // This head() is a second evaluation of qt: on a non-deterministic
-    // queries plan the count may disagree with the qpairs actually
-    // joined. The harm is bounded: nPairs only sizes the broadcast
-    // hint, which never changes rows — a wrong count can pin an
-    // oversized broadcast or skip a useful one, nothing more.
-    val nPairsRow = qt.groupBy(col("__qid")).agg(count(lit(1)).as("__nt"))
-      .agg(sum(expr("__nt * (__nt - 1) div 2"))).head()
-    val nPairs = if (nPairsRow.isNullAt(0)) 0L else nPairsRow.getLong(0)
-    val qpairsPinned =
-      if (nPairs <= 4000000L) broadcast(qpairs) else qpairs
-    val prox = dpairs.join(qpairsPinned, Seq("__ta", "__tb"))
-      .groupBy(col("__qid"), col("__doc"))
-      .agg(count(lit(1)).as("n_prox_pairs"))
-    // matched terms ride the SAME per-doc collect (ReusedExchange), so
-    // the corpus is scanned+tokenized once, not three times
-    val terms = byDoc.select(col("__doc"),
-        explode(array_distinct(col("__ps.__t"))).as("__t"))
-      .join(qt, Seq("__t"))
-      .groupBy(col("__qid"), col("__doc"))
-      .agg(count(lit(1)).as("n_terms"))
-    val wR = Window.partitionBy(col("__qid"))
-      .orderBy(desc("n_prox_pairs"), desc("n_terms"), col("__doc"))
-    terms.join(prox, Seq("__qid", "__doc"), "left")
-      .na.fill(0L, Seq("n_prox_pairs"))
-      .withColumn("rank", row_number().over(wR))
-      .filter(col("rank") <= k)
-      .select(col("__qid").as("query_id"), col("__doc").as("doc_id"),
-        col("rank"), col("n_prox_pairs"), col("n_terms"))
+    Checkpoints.scoped { cp =>
+      val (qt, _, nPairs) = queryTerms(cp, queries, qid, qtext)
+      val vocab = qt.select(col("__t")).distinct()
+      val post = docs.select(id.as("__doc"),
+          posexplode(Text.tokens(text)).as(Seq("__pos", "__t")))
+        .filter(col("__t") =!= "")
+        .join(vocab, Seq("__t"), "left_semi")
+      // windowed co-occurrence per doc: one compiled pass over the
+      // position-sorted postings emits the distinct pair set — O(n·window)
+      // exactly, with the inner scan breaking at the first gap > window.
+      // sort_array orders by the struct's FIRST field (__pos, unique per
+      // doc via posexplode) — fully deterministic.
+      val byDoc = post.groupBy(col("__doc"))
+        .agg(sort_array(collect_list(struct(col("__pos"), col("__t"))))
+          .as("__ps"))
+      // per-doc pairs are distinct by construction and __doc is in the
+      // key, so no corpus-wide distinct is needed (equal to the former
+      // global distinct over (doc, ta, tb))
+      val dpairs = byDoc.select(col("__doc"),
+          explode(graft.functions.WindowTermPairs.asColumn(col("__ps"), window))
+            .as("__p"))
+        .select(col("__doc"), col("__p.__ta").as("__ta"),
+          col("__p.__tb").as("__tb"))
+      // query-term pairs: |q|²-scale — broadcast EXPLICITLY: the compiled
+      // pair generator's explode carries no cardinality estimate, so the
+      // planner would otherwise build the hash relation on the
+      // corpus-derived pair stream (observed at the sf1 degenerate grain:
+      // a BuildLeft flip broadcasting 22M doc pairs, 2.3× the whole
+      // query); the hint pins the build side to the model-sized table.
+      // r22 (ADVICE): the hint is GUARDED by the exact pair count of the
+      // snapshot it joins, so an adversarially wide query table past the
+      // threshold keeps the planner's shuffle fallback instead of pinning
+      // an oversized broadcast into driver/executor memory.
+      val qa = qt.select(col("__q"), col("__t").as("__ta"))
+      val qb = qt.select(col("__q"), col("__t").as("__tb"))
+      val qpairs = qa.join(qb, Seq("__q"))
+        .filter(col("__ta") < col("__tb"))
+      val qpairsPinned =
+        if (nPairs <= 4000000L) broadcast(qpairs) else qpairs
+      val prox = dpairs.join(qpairsPinned, Seq("__ta", "__tb"))
+        .groupBy(col("__q"), col("__doc"))
+        .agg(count(lit(1)).as("n_prox_pairs"))
+      // matched terms ride the SAME per-doc collect (ReusedExchange), so
+      // the corpus is scanned+tokenized once, not three times
+      val terms = byDoc.select(col("__doc"),
+          explode(array_distinct(col("__ps.__t"))).as("__t"))
+        .join(qt, Seq("__t"))
+        .groupBy(col("__q"), col("__doc"))
+        .agg(count(lit(1)).as("n_terms"))
+      val wR = Window.partitionBy(col("__q"))
+        .orderBy(desc("n_prox_pairs"), desc("n_terms"), col("__doc"))
+      terms.join(prox, Seq("__q", "__doc"), "left")
+        .na.fill(0L, Seq("n_prox_pairs"))
+        .withColumn("rank", row_number().over(wR))
+        .filter(col("rank") <= k)
+        .select(col("__q").as("query_id"), col("__doc").as("doc_id"),
+          col("rank"), col("n_prox_pairs"), col("n_terms"))
+    }
   }
 
   /** Rank-biased overlap (Webber–Moffat–Zobel RBO, truncated): how

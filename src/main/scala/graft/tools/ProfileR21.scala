@@ -1,32 +1,20 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import graft.functions.Text
+import org.apache.spark.sql.SparkSession
 
-/** Round-21 optimization scratch profiler: times sub-DAGs of the
-  * queries under optimization with the noop sink so the expensive
-  * stage can be named instead of guessed (guide §1). Ad-hoc by design;
-  * sections change as the round progresses.
+/** Planning-vs-execution split for named registry queries: per run,
+  * the per-invocation PLANNING time (analysis + optimize + physical —
+  * paid by the bench on every run and by a cluster driver on every
+  * submission) next to the EXECUTION time through the noop sink, for
+  * queries whose bench median exceeds their profiled steady state.
+  * Three runs each (JIT/codegen settle).
   *
-  * Usage: sbt "runMain graft.tools.ProfileR21 <section> [sfDir] [cpus]"
+  * Usage: sbt "runMain graft.tools.ProfileR21 plantax [sfDir] [cpus] [q1,q2,...]"
   */
 object ProfileR21 {
-  private def time(spark: SparkSession, label: String)(df: => DataFrame): Unit = {
-    spark.sparkContext.setJobDescription(label)
-    // one warm + two timed runs; report both (JIT/codegen settle)
-    val ts = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    println(f"[prof] $label%-40s ${ts.map(t => f"$t%.2f").mkString(" ")}")
-    spark.sparkContext.setJobDescription(null)
-  }
-
   def main(args: Array[String]): Unit = {
-    val section = args.headOption.getOrElse("bm25")
+    val section = args.headOption.getOrElse("plantax")
+    require(section == "plantax", s"unknown section $section")
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val cpus = args.lift(2).getOrElse("32")
     val spark = graft.GraftSession.configure(
@@ -34,258 +22,22 @@ object ProfileR21 {
         shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val docs = graft.Tables.load(spark, dir, "documents")
-
-    section match {
-      case "bm25" =>
-        val d = docs
-        val tok = d.filter(col("doc_id").isNotNull)
-          .select(col("doc_id").as("__doc"),
-            explode(Text.tokens(col("text"))).as("__t"))
-          .filter(col("__t") =!= "")
-        val tf = tok.groupBy(col("__doc"), col("__t"))
-          .agg(count(lit(1)).as("__tf"))
-        time(spark, "tokenize only")(tok)
-        time(spark, "tf agg")(tf)
-        val dl = tf.groupBy(col("__doc")).agg(sum("__tf").as("__dl"))
-        time(spark, "tf+dl")(dl)
-        val qs = d.filter(pmod(col("doc_id"), lit(50)) === 0)
-          .select(expr("doc_id div 50").as("__q"),
-            concat_ws(" ", slice(
-              filter(Text.tokens(col("text")), t => t =!= lit("")), 1, 4))
-              .as("qtext"))
-        val qterms = qs.select(col("__q"),
-            explode(Text.tokens(col("qtext"))).as("__t"))
-          .filter(col("__t") =!= "").distinct()
-        time(spark, "qterms")(qterms)
-        val cand = qterms.join(tf, "__t")
-        time(spark, "qterms x tf join")(cand)
-        val full = graft.api.GraftOps.bm25TopK(d, col("doc_id"), col("text"),
-          qs, col("__q"), col("qtext"), k = 5)
-        time(spark, "bm25TopK full")(full)
-        val agg = cand.groupBy(col("__q"), col("__doc"))
-          .agg(count(lit(1)).as("n"))
-        time(spark, "cand count-agg (no collect_list)")(agg)
-
-      case "bm25b" =>
-        val d = docs
-        val qs = d.filter(pmod(col("doc_id"), lit(50)) === 0)
-          .select(expr("doc_id div 50").as("__q"),
-            concat_ws(" ", slice(
-              filter(Text.tokens(col("text")), t => t =!= lit("")), 1, 4))
-              .as("qtext"))
-        // replicate bm25TopK internals to time the tail piecewise
-        val tok = d.filter(col("doc_id").isNotNull)
-          .select(col("doc_id").as("__doc"),
-            explode(Text.tokens(col("text"))).as("__t"))
-          .filter(col("__t") =!= "")
-        val tf = tok.groupBy(col("__doc"), col("__t"))
-          .agg(count(lit(1)).as("__tf"))
-        val dl = tf.groupBy(col("__doc")).agg(sum("__tf").as("__dl"))
-        val st = dl.agg(count(lit(1)).as("__n"), sum("__dl").as("__tot"))
-        val dfreq = tf.filter(col("__tf") >= 1)
-          .groupBy(col("__t")).agg(count(lit(1)).as("__df"))
-        val qterms = qs.select(col("__q"),
-            explode(Text.tokens(col("qtext"))).as("__t"))
-          .filter(col("__t") =!= "").distinct()
-        val k1 = 1.2; val b = 0.75
-        val cand = qterms.join(tf, "__t").join(dfreq, "__t")
-          .join(dl, "__doc")
-          .crossJoin(broadcast(st))
-          .withColumn("__x",
-            (col("__dl") * col("__n")).cast("double") / col("__tot").cast("double"))
-          .withColumn("__idf",
-            ((col("__n") - col("__df")) * 2 + 1).cast("double") /
-              (col("__df") * 2 + 1).cast("double"))
-          .withColumn("__tfp",
-            (col("__tf") * lit(k1 + 1.0)) /
-              (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__x"))))
-          .withColumn("__c", col("__idf") * col("__tfp"))
-        time(spark, "cand full (all stats joins)")(cand)
-        val scored = cand.groupBy(col("__q"), col("__doc"))
-          .agg(sort_array(collect_list(struct(col("__t"), col("__c")))).as("__lst"))
-          .withColumn("score", expr("aggregate(__lst, 0D, (acc, x) -> acc + x.__c)"))
-        time(spark, "+ collect_list score agg")(scored)
-        val w = Window.partitionBy(col("__q")).orderBy(desc("score"), col("__doc"))
-        val ranked = scored
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= 5)
-          .select(col("__q").as("query_id"), col("__doc").as("doc_id"),
-            col("rank"), col("score"))
-        time(spark, "+ window topk")(ranked)
-        time(spark, "+ orderBy (q112 shape)")(
-          ranked.withColumn("score_us", floor(col("score") * lit(1000000.0)))
-            .drop("score").orderBy("query_id", "rank"))
-
-      case "kmv" =>
-        val sh = docs.select(col("source"),
-          explode(Text.shingles(Text.tokens(col("text")), 3)).as("sh"))
-        time(spark, "shingle explode")(sh)
-        val d = sh.select(col("source").cast("string").as("grp"),
-            shiftright(graft.functions.Portable.phash(
-              concat(lit("kmv|"), col("sh"))), 20).as("h"))
-          .filter(col("grp").isNotNull && col("h").isNotNull)
-        time(spark, "hash")(d)
-        val dd = d.distinct()
-        time(spark, "distinct")(dd)
-        val w = Window.partitionBy(col("grp")).orderBy(col("h"))
-        val sk = dd.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= 128).select(col("grp"), col("h"))
-        time(spark, "sketch (window bottom-k)")(sk)
-        val full = graft.api.GraftOps.kmvOverlapReport(sh, col("source"),
-          col("sh"), k = 128)
-        time(spark, "kmvOverlapReport full")(full)
-
-      case "q114" =>
-        val sh = docs.select(col("doc_id").as("__id"),
-          explode(graft.functions.ShingleHashes.asColumn(
-            Text.tokens(col("text")), 3)).as("__sh"))
-        time(spark, "sh explode")(sh)
-        val dfreq = sh.groupBy(col("__sh")).agg(count(lit(1)).as("__df"))
-        time(spark, "dfreq")(dfreq)
-        val ordered = sh.join(dfreq, "__sh")
-          .groupBy(col("__id")).agg(
-            sort_array(collect_list(struct(col("__df"), col("__sh")))).as("__ord"))
-          .select(col("__id"),
-            expr("transform(__ord, x -> x.__sh)").as("__set"))
-          .withColumn("__sz", size(col("__set")))
-          .withColumn("__plen",
-            col("__sz") - ceil(col("__sz") * lit(0.6)).cast("int") + 1)
-        time(spark, "ordered (join+collect)")(ordered)
-        val pre = ordered.select(col("__id"),
-          explode(slice(col("__set"), lit(1), col("__plen"))).as("__sh"))
-        val cands = pre.as("a").join(pre.as("b"),
-            col("a.__sh") === col("b.__sh") && col("a.__id") < col("b.__id"))
-          .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
-          .distinct()
-        time(spark, "cands (prefix self-join)")(cands)
-        val full = graft.api.GraftOps.jaccardJoinPrefix(docs, col("doc_id"),
-          col("text"), 3, 0.6)
-        time(spark, "jaccardJoinPrefix full")(full)
-
-      case "q156" =>
-        val window = 4
-        val qs = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
-          .select(expr("doc_id div 50").as("qid"),
-            concat_ws(" ", slice(
-              filter(Text.tokens(col("text")), t => t =!= lit("")), 1, 4))
-              .as("qtext"))
-        val qt = qs.select(col("qid").as("__qid"),
-            explode(array_distinct(
-              filter(Text.tokens(col("qtext")), t => t =!= lit("")))).as("__t"))
-          .distinct()
-        val vocab = qt.select(col("__t")).distinct()
-        val post = docs.select(col("doc_id").as("__doc"),
-            posexplode(Text.tokens(col("text"))).as(Seq("__pos", "__t")))
-          .filter(col("__t") =!= "")
-          .join(vocab, Seq("__t"), "left_semi")
-        time(spark, "post (vocab-filtered postings)")(post)
-        val a = post.select(col("__doc"), col("__t").as("__t1"),
-            explode(sequence(col("__pos") + 1, col("__pos") + window))
-              .as("__pb"))
-        val dpairs = a.join(
-            post.select(col("__doc"), col("__t").as("__t2"),
-              col("__pos").as("__pb")),
-            Seq("__doc", "__pb"))
-          .filter(col("__t1") =!= col("__t2"))
-          .select(col("__doc"), least(col("__t1"), col("__t2")).as("__ta"),
-            greatest(col("__t1"), col("__t2")).as("__tb"))
-          .distinct()
-        time(spark, "dpairs (join + distinct)")(dpairs)
-        val qa = qt.select(col("__qid"), col("__t").as("__ta"))
-        val qb = qt.select(col("__qid"), col("__t").as("__tb"))
-        val qpairs = qa.join(qb, Seq("__qid"))
-          .filter(col("__ta") < col("__tb"))
-        val prox = dpairs.join(qpairs, Seq("__ta", "__tb"))
-          .groupBy(col("__qid"), col("__doc"))
-          .agg(count(lit(1)).as("n_prox_pairs"))
-        time(spark, "prox (qpairs join + agg)")(prox)
-        val terms = post.select(col("__doc"), col("__t")).distinct()
-          .join(qt, Seq("__t"))
-          .groupBy(col("__qid"), col("__doc"))
-          .agg(count(lit(1)).as("n_terms"))
-        time(spark, "terms")(terms)
-        val full = graft.api.GraftOps.proximityTopK(docs, col("doc_id"),
-          col("text"), qs, col("qid"), col("qtext"), window = 4, k = 5)
-        time(spark, "proximityTopK full")(full)
-
-      case "q156new" =>
-        // sub-DAGs of the COMPILED proximity form (r21 change 6) — run
-        // on the sf1 degenerate fixtures to locate the adversarial-
-        // density regression vs the join form
-        val window = 4
-        val qs = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
-          .select(expr("doc_id div 50").as("qid"),
-            concat_ws(" ", slice(
-              filter(Text.tokens(col("text")), t => t =!= lit("")), 1, 4))
-              .as("qtext"))
-        val qt = qs.select(col("qid").as("__qid"),
-            explode(array_distinct(
-              filter(Text.tokens(col("qtext")), t => t =!= lit("")))).as("__t"))
-          .distinct()
-        val vocab = qt.select(col("__t")).distinct()
-        val post = docs.select(col("doc_id").as("__doc"),
-            posexplode(Text.tokens(col("text"))).as(Seq("__pos", "__t")))
-          .filter(col("__t") =!= "")
-          .join(vocab, Seq("__t"), "left_semi")
-        val byDoc = post.groupBy(col("__doc"))
-          .agg(sort_array(collect_list(struct(col("__pos"), col("__t"))))
-            .as("__ps"))
-        time(spark, "byDoc (collect+sort)")(byDoc)
-        val dpairs = byDoc.select(col("__doc"),
-            explode(graft.functions.WindowTermPairs.asColumn(col("__ps"), window))
-              .as("__p"))
-          .select(col("__doc"), col("__p.__ta").as("__ta"),
-            col("__p.__tb").as("__tb"))
-        time(spark, "dpairs (compiled pairs)")(dpairs)
-        val qa = qt.select(col("__qid"), col("__t").as("__ta"))
-        val qb = qt.select(col("__qid"), col("__t").as("__tb"))
-        val qpairs = qa.join(qb, Seq("__qid"))
-          .filter(col("__ta") < col("__tb"))
-        val prox = dpairs.join(qpairs, Seq("__ta", "__tb"))
-          .groupBy(col("__qid"), col("__doc"))
-          .agg(count(lit(1)).as("n_prox_pairs"))
-        time(spark, "prox (qpairs join + agg)")(prox)
-        val terms = byDoc.select(col("__doc"),
-            explode(array_distinct(col("__ps.__t"))).as("__t"))
-          .join(qt, Seq("__t"))
-          .groupBy(col("__qid"), col("__doc"))
-          .agg(count(lit(1)).as("n_terms"))
-        time(spark, "terms (from byDoc)")(terms)
-        val termsOld = post.select(col("__doc"), col("__t")).distinct()
-          .join(qt, Seq("__t"))
-          .groupBy(col("__qid"), col("__doc"))
-          .agg(count(lit(1)).as("n_terms"))
-        time(spark, "terms (old distinct form)")(termsOld)
-        val full = graft.api.GraftOps.proximityTopK(docs, col("doc_id"),
-          col("text"), qs, col("qid"), col("qtext"), window = 4, k = 5)
-        time(spark, "proximityTopK full (new)")(full)
-
-      case "plantax" =>
-        // split per-invocation PLANNING (analysis+optimize+physical —
-        // paid by the bench on every run and by a cluster driver on
-        // every submission) from EXECUTION, for queries whose bench
-        // median exceeds their profiled steady state. args(3) = query
-        // names, comma-separated.
-        val names = args.lift(3).getOrElse("q114_prefix_jaccard_join")
-          .split(",").toSeq
-        names.foreach { n =>
-          val q = graft.SparkEntry.registry.find(_.name == n)
-            .getOrElse(sys.error(s"no registry query named $n"))
-          val ts = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            val df = q.run(spark, dir)
-            val _ = df.queryExecution.executedPlan // force plan
-            val t1 = System.nanoTime()
-            df.write.format("noop").mode("overwrite").save()
-            val t2 = System.nanoTime()
-            ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
-          }
-          println(f"[plantax] $n%-28s " + ts.map { case (p, e) =>
-            f"plan=$p%.2f exec=$e%.2f" }.mkString("  "))
-        }
-
-      case other => sys.error(s"unknown section $other")
+    val names = args.lift(3).getOrElse("q114_prefix_jaccard_join")
+      .split(",").toSeq
+    names.foreach { n =>
+      val q = graft.SparkEntry.registry.find(_.name == n)
+        .getOrElse(sys.error(s"no registry query named $n"))
+      val ts = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        val df = q.run(spark, dir)
+        val _ = df.queryExecution.executedPlan // force plan
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        val t2 = System.nanoTime()
+        ((t1 - t0) / 1e9, (t2 - t1) / 1e9)
+      }
+      println(f"[plantax] $n%-28s " + ts.map { case (p, e) =>
+        f"plan=$p%.2f exec=$e%.2f" }.mkString("  "))
     }
     spark.stop()
   }

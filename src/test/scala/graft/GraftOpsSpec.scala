@@ -573,6 +573,93 @@ class GraftOpsSpec extends AnyFunSuite with SharedSpark {
       s"bit-equal scores + deterministic ranks: got=${got.toSeq} want=$want")
   }
 
+  test("bm25TopK: > 256 distinct query terms take the list fold, bit-equal to a term-order reference") {
+    import spark.implicits._
+    val vocab = (0 until 300).map(i => f"w$i%03d")
+    val docText = Seq(
+      1L -> (vocab.take(150) ++ Seq("w000", "w000")),
+      2L -> vocab.slice(100, 300),
+      3L -> vocab.indices.filter(_ % 3 == 0).map(vocab),
+      4L -> Seq("unrelated", "words", "here"))
+    val docsDf = docText.map { case (d, ts) => (d, ts.mkString(" ")) }
+      .toDF("id", "text")
+    val qsDf = Seq((7L, (vocab :+ "w005").mkString(" "))).toDF("qid", "qtext")
+    val got = GraftOps.bm25TopK(docsDf, col("id"), col("text"),
+        qsDf, col("qid"), col("qtext"), k = 4)
+    assert(got.queryExecution.logical.toString.contains("collect_list"),
+      "a query wider than 256 terms must plan the list fold")
+    // reference: the same IEEE chain per term, folded in term order
+    val n = docText.size.toLong
+    val tot = docText.map(_._2.size.toLong).sum
+    val k1 = 1200000L.toDouble / 1000000.0; val b = 750000L.toDouble / 1000000.0
+    def contrib(tf: Long, dl: Long, df: Long): Double = {
+      val x = (dl * n).toDouble / tot.toDouble
+      val idf = ((n - df) * 2 + 1).toDouble / (df * 2 + 1).toDouble
+      idf * ((tf * (k1 + 1.0)) / (tf + k1 * ((1.0 - b) + b * x)))
+    }
+    def df(t: String): Long = docText.count(_._2.contains(t)).toLong
+    val scores = docText.flatMap { case (d, ts) =>
+      val hits = vocab.sorted.filter(ts.contains)
+      if (hits.isEmpty) None
+      else Some(d -> hits.foldLeft(0.0) { (acc, t) =>
+        acc + contrib(ts.count(_ == t).toLong, ts.size.toLong, df(t)) })
+    }
+    val want = scores.sortBy(p => (-p._2, p._1)).zipWithIndex
+      .map { case ((d, s), i) => (7L, d, (i + 1).toLong, s) }
+    val rows = got.collect().map(r =>
+      (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    assert(rows.sortBy(_._3).toSeq == want,
+      s"list-fold scores bit-equal: got=${rows.toSeq} want=$want")
+  }
+
+  test("bm25TopK/proximityTopK: a non-deterministic queries plan is read as one snapshot") {
+    import spark.implicits._
+    val docs = Seq(
+      (1L, "apple banana cherry"),
+      (2L, "banana cherry durian elder"),
+      (3L, "apple fig grape"),
+      (4L, "cherry durian fig"),
+      (5L, "elder grape apple banana"))
+      .toDF("doc_id", "text")
+    val texts = Map(
+      10L -> ("apple banana", "cherry durian elder"),
+      11L -> ("fig", "grape apple banana cherry"))
+    // every evaluation of a query row flips it to its other text — the
+    // most adversarial non-deterministic source: any second read of the
+    // queries plan sees different terms than the first
+    val pick = udf { (q: Long) =>
+      val n = GraftOpsSpec.evals.getOrElseUpdate(q,
+        new java.util.concurrent.atomic.AtomicLong()).getAndIncrement()
+      if (n % 2 == 0) texts(q)._1 else texts(q)._2
+    }.asNondeterministic()
+    val moving = spark.range(10, 12)
+      .select(col("id").as("qid"), pick(col("id")).as("qtext"))
+    def fixed(second: Boolean) = texts.toSeq
+      .map { case (q, (a, b)) => (q, if (second) b else a) }.toDF("qid", "qtext")
+    def byQuery(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Seq[Any]]] =
+      df.collect().toSeq.map(_.toSeq).groupBy(_.head.asInstanceOf[Long])
+        .map { case (q, rs) => q -> rs.sortBy(_(2).toString.toLong) }
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "bm25TopK" -> (qs => GraftOps.bm25TopK(docs, col("doc_id"), col("text"),
+        qs, col("qid"), col("qtext"), k = 3)),
+      "proximityTopK" -> (qs => GraftOps.proximityTopK(docs, col("doc_id"),
+        col("text"), qs, col("qid"), col("qtext"), window = 2, k = 3)))
+    ops.foreach { case (name, op) =>
+      val refs = Seq(byQuery(op(fixed(false))), byQuery(op(fixed(true))))
+      texts.keys.foreach(q => assert(refs(0)(q) != refs(1)(q),
+        s"$name fixture: query $q's two texts must rank differently"))
+      (1 to 4).foreach { call =>
+        val got = byQuery(op(moving))
+        assert(got.nonEmpty, s"$name call $call returned nothing")
+        got.foreach { case (q, rows) =>
+          assert(refs.exists(_.get(q).contains(rows)),
+            s"$name call $call: query $q mixes its texts: $rows " +
+              s"(want ${refs.map(_.get(q)).mkString(" or ")})")
+        }
+      }
+    }
+  }
+
   test("corrMatrix: exact moments, degenerate NULL, pairwise-complete counts") {
     import spark.implicits._
     val df = Seq(
@@ -5580,4 +5667,11 @@ class GraftOpsSpec extends AnyFunSuite with SharedSpark {
       GraftOps.winnowOverlapReport(df, col("id"), col("txt"), 4, 5, 0, 1)
     }
   }
+}
+
+object GraftOpsSpec {
+  /** Per-query evaluation counters of the non-deterministic queries UDF
+    * (an object, so every task thread of the local session shares it). */
+  val evals = scala.collection.concurrent.TrieMap
+    .empty[Long, java.util.concurrent.atomic.AtomicLong]
 }
