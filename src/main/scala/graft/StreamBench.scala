@@ -53,7 +53,7 @@ import graft.streaming.StreamingOps
   * STREAMBENCH_rN.json for the per-round artifact.
   *
   * Usage: sbt "runMain graft.StreamBench [sfDir] [nChunks] [mode ...]"
-  * (no modes = all four).
+  * (no modes = every shape in `allModes`).
   */
 object StreamBench {
   /** Every benchmarked streaming shape — the registry
@@ -166,8 +166,6 @@ object StreamBench {
           (StreamingOps.heavyHittersStream(raw, col("user_id"),
             capacity = 64), "complete")
         case "s5_stateful" =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
           import spark.implicits._
           (graft.streaming.SessionizeTws(
             raw.select(col("user_id"), col("ts"), col("value"))
@@ -370,7 +368,17 @@ object StreamBench {
       "s31_gram" -> gramWriter _, "s32_score" -> scoreWriter _)
     val modes = StreamBench.allModes.filter(m => wanted.isEmpty || wanted(m))
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // transformWithState (s5) needs the RocksDB store, set for its runs
+    // only: every other shape measures the default store production runs
+    // on, whichever shapes ran before it
+    def rocksDb(on: Boolean): Unit = {
+      val key = "spark.sql.streaming.stateStore.providerClass"
+      if (on) spark.conf.set(key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else spark.conf.unset(key)
+    }
     val results = modes.flatMap { mode =>
+      rocksDb(mode == "s5_stateful")
       try {
         if (terminalWriters.contains(mode)) {
           val writer = terminalWriters(mode)
@@ -420,7 +428,7 @@ object StreamBench {
         failed += mode
         System.err.println(s"[sbench] $mode failed: ${t.getMessage}")
         None
-      }
+      } finally rocksDb(on = false)
     }
     val modesJson = results.map { case (m, (rps, _, _)) =>
       "\"" + m + f"\":$rps%.0f" }.mkString("{", ",", "}")

@@ -662,6 +662,19 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     ((num - pmod(num, lit(span))) / lit(span)).cast("long")
   }
 
+  /** [[zorderNormalize]] of each `(column, bits)` against that column's
+    * corpus min/max, all collected in one job (a trained-stats constant:
+    * 2k longs). An empty corpus fails loudly, naming `opName`. */
+  def zorderNormalizeCols(df: DataFrame, cols: Seq[(Column, Int)],
+      opName: String): Seq[Column] = {
+    val aggs = cols.flatMap { case (c, _) =>
+      Seq(min(c.cast("long")), max(c.cast("long"))) }
+    val st = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    require(!st.isNullAt(0), s"$opName on an empty corpus")
+    cols.zipWithIndex.map { case ((c, b), j) =>
+      zorderNormalize(c, st.getLong(2 * j), st.getLong(2 * j + 1), b) }
+  }
+
   /** HILBERT-curve value of two pre-normalized coordinates — the locality
     * upgrade over [[zorderValue]]: consecutive curve positions are ALWAYS
     * unit-adjacent cells (the Z curve takes long diagonal jumps at
@@ -711,11 +724,8 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     require(nFiles >= 1, s"nFiles must be >= 1; got $nFiles")
     require(curve == "z" || curve == "hilbert",
       s"curve must be 'z' or 'hilbert'; got '$curve'")
-    val st = df.agg(min(x.cast("long")), max(x.cast("long")),
-      min(y.cast("long")), max(y.cast("long"))).collect()(0)
-    require(!st.isNullAt(0), "zorderWrite on an empty corpus")
-    val xn = zorderNormalize(x, st.getLong(0), st.getLong(1), bits)
-    val yn = zorderNormalize(y, st.getLong(2), st.getLong(3), bits)
+    val Seq(xn, yn) =
+      zorderNormalizeCols(df, Seq(x -> bits, y -> bits), "zorderWrite")
     val z = if (curve == "hilbert") hilbertValue(xn, yn, bits)
             else zorderValue(xn, yn, bits)
     df.withColumn("__z", z)
@@ -769,12 +779,8 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
       s"curve must be 'z', 'hilbert', or 'compactHilbert'; got '$curve'")
     require(curve != "hilbert" || cols.map(_._2).distinct.size == 1,
       "curve=hilbert needs uniform bits (use compactHilbert for mixed widths)")
-    val aggs = cols.flatMap { case (c, _) =>
-      Seq(min(c.cast("long")), max(c.cast("long"))) }
-    val st = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    require(!st.isNullAt(0), "zorderWriteN on an empty corpus")
-    val normed = cols.zipWithIndex.map { case ((c, b), j) =>
-      zorderNormalize(c, st.getLong(2 * j), st.getLong(2 * j + 1), b) -> b }
+    val normed =
+      zorderNormalizeCols(df, cols, "zorderWriteN").zip(cols.map(_._2))
     val z = curve match {
       case "hilbert" => hilbertValueN(normed.map(_._1), cols.head._2)
       case "compactHilbert" => compactHilbertValue(normed)

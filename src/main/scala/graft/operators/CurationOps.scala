@@ -826,16 +826,11 @@ object CurationOps {
   val q89 = QueryDef("q89_zorder_curve",
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
-      val st = li.agg(min(col("l_orderkey").cast("long")),
-        max(col("l_orderkey").cast("long")),
-        min(col("l_partkey").cast("long")),
-        max(col("l_partkey").cast("long"))).collect()(0)
+      val Seq(xn, yn) = GraftOps.zorderNormalizeCols(li,
+        Seq(col("l_orderkey") -> Z_BITS, col("l_partkey") -> Z_BITS),
+        "q89_zorder_curve")
       li.select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
-          GraftOps.zorderValue(
-            GraftOps.zorderNormalize(col("l_orderkey"), st.getLong(0),
-              st.getLong(1), Z_BITS),
-            GraftOps.zorderNormalize(col("l_partkey"), st.getLong(2),
-              st.getLong(3), Z_BITS), Z_BITS).cast("bigint").as("zvalue"))
+          GraftOps.zorderValue(xn, yn, Z_BITS).cast("bigint").as("zvalue"))
         .orderBy("zvalue", "l_orderkey", "l_linenumber")
     },
     Some(s"""
@@ -892,16 +887,11 @@ object CurationOps {
   val q90 = QueryDef("q90_hilbert_curve",
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
-      val st = li.agg(min(col("l_orderkey").cast("long")),
-        max(col("l_orderkey").cast("long")),
-        min(col("l_partkey").cast("long")),
-        max(col("l_partkey").cast("long"))).collect()(0)
+      val Seq(xn, yn) = GraftOps.zorderNormalizeCols(li,
+        Seq(col("l_orderkey") -> Z_BITS, col("l_partkey") -> Z_BITS),
+        "q90_hilbert_curve")
       li.select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
-          GraftOps.hilbertValue(
-            GraftOps.zorderNormalize(col("l_orderkey"), st.getLong(0),
-              st.getLong(1), Z_BITS),
-            GraftOps.zorderNormalize(col("l_partkey"), st.getLong(2),
-              st.getLong(3), Z_BITS), Z_BITS).cast("bigint").as("hvalue"))
+          GraftOps.hilbertValue(xn, yn, Z_BITS).cast("bigint").as("hvalue"))
         .orderBy("hvalue", "l_orderkey", "l_linenumber")
     },
     Some(s"""
@@ -927,6 +917,8 @@ object CurationOps {
 
   // ---------------------------------------------------------------- q93
   private val Z3_BITS = 8
+  /** The three lineitem keys of the k-column curves (q93, q94, q95). */
+  private val Z3_KEYS = Seq("l_orderkey", "l_partkey", "l_suppkey")
 
   /** THREE-column z-order values (round 14 — the k-column generalization
     * real OPTIMIZE-ZORDER runs): (l_orderkey, l_partkey, l_suppkey)
@@ -939,19 +931,12 @@ object CurationOps {
   val q93 = QueryDef("q93_zorder3_curve",
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
-      val st = li.agg(
-        min(col("l_orderkey").cast("long")), max(col("l_orderkey").cast("long")),
-        min(col("l_partkey").cast("long")), max(col("l_partkey").cast("long")),
-        min(col("l_suppkey").cast("long")), max(col("l_suppkey").cast("long")))
-        .collect()(0)
-      def norm(c: String, j: Int) = GraftOps.zorderNormalize(col(c),
-        st.getLong(2 * j), st.getLong(2 * j + 1), Z3_BITS)
+      val normed = GraftOps.zorderNormalizeCols(li,
+        Z3_KEYS.map(col(_) -> Z3_BITS), "q93_zorder3_curve")
       li.select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"),
-          GraftOps.zorderValueN(Seq(
-            norm("l_orderkey", 0) -> Z3_BITS,
-            norm("l_partkey", 1) -> Z3_BITS,
-            norm("l_suppkey", 2) -> Z3_BITS)).cast("bigint").as("zvalue"))
+          GraftOps.zorderValueN(normed.map(_ -> Z3_BITS))
+            .cast("bigint").as("zvalue"))
         .orderBy("zvalue", "l_orderkey", "l_linenumber")
     },
     Some(s"""
@@ -996,19 +981,11 @@ object CurationOps {
   val q94 = QueryDef("q94_zorder_mixed",
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
-      val st = li.agg(
-        min(col("l_orderkey").cast("long")), max(col("l_orderkey").cast("long")),
-        min(col("l_partkey").cast("long")), max(col("l_partkey").cast("long")),
-        min(col("l_suppkey").cast("long")), max(col("l_suppkey").cast("long")))
-        .collect()(0)
-      def norm(c: String, j: Int) = GraftOps.zorderNormalize(col(c),
-        st.getLong(2 * j), st.getLong(2 * j + 1), Z4_BITS(j))
+      val normed = GraftOps.zorderNormalizeCols(li,
+        Z3_KEYS.map(col).zip(Z4_BITS), "q94_zorder_mixed").zip(Z4_BITS)
       li.select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"),
-          GraftOps.zorderValueN(Seq(
-            norm("l_orderkey", 0) -> Z4_BITS(0),
-            norm("l_partkey", 1) -> Z4_BITS(1),
-            norm("l_suppkey", 2) -> Z4_BITS(2))).cast("bigint").as("zvalue"))
+          GraftOps.zorderValueN(normed).cast("bigint").as("zvalue"))
         .orderBy("zvalue", "l_orderkey", "l_linenumber")
     },
     Some {
@@ -1109,19 +1086,11 @@ object CurationOps {
   val q95 = QueryDef("q95_compact_hilbert",
     (s, dir) => {
       val li = Tables.load(s, dir, "lineitem")
-      val st = li.agg(
-        min(col("l_orderkey").cast("long")), max(col("l_orderkey").cast("long")),
-        min(col("l_partkey").cast("long")), max(col("l_partkey").cast("long")),
-        min(col("l_suppkey").cast("long")), max(col("l_suppkey").cast("long")))
-        .collect()(0)
-      def norm(c: String, j: Int) = GraftOps.zorderNormalize(col(c),
-        st.getLong(2 * j), st.getLong(2 * j + 1), Z4_BITS(j))
+      val normed = GraftOps.zorderNormalizeCols(li,
+        Z3_KEYS.map(col).zip(Z4_BITS), "q95_compact_hilbert").zip(Z4_BITS)
       li.select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
           col("l_linenumber"),
-          GraftOps.compactHilbertValue(Seq(
-            norm("l_orderkey", 0) -> Z4_BITS(0),
-            norm("l_partkey", 1) -> Z4_BITS(1),
-            norm("l_suppkey", 2) -> Z4_BITS(2))).cast("bigint").as("hvalue"))
+          GraftOps.compactHilbertValue(normed).cast("bigint").as("hvalue"))
         .orderBy("hvalue", "l_orderkey", "l_linenumber")
     },
     Some(s"""

@@ -4,7 +4,8 @@ import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import javax.xml.parsers.DocumentBuilderFactory
 import scala.collection.mutable
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import graft.Tables
 
@@ -197,6 +198,33 @@ object PipelineCompiler {
         s"$k entries must be 'name:ppm'; got '$s'")
       s.substring(0, i).trim -> s.substring(i + 1).trim.toLong
     }.toMap).getOrElse(Map.empty)
+
+  /** The typed input of an ordered stream twin: the `key`, `ts` and
+    * `tiebreak` args cast to its (long, timestamp, long) position, then
+    * each `extra` arg cast to its SQL type, named by `T`'s fields. */
+  private def orderedIn[T <: Product : TypeTag](df: DataFrame,
+      args: Map[String, String], extra: (String, String)*): Dataset[T] = {
+    val enc = Encoders.product[T]
+    df.select((Seq("key" -> "long", "ts" -> "timestamp",
+        "tiebreak" -> "long") ++ extra).map { case (k, t) =>
+        expr(arg(args, k)).cast(t) }: _*)
+      .toDF(enc.schema.fieldNames.toIndexedSeq: _*).as(enc)
+  }
+
+  /** The k-column curve ops' `cols` (comma-separated expressions), each
+    * paired with its width: `bits` is one int (uniform) or a comma list
+    * matching `cols` (per-column widths — z and compactHilbert; the
+    * Skilling hilbert walk needs a uniform hypercube). */
+  private def curveCols(args: Map[String, String]): Seq[(Column, Int)] = {
+    val cols = arg(args, "cols").split(",").map(c => expr(c.trim)).toSeq
+    val bits = args.getOrElse("bits", "8").split(",").map(_.trim.toInt).toSeq
+    if (bits.length == 1) cols.map(_ -> bits.head)
+    else {
+      require(bits.length == cols.size,
+        s"bits list (${bits.length}) must match cols (${cols.size})")
+      cols.zip(bits)
+    }
+  }
 
   /** Long→Int for ppm-scale rate values: a value outside Int range is a
     * malformed spec and must fail the compile loudly — `.toInt` would wrap
@@ -393,15 +421,9 @@ object PipelineCompiler {
     "zorder" -> ((_, in, args) => {
       val df = in("inport1")
       val bits = args.getOrElse("bits", "12").toInt
-      val x = expr(arg(args, "x")); val y = expr(arg(args, "y"))
-      val st = df.agg(
-        org.apache.spark.sql.functions.min(x.cast("long")),
-        org.apache.spark.sql.functions.max(x.cast("long")),
-        org.apache.spark.sql.functions.min(y.cast("long")),
-        org.apache.spark.sql.functions.max(y.cast("long"))).collect()(0)
-      require(!st.isNullAt(0), "zorder on an empty corpus")
-      val xn = graft.api.GraftOps.zorderNormalize(x, st.getLong(0), st.getLong(1), bits)
-      val yn = graft.api.GraftOps.zorderNormalize(y, st.getLong(2), st.getLong(3), bits)
+      val Seq(xn, yn) = graft.api.GraftOps.zorderNormalizeCols(df,
+        Seq(expr(arg(args, "x")) -> bits, expr(arg(args, "y")) -> bits),
+        "zorder")
       val curveCol =
         if (args.getOrElse("curve", "z") == "hilbert")
           graft.api.GraftOps.hilbertValue(xn, yn, bits)
@@ -424,25 +446,10 @@ object PipelineCompiler {
     // per-column bits); `zorderSinkN` is the k-D layout terminal.
     "zorderN" -> ((_, in, args) => {
       val df = in("inport1")
-      val cols = arg(args, "cols").split(",").map(c => expr(c.trim)).toSeq
+      val cols = curveCols(args)
       require(cols.size >= 2, "zorderN needs >= 2 cols")
-      // `bits` is one int (uniform) or a comma list matching `cols`
-      // (per-column widths — z and compactHilbert; the Skilling hilbert
-      // walk needs a uniform hypercube)
-      val bitsList = args.getOrElse("bits", "8").split(",").map(_.trim.toInt)
-      val perCol =
-        if (bitsList.length == 1) Seq.fill(cols.size)(bitsList(0))
-        else { require(bitsList.length == cols.size,
-          s"bits list (${bitsList.length}) must match cols (${cols.size})")
-          bitsList.toSeq }
-      val aggs = cols.flatMap(c => Seq(
-        org.apache.spark.sql.functions.min(c.cast("long")),
-        org.apache.spark.sql.functions.max(c.cast("long"))))
-      val st = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      require(!st.isNullAt(0), "zorderN on an empty corpus")
-      val normed = cols.zipWithIndex.map { case (c, j) =>
-        graft.api.GraftOps.zorderNormalize(c, st.getLong(2 * j),
-          st.getLong(2 * j + 1), perCol(j)) }
+      val perCol = cols.map(_._2)
+      val normed = graft.api.GraftOps.zorderNormalizeCols(df, cols, "zorderN")
       val curveCol = args.getOrElse("curve", "z") match {
         case "hilbert" =>
           require(perCol.distinct.size == 1,
@@ -458,15 +465,7 @@ object PipelineCompiler {
         args.getOrElse("as", "zvalue"), curveCol.cast("bigint")))
     }),
     "zorderSinkN" -> ((_, in, args) => {
-      val cols = arg(args, "cols").split(",").map(c => expr(c.trim)).toSeq
-      // same `bits` contract as zorderN: one int or a comma list per col
-      val bitsList = args.getOrElse("bits", "8").split(",").map(_.trim.toInt)
-      val perCol =
-        if (bitsList.length == 1) Seq.fill(cols.size)(bitsList(0))
-        else { require(bitsList.length == cols.size,
-          s"bits list (${bitsList.length}) must match cols (${cols.size})")
-          bitsList.toSeq }
-      graft.api.GraftOps.zorderWriteNW(in("inport1"), cols.zip(perCol),
+      graft.api.GraftOps.zorderWriteNW(in("inport1"), curveCols(args),
         path = arg(args, "path"),
         nFiles = args.getOrElse("nFiles", "16").toInt,
         curve = args.getOrElse("curve", "z"))
@@ -964,13 +963,8 @@ object PipelineCompiler {
     // the typed EwmaStream; batch == stream law spec'd in S21)
     "ewmaStream" -> ((_, in, args) =>
       Map("outport1" -> graft.streaming.EwmaStream(
-        in("inport1").select(
-          expr(arg(args, "key")).cast("long").as("key"),
-          expr(arg(args, "ts")).cast("timestamp").as("ts"),
-          expr(arg(args, "tiebreak")).cast("long").as("tb"),
-          expr(arg(args, "value")).cast("double").as("value"))
-          .as(org.apache.spark.sql.Encoders.product[
-            graft.streaming.EwmaStream.Point]),
+        orderedIn[graft.streaming.EwmaStream.Point](in("inport1"), args,
+          "value" -> "double"),
         arg(args, "alphaPpm").toLong).toDF())),
     "holt" -> ((_, in, args) =>
       Map("outport1" -> graft.api.GraftOps.holt(in("inport1"),
@@ -981,13 +975,8 @@ object PipelineCompiler {
     // the typed HoltStream; bit-equal batch == stream law spec'd in S28)
     "holtStream" -> ((_, in, args) =>
       Map("outport1" -> graft.streaming.HoltStream(
-        in("inport1").select(
-          expr(arg(args, "key")).cast("long").as("key"),
-          expr(arg(args, "ts")).cast("timestamp").as("ts"),
-          expr(arg(args, "tiebreak")).cast("long").as("tb"),
-          expr(arg(args, "value")).cast("double").as("value"))
-          .as(org.apache.spark.sql.Encoders.product[
-            graft.streaming.HoltStream.Point]),
+        orderedIn[graft.streaming.HoltStream.Point](in("inport1"), args,
+          "value" -> "double"),
         arg(args, "alphaPpm").toLong,
         arg(args, "betaPpm").toLong).toDF())),
     // transitionStream: the S22 continuous twin of `transitionCounts`
@@ -995,24 +984,14 @@ object PipelineCompiler {
     // law spec'd in S22)
     "transitionStream" -> ((_, in, args) =>
       Map("outport1" -> graft.streaming.TransitionStream(
-        in("inport1").select(
-          expr(arg(args, "key")).cast("long").as("key"),
-          expr(arg(args, "ts")).cast("timestamp").as("ts"),
-          expr(arg(args, "tiebreak")).cast("long").as("tb"),
-          expr(arg(args, "state")).cast("string").as("state"))
-          .as(org.apache.spark.sql.Encoders.product[
-            graft.streaming.TransitionStream.Event])).toDF())),
+        orderedIn[graft.streaming.TransitionStream.Event](in("inport1"),
+          args, "state" -> "string")).toDF())),
     // cusumStream: the S23 continuous twin of `cusum` (DataFrame face
     // over the typed CusumStream; batch == stream law spec'd in S23)
     "cusumStream" -> ((_, in, args) =>
       Map("outport1" -> graft.streaming.CusumStream(
-        in("inport1").select(
-          expr(arg(args, "key")).cast("long").as("key"),
-          expr(arg(args, "ts")).cast("timestamp").as("ts"),
-          expr(arg(args, "tiebreak")).cast("long").as("tb"),
-          expr(arg(args, "value")).cast("long").as("value"))
-          .as(org.apache.spark.sql.Encoders.product[
-            graft.streaming.CusumStream.Point]),
+        orderedIn[graft.streaming.CusumStream.Point](in("inport1"), args,
+          "value" -> "long"),
         arg(args, "target").toLong, arg(args, "slack").toLong,
         arg(args, "threshold").toLong).toDF())),
     // rollingDistinctStream: the S24 continuous twin of `rollingDistinct`
@@ -1036,12 +1015,8 @@ object PipelineCompiler {
     // batch law spec'd in S27)
     "frequencyCapStream" -> ((_, in, args) =>
       Map("outport1" -> graft.streaming.FrequencyCapStream(
-        in("inport1").select(
-          expr(arg(args, "key")).cast("long").as("key"),
-          expr(arg(args, "ts")).cast("timestamp").as("ts"),
-          expr(arg(args, "tiebreak")).cast("long").as("tiebreak"))
-          .as(org.apache.spark.sql.Encoders.product[
-            graft.streaming.FrequencyCapStream.Ev]),
+        orderedIn[graft.streaming.FrequencyCapStream.Ev](in("inport1"),
+          args),
         k = arg(args, "k").toInt).toDF())),
     "transitionCounts" -> ((_, in, args) =>
       Map("outport1" -> graft.api.GraftOps.transitionCounts(

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** S23: continuous per-key CUSUM change detection — the streaming twin
   * of [[graft.api.GraftOps.cusum]] (the q125 restart recurrence), the
@@ -15,14 +14,10 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * points is EQUAL CELL-FOR-CELL to the batch operator (law S23, no
   * IEEE caveat at all: the arithmetic is integral).
   *
-  * Ordering contract = [[EwmaStream]]: within a micro-batch points sort
-  * by (ts, tiebreak) before stepping; ACROSS batches a key's points
-  * must arrive in strictly increasing (ts, tiebreak) order — a
-  * cross-batch late point cannot be folded into an already-emitted
-  * prefix with O(1) state, so it fails the query LOUDLY rather than
-  * silently corrupting the chart. Values are caller-quantized integers
-  * (the batch contract); NULL-valued observations belong to the batch
-  * operator, whose poison semantics need the whole tail.
+  * Ordering contract: the [[OrderedFold]] one. Values are
+  * caller-quantized integers (the batch contract); NULL-valued
+  * observations belong to the batch operator, whose poison semantics
+  * need the whole tail.
   */
 object CusumStream {
 
@@ -35,36 +30,18 @@ object CusumStream {
       threshold: Long): Dataset[Flagged] = {
     require(slack >= 0, s"slack must be >= 0; got $slack")
     require(threshold > 0, s"threshold must be > 0; got $threshold")
-    val spark = points.sparkSession
-    import spark.implicits._
-    implicit val outEnc = Encoders.product[Flagged]
-    points.groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, Flagged](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          val sorted = rows.toSeq.sortBy(p => (p.ts.getTime, p.tb))
-          var st = state.getOption
-          val out = sorted.map { p =>
-            val pos = (p.ts.getTime, p.tb)
-            val (bp, bn) = st match {
-              case None => (0L, 0L)
-              case Some(e) =>
-                if (Ordering[(Long, Long)].lteq(pos, (e.lastTs, e.lastTb)))
-                  throw new IllegalStateException(
-                    s"CusumStream: key $key point at $pos arrived at or " +
-                      s"before the already-folded (${e.lastTs}, ${e.lastTb})" +
-                      " — cross-batch order violated; replay in batch instead")
-                if (e.sPos >= threshold || e.sNeg >= threshold) (0L, 0L)
-                else (e.sPos, e.sNeg)
-            }
-            val sp = math.max(0L, bp + (p.value - target - slack))
-            val sn = math.max(0L, bn + (target - slack - p.value))
-            st = Some(CusumState(sp, sn, p.ts.getTime, p.tb))
-            Flagged(p.key, p.ts, p.tb, p.value, sp, sn,
-              sp >= threshold || sn >= threshold)
-          }
-          st.foreach(state.update)
-          out.iterator
+    OrderedFold[Point, CusumState, Flagged](points, "CusumStream")(_.key,
+      p => (p.ts.getTime, p.tb), e => (e.lastTs, e.lastTb)) { (st, p) =>
+      val (bp, bn) = st match {
+        case Some(e) if e.sPos < threshold && e.sNeg < threshold =>
+          (e.sPos, e.sNeg)
+        case _ => (0L, 0L)
       }
+      val sp = math.max(0L, bp + (p.value - target - slack))
+      val sn = math.max(0L, bn + (target - slack - p.value))
+      (CusumState(sp, sn, p.ts.getTime, p.tb),
+        Some(Flagged(p.key, p.ts, p.tb, p.value, sp, sn,
+          sp >= threshold || sn >= threshold)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** S21: continuous per-key EWMA — the streaming twin of
   * [[graft.api.GraftOps.ewma]] (the q117 recurrence), the S14/S15/S20
@@ -11,18 +10,8 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * tiebreak) position), each arrival emits its smoothed value
   * immediately, and the arithmetic is the IDENTICAL two-multiply-one-add
   * IEEE chain per step — so a replay of the same points produces values
-  * BIT-EQUAL to the batch operator (law S21).
-  *
-  * Ordering contract: within a micro-batch, points sort by (ts,
-  * tiebreak) before folding (arrival order inside a batch is free);
-  * ACROSS batches a key's points must arrive in STRICTLY increasing
-  * (ts, tiebreak) order — a replayed point at the already-folded
-  * position fails too, since folding it twice would double-apply the
-  * step; a cross-batch late point cannot be folded into an
-  * already-emitted prefix with O(1) state, so it fails the query LOUDLY
-  * (an [[IllegalStateException]] naming the key and positions) rather
-  * than silently corrupting the recurrence. Heavily-late replays belong
-  * to the batch operator — the Sessionize.reconcile division of labor.
+  * BIT-EQUAL to the batch operator (law S21). Ordering contract: the
+  * [[OrderedFold]] one.
   */
 object EwmaStream {
 
@@ -35,32 +24,11 @@ object EwmaStream {
     require(alphaPpm >= 0 && alphaPpm <= 1000000,
       s"alphaPpm must be in [0, 1000000]; got $alphaPpm")
     val a = alphaPpm.toDouble / 1000000.0
-    val spark = points.sparkSession
-    import spark.implicits._
-    implicit val outEnc = Encoders.product[Smoothed]
-    points.groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, Smoothed](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          val sorted = rows.toSeq.sortBy(p => (p.ts.getTime, p.tb))
-          var st = state.getOption
-          val out = sorted.map { p =>
-            val pos = (p.ts.getTime, p.tb)
-            val s = st match {
-              case None => p.value
-              case Some(e) =>
-                if (Ordering[(Long, Long)].lteq(pos, (e.lastTs, e.lastTb)))
-                  throw new IllegalStateException(
-                    s"EwmaStream: key $key point at $pos arrived at or " +
-                      s"before the already-folded (${e.lastTs}, ${e.lastTb})" +
-                      " — cross-batch order violated; replay in batch instead")
-                a * p.value + (1.0 - a) * e.lastS
-            }
-            st = Some(EwmaState(s, p.ts.getTime, p.tb))
-            Smoothed(p.key, p.ts, p.tb, p.value, s)
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
+    OrderedFold[Point, EwmaState, Smoothed](points, "EwmaStream")(_.key,
+      p => (p.ts.getTime, p.tb), e => (e.lastTs, e.lastTb)) { (st, p) =>
+      val s = st.fold(p.value)(e => a * p.value + (1.0 - a) * e.lastS)
+      (EwmaState(s, p.ts.getTime, p.tb),
+        Some(Smoothed(p.key, p.ts, p.tb, p.value, s)))
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** S27: continuous frequency-cap admission — the streaming twin of
   * [[graft.api.GraftOps.frequencyCap]] (the q153 contribution-bounding
@@ -12,17 +11,10 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * per key, not the history, and nothing is recomputed on arrival.
   *
   * Law (S27): over a replay whose CROSS-batch order is (ts, tiebreak)
-  * nondecreasing per key — any chunking of the time-sorted stream —
-  * the admitted set equals batch `frequencyCap` exactly. Within a
-  * micro-batch, arrival order is irrelevant: each key's batch group is
-  * sorted before counting. A cross-batch regression (an event at or
-  * before the key's newest seen (ts, tiebreak)) fails LOUDLY — the
-  * counter cannot retroactively un-admit, so a silently re-ordered
-  * replay would admit the wrong k (the S21/S24 loud-contract posture;
-  * heavily-disordered replays belong to the batch operator). Ties on
-  * (ts, tiebreak) within a key are out of contract for the same reason
-  * they are in batch (the q140 unique-tiebreak posture) and fail the
-  * same guard.
+  * increasing per key — any chunking of the time-sorted stream — the
+  * admitted set equals batch `frequencyCap` exactly. Ordering contract:
+  * the [[OrderedFold]] one; the counter cannot retroactively un-admit,
+  * so a silently re-ordered replay would admit the wrong k.
   */
 object FrequencyCapStream {
 
@@ -31,29 +23,12 @@ object FrequencyCapStream {
 
   def apply(events: Dataset[Ev], k: Int): Dataset[Ev] = {
     require(k >= 1, s"k must be >= 1; got $k")
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val outEnc = Encoders.product[Ev]
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[CapState, Ev](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          var st = state.getOption
-            .getOrElse(CapState(0, Long.MinValue, Long.MinValue))
-          val out = List.newBuilder[Ev]
-          rows.toSeq.sortBy(e => (e.ts.getTime, e.tiebreak)).foreach { e =>
-            val t = e.ts.getTime
-            if (t < st.lastTs || (t == st.lastTs && e.tiebreak <= st.lastTb))
-              throw new IllegalStateException(
-                s"FrequencyCapStream: key $key event at ($t, ${e.tiebreak}) " +
-                  s"is not after the newest seen (${st.lastTs}, " +
-                  s"${st.lastTb}) — the count state cannot re-order; " +
-                  "replay in batch instead")
-            if (st.n < k) out += e
-            st = CapState(math.min(st.n + 1, k), t, e.tiebreak)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    OrderedFold[Ev, CapState, Ev](events, "FrequencyCapStream")(_.key,
+      e => (e.ts.getTime, e.tiebreak), s => (s.lastTs, s.lastTb)) {
+      (st, e) =>
+        val n = st.fold(0)(_.n)
+        (CapState(math.min(n + 1, k), e.ts.getTime, e.tiebreak),
+          if (n < k) Some(e) else None)
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** S28: continuous per-key Holt level+trend smoothing — the streaming
   * twin of [[graft.api.GraftOps.holt]] (the q155 recurrence), the S21
@@ -13,13 +12,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * freshly computed level exactly as the batch CASE recomputes it — so
   * a replay of the same points is BIT-EQUAL to the batch operator (law
   * S28). `level + trend` per emission is the one-step-ahead forecast.
-  *
-  * Ordering contract (verbatim S21): within a micro-batch, points sort
-  * by (ts, tiebreak) before folding; ACROSS batches a key's points must
-  * arrive in strictly increasing (ts, tiebreak) order — a point at or
-  * before the already-folded position fails LOUDLY (folding it would
-  * double-apply the step; an O(1)-state recurrence cannot re-open an
-  * emitted prefix). Heavily-late replays belong to the batch operator.
+  * Ordering contract: the [[OrderedFold]] one.
   */
 object HoltStream {
 
@@ -37,33 +30,14 @@ object HoltStream {
       s"betaPpm must be in [0, 1000000]; got $betaPpm")
     val a = alphaPpm.toDouble / 1000000.0
     val b = betaPpm.toDouble / 1000000.0
-    val spark = points.sparkSession
-    import spark.implicits._
-    implicit val outEnc = Encoders.product[Smoothed]
-    points.groupByKey(_.key)
-      .flatMapGroupsWithState[HoltState, Smoothed](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          val sorted = rows.toSeq.sortBy(p => (p.ts.getTime, p.tb))
-          var st = state.getOption
-          val out = sorted.map { p =>
-            val pos = (p.ts.getTime, p.tb)
-            val (l, t) = st match {
-              case None => (p.value, 0.0)
-              case Some(e) =>
-                if (Ordering[(Long, Long)].lteq(pos, (e.lastTs, e.lastTb)))
-                  throw new IllegalStateException(
-                    s"HoltStream: key $key point at $pos arrived at or " +
-                      s"before the already-folded (${e.lastTs}, ${e.lastTb})" +
-                      " — cross-batch order violated; replay in batch instead")
-                val ln = a * p.value + (1.0 - a) * (e.lastL + e.lastB)
-                (ln, b * (ln - e.lastL) + (1.0 - b) * e.lastB)
-            }
-            st = Some(HoltState(l, t, p.ts.getTime, p.tb))
-            Smoothed(p.key, p.ts, p.tb, p.value, l, t)
-          }
-          st.foreach(state.update)
-          out.iterator
+    OrderedFold[Point, HoltState, Smoothed](points, "HoltStream")(_.key,
+      p => (p.ts.getTime, p.tb), e => (e.lastTs, e.lastTb)) { (st, p) =>
+      val (l, t) = st.fold((p.value, 0.0)) { e =>
+        val ln = a * p.value + (1.0 - a) * (e.lastL + e.lastB)
+        (ln, b * (ln - e.lastL) + (1.0 - b) * e.lastB)
       }
+      (HoltState(l, t, p.ts.getTime, p.tb),
+        Some(Smoothed(p.key, p.ts, p.tb, p.value, l, t)))
+    }
   }
 }

@@ -9,8 +9,12 @@ import graft.streaming.Sessionize.{Event, OpenSession, Session}
 /** S5 on the arbitrary-state API (`transformWithState`, the successor to
   * [m]apGroupsWithState — SURVEY.md §2.2 "stateful per-key processing"):
   * identical gap-sessionization semantics to [[Sessionize]], state held in
-  * a typed `ValueState` managed by the state-v2 store. Both variants ship
-  * so pipelines can pick per Spark-version availability.
+  * a typed `ValueState` managed by the state-v2 store. The two differ in
+  * the store they need: `transformWithState` runs only on the RocksDB
+  * state store provider (set
+  * `spark.sql.streaming.stateStore.providerClass` before starting it),
+  * while [[Sessionize]]'s `flatMapGroupsWithState` runs on the default
+  * store.
   */
 object SessionizeTws {
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** S22: continuous per-key state-transition steps — the streaming twin
   * of [[graft.api.GraftOps.transitionCounts]] (the q119 Markov matrix),
@@ -20,11 +19,7 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   * batch operator's lag(1)-marker role, so instrumentation gaps surface
   * as transition mass instead of vanishing.
   *
-  * Ordering contract = [[EwmaStream]]: within a micro-batch points sort
-  * by (ts, tiebreak) before stepping; a cross-batch late point cannot
-  * be spliced into an already-emitted step sequence with O(1) state, so
-  * it fails the query LOUDLY — heavily-late replays belong to the batch
-  * operator.
+  * Ordering contract: the [[OrderedFold]] one.
   */
 object TransitionStream {
 
@@ -36,34 +31,10 @@ object TransitionStream {
   case class Step(key: Long, ts: Timestamp, tb: Long, from_state: String,
       to_state: String)
 
-  def apply(events: Dataset[Event]): Dataset[Step] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    implicit val outEnc = Encoders.product[Step]
-    events.groupByKey(_.key)
-      .flatMapGroupsWithState[TransState, Step](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key, rows, state) =>
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.tb))
-          var st = state.getOption
-          val out = sorted.flatMap { e =>
-            val pos = (e.ts.getTime, e.tb)
-            val step = st match {
-              case None => None
-              case Some(p) =>
-                if (Ordering[(Long, Long)].lteq(pos, (p.lastTs, p.lastTb)))
-                  throw new IllegalStateException(
-                    s"TransitionStream: key $key point at $pos arrived at " +
-                      s"or before the already-stepped (${p.lastTs}, " +
-                      s"${p.lastTb}) — cross-batch order violated; replay " +
-                      "in batch instead")
-                Some(Step(e.key, e.ts, e.tb, p.lastState, e.state))
-            }
-            st = Some(TransState(e.ts.getTime, e.tb, e.state))
-            step
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
-  }
+  def apply(events: Dataset[Event]): Dataset[Step] =
+    OrderedFold[Event, TransState, Step](events, "TransitionStream")(_.key,
+      e => (e.ts.getTime, e.tb), s => (s.lastTs, s.lastTb)) { (st, e) =>
+      (TransState(e.ts.getTime, e.tb, e.state),
+        st.map(p => Step(e.key, e.ts, e.tb, p.lastState, e.state)))
+    }
 }
