@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.graftbridge.JobsBridge
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   * Results are fully materialized via the `noop` sink (forces every
@@ -133,16 +134,20 @@ object Bench {
     def codegen(): (Long, Long) =
       (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
     val results = selected.map { case (name, fn) =>
-      val timed = (1 to runs).flatMap { _ =>
+      val timed = (1 to runs).flatMap { i =>
         val ticks0 = hostTicks()
         val cg0 = codegen()
         val t0 = System.nanoTime()
         val res = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          // the jobs that building the DataFrame fires: scalar head()s,
+          // checkpoints, fit rounds
+          val (df, buildJobs) =
+            JobsBridge.counted(spark.sparkContext, s"bench-$name-$i")(fn(spark, sfDir))
+          df.write.format("noop").mode("overwrite").save()
           val t = (System.nanoTime() - t0) / 1e9
           val cg = codegen()
           Some((t, diag(), envDelta(ticks0),
-            (cg._1 - cg0._1, (cg._2 - cg0._2) / 1000000L)))
+            (cg._1 - cg0._1, (cg._2 - cg0._2) / 1000000L), buildJobs))
         } catch { case e: Throwable =>
           if (!failed.contains(name)) failed += name
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -169,16 +174,17 @@ object Bench {
       val diags = timed.map(_._2)
       val envs = timed.map(_._3)
       val cgs = timed.map(_._4)
+      val jobs = timed.map(_._5)
       val sec =
         if (times.isEmpty) 0.0
         else times.sorted.apply((times.size - 1) / 2) // lower median
       System.err.println(
         f"[bench] $name%-28s $sec%8.2f s  (runs: ${times.map(t => f"$t%.2f").mkString(" ")})")
-      (name, sec, times, diags, envs, cgs)
+      (name, sec, times, diags, envs, cgs, jobs)
     }
     // a failed query must not masquerade as a fast one in the JSON record
     val ok = results.filterNot(r => failed.contains(r._1))
-    val qs = ok.map { case (k, v, _, _, _, _) => "\"" + k + f"\":$v%.3f" }
+    val qs = ok.map { case (k, v, _, _, _, _, _) => "\"" + k + f"\":$v%.3f" }
       .mkString("{", ",", "}")
     // Every per-query number lives in BENCH_RUNS.json, NOT on stdout: the
     // driver keeps only the last ~2000 bytes of stdout, and at 88+ queries
@@ -186,12 +192,12 @@ object Bench {
     // the line start and making it unparseable (this nulled BENCH_r05,
     // _r11 and _r12's parse). The stdout line carries only the totals —
     // metric/value/n/failed/sf, a few hundred bytes at any registry size.
-    val runsJson = ok.map { case (k, _, ts, _, _, _) =>
+    val runsJson = ok.map { case (k, _, ts, _, _, _, _) =>
         "\"" + k + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     // one diag object per run: [heapMB, storageUsedMB, persistentRdds,
     // broadcastBlocks] — see diag() above
-    val diagJson = ok.map { case (k, _, _, ds, _, _) =>
+    val diagJson = ok.map { case (k, _, _, ds, _, _, _) =>
         "\"" + k + "\":" + ds.map { case (h, st, r, b) => s"[$h,$st,$r,$b]" }
           .mkString("[", ",", "]")
       }.mkString("{", ",", "}")
@@ -199,14 +205,18 @@ object Bench {
     // host-contention record CheckFreeze's classifier reads (an
     // over-threshold query with a foreign/steal spike on its slow runs
     // is "contended" — host noise, not a plan regression)
-    val envJson = ok.map { case (k, _, _, _, es, _) =>
+    val envJson = ok.map { case (k, _, _, _, es, _, _) =>
         "\"" + k + "\":" + es.map { case (f, s, l) => s"[$f,$s,$l]" }
           .mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     // one value per run: classes compiled and ms spent compiling them
     def codegenJson(f: ((Long, Long)) => Long): String = ok.map {
-        case (k, _, _, _, _, cs) =>
+        case (k, _, _, _, _, cs, _) =>
           "\"" + k + "\":" + cs.map(f).mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+    // one value per run: jobs fired while building the DataFrame
+    val buildJobsJson = ok.map { case (k, _, _, _, _, _, js) =>
+        "\"" + k + "\":" + js.mkString("[", ",", "]")
       }.mkString("{", ",", "}")
     val ncpu = Runtime.getRuntime.availableProcessors()
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -244,7 +254,7 @@ object Bench {
       .map(pq => assemble(Some(pq)))
       .find(_.length <= tailBudget)
       .getOrElse(assemble(None))
-    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"diag":$diagJson,"env":$envJson,"codegen_compiles":${codegenJson(_._1)},"codegen_ms":${codegenJson(_._2)},"ncpu":$ncpu,"failed":$failedJson,"sf":"$sfDir"}"""
+    val full = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"runs":$runsJson,"diag":$diagJson,"env":$envJson,"codegen_compiles":${codegenJson(_._1)},"codegen_ms":${codegenJson(_._2)},"build_jobs":$buildJobsJson,"ncpu":$ncpu,"failed":$failedJson,"sf":"$sfDir"}"""
     try {
       val w = new java.io.PrintWriter("BENCH_RUNS.json", "UTF-8")
       try w.println(full) finally w.close()

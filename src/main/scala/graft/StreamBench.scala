@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.reflect.io.Directory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingOps
@@ -76,8 +77,17 @@ object StreamBench {
         shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
+    // the input copies and every checkpoint; removed however the run ends
     val tmp = Files.createTempDirectory("graft-sbench").toFile
+    try run(spark, sfDir, nChunks, wanted, cpus.toInt, tmp)
+    finally {
+      spark.stop()
+      new Directory(tmp).deleteRecursively()
+    }
+  }
+
+  private def run(spark: SparkSession, sfDir: String, nChunks: Int,
+      wanted: Set[String], cpus: Int, tmp: java.io.File): Unit = {
     // chunk the events table into nChunks files -> nChunks micro-batches
     val e = Tables.load(spark, sfDir, "events")
     val total = e.count()
@@ -143,7 +153,7 @@ object StreamBench {
     // per batch, clamped by cores. SPARK_GRAFT_STREAM_PARTS overrides.
     val parts = sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt)
       .getOrElse(StreamingOps.sizedShufflePartitions(
-        math.max(1L, total / nChunks), cpus.toInt))
+        math.max(1L, total / nChunks), cpus))
 
     /** (stream to run, output mode) per shape; `warm = true` builds the
       * same shape over the tiny single-file input for the pre-warm pass. */
@@ -438,6 +448,5 @@ object StreamBench {
     println(s"""{"metric":"stream_rows_per_sec","modes":$modesJson,""" +
       s""""sec_batches":$secJson,"rows":$total,"chunks":$nChunks,""" +
       s""""partitions":$parts,"failed":$failedJson,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

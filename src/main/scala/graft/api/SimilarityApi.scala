@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 import graft.functions.{CosineSim, Portable, Text}
 /** similarity & ANN family: cosine/kNN, LSH, IVF, PQ/SQ tiers, k-means, MMR, layout — members of [[GraftOps]], split out of the former single
   * 6,600-line object (round 19) purely for maintainability: the trait
@@ -794,7 +795,7 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
   }
 
   def compactIndex(spark: SparkSession, inPath: String, outPath: String): Unit =
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(outPath)
 
@@ -831,7 +832,7 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     require(nFiles <= Int.MaxValue,
       s"compactOutput: $bytes bytes at targetBytes=$targetBytes needs " +
         s"$nFiles files — raise targetBytes (Int partition-count limit)")
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .repartition(nFiles.toInt)
       .write.mode("overwrite").parquet(outPath)
     nFiles
@@ -847,7 +848,7 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     * index's merge pass. */
   def compactAdmissionIndex(spark: SparkSession, inPath: String,
       outPath: String): Unit =
-    spark.read.parquet(inPath).distinct()
+    Tables.parquet(spark, inPath).distinct()
       .write.mode("overwrite").parquet(outPath)
 
   /** Compaction merge pass for the S20 upsert log
@@ -861,7 +862,7 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     * from O(batches × keys) to O(keys). */
   def compactUpsertLog(spark: SparkSession, inPath: String, outPath: String,
       key: Seq[String], version: String, tiebreak: String): Unit =
-    latestByKey(spark.read.parquet(inPath), key.map(col),
+    latestByKey(Tables.parquet(spark, inPath), key.map(col),
         col(version), col(tiebreak))
       .write.mode("overwrite").parquet(outPath)
 
@@ -878,7 +879,7 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     * affected slice re-counted, the documented recovery. */
   def compactSpanCounts(spark: SparkSession, inPath: String,
       outPath: String): Unit =
-    spark.read.parquet(inPath)
+    Tables.parquet(spark, inPath)
       .groupBy(col("__sh"))
       .agg(sum(col("__df")).as("__df"), sum(col("__n")).as("__n"))
       .write.mode("overwrite").parquet(outPath)

@@ -683,7 +683,7 @@ object StreamingOps {
   def upsertState(spark: org.apache.spark.sql.SparkSession, path: String,
       key: Seq[String], version: String, tiebreak: String,
       isDelete: Column): DataFrame =
-    graft.api.GraftOps.applyChanges(spark.read.parquet(path),
+    graft.api.GraftOps.applyChanges(graft.Tables.parquet(spark, path),
       key.map(col), col(version), col(tiebreak), isDelete)
 
   /** S26 — continuously-maintained FIELD-wise survivorship (the
@@ -718,7 +718,7 @@ object StreamingOps {
   def goldenRecordState(spark: org.apache.spark.sql.SparkSession,
       path: String, key: Seq[String], version: String,
       fields: Seq[String]): DataFrame = {
-    val log = spark.read.parquet(path)
+    val log = graft.Tables.parquet(spark, path)
     val aggs = fields.map(f => max(col(f)).as(f)) :+
       max(col(s"last_$version")).as(s"last_$version")
     log.groupBy(key.map(col): _*).agg(aggs.head, aggs.tail: _*)
@@ -964,7 +964,7 @@ object StreamingOps {
     var qid: String = null
     foreachBatchSink(stream, queryName, checkpoint) { (batch, id) =>
       if (qid == null) qid = checkpointQueryId(batch.sparkSession, checkpoint)
-      val model = batch.sparkSession.read.parquet(modelPath)
+      val model = graft.Tables.parquet(batch.sparkSession, modelPath)
       val scored = modelKind match {
         case "ridge" =>
           graft.api.GraftOps.ridgeApply(batch, col(vec), model, dim)
