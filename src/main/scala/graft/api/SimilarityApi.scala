@@ -167,29 +167,37 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
       .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("sim"))
   }
 
+  // ------------------------------------------------------- quantizers
+  // An inline top-k collects its models once, then runs the encode and
+  // scoring cores its `*Encoder` and `*TopKCoded` twins run — never the
+  // twins themselves: each public call collects again, and collecting a
+  // lazy fit's model re-runs its last training round.
+
+  /** A collected model in the baked-constant form the NearestCells family
+    * wants: cluster-ascending (cluster, dim-ordered centroid vector). */
+  private type Cells = IndexedSeq[(Int, Seq[Double])]
+
   /** Distributed Lloyd's k-means trainer — the training seam for
     * [[ivfTopK]]'s coarse quantizer (IVF assumes a trained centroid
     * table; this produces one, with the same integer-micros +
     * sequential-dot engine-portable arithmetic as the q21/q34 family).
     *
-    * Deterministic end to end: seeds are the `k` rows with the smallest
-    * portable hash of `id` (id tiebreak), quantized to exact micros;
-    * each round assigns every vector to its argmax-dot centroid (one
-    * codegen'd NearestCells pass; score ties → lower cluster id) and
-    * recomputes centroids as exact integer-micros means. Dot-scored
-    * assignment assumes ~unit-norm embeddings (see [[ivfTopK]]).
-    * Clusters that lose every member are DROPPED from subsequent rounds
-    * and the output — the documented contract (silently carrying a dead
-    * centroid forward would claim a cluster the data no longer has).
+    * Runs [[pqFit]]'s Lloyd loop with the whole vector as its one slice:
+    * hash-min seeds, argmax-dot assignment (score ties → lower cluster
+    * id), integer-micros means. Dot-scored assignment assumes ~unit-norm
+    * embeddings (see [[ivfTopK]]). Clusters that lose every member are
+    * DROPPED from subsequent rounds and the output — the documented
+    * contract (silently carrying a dead centroid forward would claim a
+    * cluster the data no longer has). Accepts `array<float>` and
+    * `array<double>` vectors (e.g. [[l2Normalize]] output).
     *
     * Scale shape: per round, assignment is a NARROW per-row projection
     * against the k·dim baked model (no corpus×k join, no shuffle) and
     * the update is one map-side-combined hash agg on (cluster, dim) —
     * the canonical 100 TB Lloyd's round: broadcast the model out,
-    * aggregate the update back. The per-round k·dim collect is a
-    * trained-model constant, same as ivfTopK's cell table. `iters`
-    * bounds total cost explicitly; there is deliberately no per-round
-    * convergence job (one more scan per check — callers choose depth).
+    * aggregate the update back. `iters` bounds total cost explicitly;
+    * there is deliberately no per-round convergence job (one more scan
+    * per check — callers choose depth).
     *
     * Eager at plan-construction: running `iters` rounds executes
     * `iters` Spark jobs when CALLED (the returned frame's plan bakes
@@ -202,54 +210,123 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
   def kmeansFit(df: DataFrame, id: Column, vec: Column, k: Int,
       iters: Int): DataFrame = {
     require(k > 0, s"k must be positive; got $k")
+    lloydFit(df, id, vec, IndexedSeq(col("__v")), k, iters, "kmeansFit")
+      .drop("subspace")
+  }
+
+  /** Product-quantization trainer: k-means per length-`dim/m` subvector
+    * slice — the memory-compression half of an IVF-PQ index (IVF prunes
+    * WHICH rows a probe scores; PQ shrinks WHAT each scored row stores,
+    * `dim` floats → `m` small ints). Vectors that are not `dim` long
+    * fail loudly.
+    *
+    * Returns (subspace, cluster, dim, centroid, n) with `dim` the
+    * within-subspace index; feed it to [[pqEncode]] / [[pqTopK]]. Eager
+    * like any trainer (runs `iters` rounds when called). */
+  def pqFit(df: DataFrame, id: Column, vec: Column, dim: Int, m: Int,
+      ksub: Int, iters: Int): DataFrame = {
+    val parts = subvectors(col("__v"), dim, m)
+    require(ksub > 0, s"ksub must be positive; got $ksub")
+    lloydFit(df, id, vec, parts, ksub, iters, "pqFit")
+  }
+
+  /** The one Lloyd loop behind [[kmeansFit]] and [[pqFit]]. `parts` cuts
+    * the corpus vector `__v` into the slices its subspaces quantize.
+    *
+    * Seeds: the `k` rows with the smallest portable hash of `id` (id
+    * tiebreak), selected in ONE top-k pass and sliced for every
+    * subspace, quantized to exact micros (one IEEE multiply + floor +
+    * divide after the exact widening to double — bit-identical in any
+    * IEEE-754 engine, and every centroid the model ever has stays on the
+    * same exact-integer-derived footing as the round updates).
+    *
+    * One round runs ALL subspaces in ONE corpus scan: per row, one
+    * codegen'd NearestCells pass per slice against its baked sub-model,
+    * explode to (subspace, cluster, dim, component) — the same dim
+    * rows/input-row a single full-vector posexplode costs — and one
+    * map-side-combined hash agg of integer-micros means (order-free long
+    * sums, one double divide chain, the q21 oracle's derivation). A
+    * per-subspace union would scan the corpus m times per round; at
+    * 100 TB that factor is the difference between one pass and sixteen.
+    * Returns (subspace, cluster, dim, centroid, n). */
+  private def lloydFit(df: DataFrame, id: Column, vec: Column,
+      parts: IndexedSeq[Column], k: Int, iters: Int, what: String): DataFrame = {
     require(iters >= 1, s"iters must be >= 1; got $iters")
     val base = df.select(id.as("__id"), vec.as("__v"))
       .filter(col("__v").isNotNull)
     val seeds = base
       .orderBy(Portable.phash(concat(lit("km|"), col("__id").cast("string"))),
         col("__id"))
-      .limit(k).select(col("__v")).collect()
-    require(seeds.nonEmpty, "kmeansFit on an empty corpus")
-    // Seed centroids quantized to exact micros: float→double is exact,
-    // then one IEEE multiply + floor + one divide — bit-identical in any
-    // IEEE-754 engine (the raw float values would be portable too, but
-    // quantizing keeps EVERY centroid the model ever has on the same
-    // exact-integer-derived footing as the round updates).
-    var cents: IndexedSeq[(Int, Seq[Double])] = seeds.toIndexedSeq.zipWithIndex
-      .map { case (r, j) =>
-        j -> r.getSeq[Float](0).map(f => math.floor(f.toDouble * 1e6) / 1e6)
+      .limit(k).select(parts: _*).collect()
+    require(seeds.nonEmpty, s"$what on an empty corpus")
+    def round(ms: IndexedSeq[Cells]): DataFrame =
+      base.select(explode(array(parts.indices.map { s =>
+          struct(lit(s).as("subspace"), cellOf(parts(s), ms(s)).as("cluster"),
+            parts(s).as("sv"))
+        }: _*)).as("e"))
+        .select(col("e.subspace").as("subspace"), col("e.cluster").as("cluster"),
+          posexplode(col("e.sv")).as(Seq("dim", "__val")))
+        .groupBy(col("subspace"), col("cluster"), col("dim"))
+        .agg((sum(floor(col("__val").cast("double") * lit(1000000.0)).cast("long"))
+          .cast("double") / 1000000.0 / count(lit(1))).as("centroid"),
+          count(lit(1)).as("n"))
+    // Number read: array<float> embeddings and array<double> residual or
+    // normalized frames alike (doubleValue is the exact widening)
+    var model = round(parts.indices.map { s =>
+      seeds.toIndexedSeq.zipWithIndex.map { case (r, j) =>
+        j -> r.getSeq[Number](s).map(f => math.floor(f.doubleValue * 1e6) / 1e6)
       }
-    def assign(m: IndexedSeq[(Int, Seq[Double])]): DataFrame =
-      base.withColumn("cluster",
-        element_at(graft.functions.NearestCells(col("__v"),
-          m.map(_._2), m.map(_._1)), 1))
-    // integer-micros mean — order-free long sums, one double divide
-    // chain, same derivation as the q21 oracle
-    def update(assigned: DataFrame): DataFrame = assigned
-      .select(col("cluster"), posexplode(col("__v")).as(Seq("dim", "__val")))
-      .groupBy(col("cluster"), col("dim"))
-      .agg((sum(floor(col("__val").cast("double") * lit(1000000.0)).cast("long"))
-        .cast("double") / 1000000.0 / count(lit(1))).as("centroid"),
-        count(lit(1)).as("n"))
-    var model: DataFrame = update(assign(cents))
-    for (_ <- 2 to iters) {
-      cents = collectModel(model)
-      model = update(assign(cents))
-    }
+    })
+    for (_ <- 2 to iters) model = round(collectPqModel(model))
     model
   }
 
-  /** Collects a (cluster, dim, centroid) model table into the baked-
-    * constant form NearestCells wants: per-cluster dim-ordered vectors,
-    * cluster-ascending. */
-  private[graft] def collectModel(model: DataFrame): IndexedSeq[(Int, Seq[Double])] =
-    model
-      .groupBy(col("cluster"))
+  /** A model table's centroids as one dim-ordered `cvec` per `keys`. */
+  private def centroidVectors(model: DataFrame, keys: String*): DataFrame =
+    model.groupBy(keys.map(col): _*)
       .agg(array_sort(collect_list(struct(col("dim"), col("centroid")))).as("ps"))
-      .select(col("cluster"),
-        transform(col("ps"), p => p.getField("centroid")).as("cvec"))
-      .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-      .sortBy(_._1).toIndexedSeq
+      .select(keys.map(col) :+ transform(col("ps"), p => p.getField("centroid")).as("cvec"): _*)
+
+  /** Collects a (subspace, cluster, dim, centroid) model table: per
+    * subspace present, its cells. A trained-model constant:
+    * m·ksub·(dim/m) doubles total. */
+  private def collectCells(model: DataFrame): Map[Int, Cells] =
+    centroidVectors(model, "subspace", "cluster").collect()
+      .groupBy(_.getInt(0)).map { case (s, rs) =>
+        s -> rs.map(r => (r.getInt(1), r.getSeq[Double](2))).sortBy(_._1).toIndexedSeq
+      }
+
+  /** Collects a (cluster, dim, centroid) model table, the one-subspace
+    * case of a pq model; empty for an empty model. */
+  private[graft] def collectModel(model: DataFrame): IndexedSeq[(Int, Seq[Double])] =
+    collectCells(model.withColumn("subspace", lit(0))).getOrElse(0, IndexedSeq.empty)
+
+  /** Collects a pqFit model: subspace s's cells at index s. */
+  private def collectPqModel(model: DataFrame): IndexedSeq[Cells] = {
+    val bySub = collectCells(model)
+    require(bySub.nonEmpty, "pq model is empty")
+    (0 to bySub.keys.max).map { s =>
+      val cs = bySub.getOrElse(s, IndexedSeq.empty)
+      require(cs.nonEmpty, s"pq model has no centroids for subspace $s")
+      cs
+    }
+  }
+
+  /** [[collectModel]] for a coarse model, which must not be empty. */
+  private def coarseCells(model: DataFrame, what: String): Cells = {
+    val cents = collectModel(model)
+    require(cents.nonEmpty, s"$what with an empty coarse model")
+    cents
+  }
+
+  /** The labels of `cells`, nearest first (argmax sequential dot,
+    * label-asc ties) — one codegen'd [[graft.functions.NearestCells]]
+    * pass; element 1 is [[cellOf]]. */
+  private def nearest(vec: Column, cells: Cells): Column =
+    graft.functions.NearestCells(vec, cells.map(_._2), cells.map(_._1))
+
+  private def cellOf(vec: Column, cells: Cells): Column =
+    element_at(nearest(vec, cells), 1)
 
   /** The inference half of [[kmeansFit]]: tag each row with its
     * argmax-dot cluster from a trained model (collected once at call
@@ -264,9 +341,7 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
   def kmeansAssign(df: DataFrame, vec: Column, model: DataFrame): DataFrame = {
     val cents = collectModel(model)
     require(cents.nonEmpty, "kmeansAssign with an empty model")
-    df.withColumn("cluster",
-      element_at(graft.functions.NearestCells(vec,
-        cents.map(_._2), cents.map(_._1)), 1))
+    df.withColumn("cluster", cellOf(vec, cents))
   }
 
   /** The broadcast-join tier of [[kmeansAssign]]: identical output (same
@@ -282,117 +357,61 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     * [[kmeansAssign]]'s baked form stays preferable (no join node at
     * all). Null vectors get a null cluster on both paths. */
   def kmeansAssignJoin(df: DataFrame, vec: Column, model: DataFrame): DataFrame = {
-    val cells = model
-      .groupBy(col("cluster"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("centroid")))).as("ps"))
-      .select(struct(col("cluster"),
-        transform(col("ps"), p => p.getField("centroid")).as("cvec")).as("cell"))
-      .agg(array_sort(collect_list(col("cell"))).as("__cells"))
+    val cells = centroidVectors(model, "cluster")
+      .agg(array_sort(collect_list(struct(col("cluster"), col("cvec")))).as("__cells"))
     df.crossJoin(broadcast(cells))
       .withColumn("cluster", graft.functions.NearestCellDyn(vec, col("__cells")))
       .drop("__cells")
   }
 
-  /** Product-quantization trainer: one [[kmeansFit]] per length-`dim/m`
-    * subvector slice — the memory-compression half of an IVF-PQ index
-    * (IVF prunes WHICH rows a probe scores; PQ shrinks WHAT each scored
-    * row stores, `dim` floats → `m` small ints). All arithmetic is the
-    * kmeansFit family's engine-portable machinery (portable-hash seeds —
-    * the same `k` seed ROWS in every subspace — micros-quantized
-    * centroids, sequential-dot assignment, integer-micros means).
-    *
-    * Returns (subspace, cluster, dim, centroid, n) with `dim` the
-    * within-subspace index; feed it to [[pqEncode]] / [[pqTopK]]. Eager
-    * like any trainer (runs `m`·`iters` rounds when called). */
-  def pqFit(df: DataFrame, id: Column, vec: Column, dim: Int, m: Int,
-      ksub: Int, iters: Int): DataFrame = {
+  /** The `m` equal `dim/m` slices of `vec` that PQ training and encoding
+    * quantize. A non-null vector that is not `dim` long fails loudly, as
+    * SQ8's encode does: sliced as-is, a short one would be quantized on a
+    * prefix, its empty tail slices scoring all-zero dots and taking the
+    * lowest label. */
+  private def subvectors(vec: Column, dim: Int, m: Int): IndexedSeq[Column] = {
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
-    require(ksub > 0, s"ksub must be positive; got $ksub")
-    require(iters >= 1, s"iters must be >= 1; got $iters")
-    val sub = dim / m
-    val base = df.select(id.as("__id"), vec.as("__v"))
-      .filter(col("__v").isNotNull)
-    // The SAME ksub hash-min seed rows serve every subspace (sliced per
-    // subspace) — selected in ONE top-k pass, not m. Arithmetic is
-    // bit-identical to the per-subspace kmeansFit this fuses: quantized
-    // seed slices, argmax sequential-dot assignment (cluster-asc ties),
-    // integer-micros means, empty clusters dropped.
-    val seedRows = base
-      .orderBy(Portable.phash(concat(lit("km|"), col("__id").cast("string"))),
-        col("__id"))
-      .limit(ksub).select(col("__v")).collect()
-    require(seedRows.nonEmpty, "pqFit on an empty corpus")
-    // Generic element read (works for array<float> embeddings AND the
-    // array<double> residual frames pqFitResidual feeds through here):
-    // Float.doubleValue is the same exact widening the float path took.
-    var models: IndexedSeq[IndexedSeq[(Int, Seq[Double])]] =
-      IndexedSeq.tabulate(m) { s =>
-        seedRows.toIndexedSeq.zipWithIndex.map { case (r, j) =>
-          j -> r.getSeq[Number](0).slice(s * sub, s * sub + sub)
-            .map(f => math.floor(f.doubleValue * 1e6) / 1e6)
-        }
-      }
-    // One Lloyd round for ALL m subspaces in ONE corpus scan: per row,
-    // m codegen'd NearestCells passes (each over its slice against its
-    // baked sub-model), explode to (subspace, cluster, dim, component) —
-    // the same dim rows/input-row a single full-vector posexplode costs —
-    // and one map-side-combined hash agg. The unioned per-subspace form
-    // this replaces scanned the corpus m times per round; at 100 TB that
-    // factor is the difference between one pass and sixteen.
-    def round(ms: IndexedSeq[IndexedSeq[(Int, Seq[Double])]]): DataFrame =
-      base.select(explode(array((0 until m).map { s =>
-          struct(lit(s).as("subspace"),
-            element_at(graft.functions.NearestCells(
-              slice(col("__v"), s * sub + 1, sub),
-              ms(s).map(_._2), ms(s).map(_._1)), 1).as("cluster"),
-            slice(col("__v"), s * sub + 1, sub).as("sv"))
-        }: _*)).as("e"))
-        .select(col("e.subspace").as("subspace"), col("e.cluster").as("cluster"),
-          posexplode(col("e.sv")).as(Seq("dim", "__val")))
-        .groupBy(col("subspace"), col("cluster"), col("dim"))
-        .agg((sum(floor(col("__val").cast("double") * lit(1000000.0)).cast("long"))
-          .cast("double") / 1000000.0 / count(lit(1))).as("centroid"),
-          count(lit(1)).as("n"))
-    var model: DataFrame = round(models)
-    for (_ <- 2 to iters) {
-      models = collectPqModel(model).map { case (labels, cvecs) =>
-        (labels zip cvecs).toIndexedSeq
-      }
-      model = round(models)
-    }
-    model
+    val v = when(vec.isNull || size(vec) === dim, vec).otherwise(raise_error(concat(
+      lit(s"pq: expected $dim-component vectors, got "), size(vec).cast("string"))))
+    (0 until m).map(s => slice(v, s * (dim / m) + 1, dim / m))
   }
 
-  /** Collects a pqFit model into per-subspace (ascending labels, matching
-    * centroid vectors) — the baked-constant form the PQ expressions want.
-    * A trained-model constant: m·ksub·(dim/m) doubles total. */
-  private def collectPqModel(model: DataFrame): IndexedSeq[(IndexedSeq[Int], IndexedSeq[Seq[Double]])] = {
-    val rows = model
-      .groupBy(col("subspace"), col("cluster"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("centroid")))).as("ps"))
-      .select(col("subspace"), col("cluster"),
-        transform(col("ps"), p => p.getField("centroid")).as("cvec"))
-      .collect()
-    require(rows.nonEmpty, "pq model is empty")
-    val bySub = rows.groupBy(_.getInt(0))
-    (0 to bySub.keys.max).map { s =>
-      val cs = bySub.getOrElse(s, Array.empty[org.apache.spark.sql.Row])
-        .map(r => (r.getInt(1), r.getSeq[Double](2))).sortBy(_._1)
-      require(cs.nonEmpty, s"pq model has no centroids for subspace $s")
-      (cs.map(_._1).toIndexedSeq, cs.map(_._2).toIndexedSeq)
-    }
+  /** The PQ encode core: `codes` (array<int>), one sub-centroid id per
+    * subspace. */
+  private def pqCodesCol(vec: Column, mdl: IndexedSeq[Cells], dim: Int): Column =
+    array(subvectors(vec, dim, mdl.size).zip(mdl).map { case (v, c) => cellOf(v, c) }: _*)
+
+  /** ADC score of probe `__pv` against PQ `codes`: one codegen'd
+    * [[graft.functions.PqAdcScore]] call — the dot of the probe against
+    * the row's reconstruction, never materializing it. */
+  private def adcOf(codes: Column, mdl: IndexedSeq[Cells]): Column =
+    graft.functions.PqAdcScore(col("__pv"), codes, mdl.map(_.map(_._2)),
+      mdl.map(_.map(_._1)))
+
+  /** An inline top-k's two inputs from one corpus: every row as
+    * (id, __v, __isp) and the `isProbe` rows as (probe_id, __pv). */
+  private[api] def corpusAndProbes(corpus: DataFrame, id: Column, vec: Column,
+      isProbe: Column): (DataFrame, DataFrame) = {
+    val e = corpus.select(id.as("id"), vec.as("__v"), isProbe.as("__isp"))
+    (e, e.filter(col("__isp")).select(col("id").as("probe_id"), col("__v").as("__pv")))
   }
 
-  private def pqCodesCol(vec: Column,
-      mdl: IndexedSeq[(IndexedSeq[Int], IndexedSeq[Seq[Double]])], dim: Int): Column = {
-    val m = mdl.size
-    require(dim % m == 0, s"dim $dim must split into m=$m equal subspaces")
-    val sub = dim / m
-    array((0 until m).map { s =>
-      element_at(graft.functions.NearestCells(
-        slice(vec, s * sub + 1, sub), mdl(s)._2, mdl(s)._1), 1)
-    }: _*)
-  }
+  /** The ranking every ANN top-k ends in: per probe, (`score` desc,
+    * id asc), the first `k` rows as (probe_id, id, rank, `keep`…). */
+  private def rankTop(scored: DataFrame, score: String, k: Int,
+      keep: String*): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy(col("probe_id")).orderBy(desc(score), col("id"))))
+      .filter(col("rank") <= k)
+      .select((Seq("probe_id", "id", "rank") ++ keep).map(col): _*)
+
+  /** The flat (unrouted) scoring core of PQ and SQ8: every coded
+    * (id, codes) row against every broadcast (probe_id, __pv) probe —
+    * the non-equi shape of [[knn]] — scored into column `name`. */
+  private[api] def flatTopK(c: DataFrame, p: DataFrame, name: String,
+      score: Column, k: Int): DataFrame =
+    rankTop(c.join(broadcast(p), col("id") =!= col("probe_id"))
+      .withColumn(name, score), name, k, name)
 
   /** The encode half of PQ: adds `codes` (array<int>, one sub-centroid id
     * per subspace — argmax sequential dot, cluster-asc ties, one codegen'd
@@ -401,118 +420,65 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
   def pqEncode(df: DataFrame, vec: Column, model: DataFrame, dim: Int): DataFrame =
     df.withColumn("codes", pqCodesCol(vec, collectPqModel(model), dim))
 
-  /** PQ approximate top-k by asymmetric distance (ADC): corpus rows carry
-    * ONLY their codes (the probe keeps its full vector), each candidate is
-    * scored by one codegen'd [[graft.functions.PqAdcScore]] — the dot of
-    * the probe against the row's reconstruction, never materializing it.
-    *
-    * Scale shape: the scan side is (id, m ints) — the point of PQ: at
+  /** PQ approximate top-k by asymmetric distance (ADC), inline form:
+    * [[pqEncode]] then [[pqTopKCoded]] over one corpus, the model
+    * collected once. The scan side is (id, m ints) — the point of PQ: at
     * 100 TB the ADC pass reads the compact code column, not the `dim`
-    * floats; probes broadcast (same non-equi shape as [[knn]], so this
-    * scans corpus×probes — [[ivfPqTopK]] is the composed form that also
-    * prunes the corpus side via coarse-cell routing). Ordering: adc desc,
-    * id asc — deterministic. */
+    * floats; probes broadcast, so this scans corpus×probes
+    * ([[ivfPqTopK]] also prunes the corpus side via coarse-cell
+    * routing). Ordering: adc desc, id asc — deterministic. */
   def pqTopK(corpus: DataFrame, id: Column, vec: Column, isProbe: Column,
       model: DataFrame, dim: Int, k: Int): DataFrame = {
     val mdl = collectPqModel(model)
-    val e = corpus.select(id.as("__vid"), vec.as("__v"), isProbe.as("__isp"))
-    val coded = e.select(col("__vid"), pqCodesCol(col("__v"), mdl, dim).as("codes"))
-    val probes = e.filter(col("__isp"))
-      .select(col("__vid").as("probe_id"), col("__v").as("__pv"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("adc"), col("__vid"))
-    coded.join(broadcast(probes), col("__vid") =!= col("probe_id"))
-      .withColumn("adc", graft.functions.PqAdcScore(col("__pv"), col("codes"),
-        mdl.map(_._2), mdl.map(_._1)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("adc"))
+    val (e, probes) = corpusAndProbes(corpus, id, vec, isProbe)
+    flatTopK(e.select(col("id"), pqCodesCol(col("__v"), mdl, dim).as("codes")),
+      probes, "adc", adcOf(col("codes"), mdl), k)
   }
 
   /** The at-rest search entry point for PQ: scores STORED [[pqEncode]]
     * output (corpus = id + codes — the embeddings can be dropped after
-    * encoding) against full-vector probes. Identical scoring/ordering to
-    * [[pqTopK]] (spec-asserted equal); this overload is what makes the
-    * compression story real — at 100 TB the corpus keeps `4·m` bytes/row
-    * and only probes retain floats. */
+    * encoding) against full-vector probes, as [[pqTopK]] does. At 100 TB
+    * the corpus keeps `4·m` bytes/row and only probes retain floats. */
   def pqTopKCoded(coded: DataFrame, codedId: Column, codes: Column,
       probes: DataFrame, probeId: Column, probeVec: Column,
       model: DataFrame, k: Int): DataFrame = {
     val mdl = collectPqModel(model)
-    val c = coded.select(codedId.as("__vid"), codes.as("__codes"))
-    val p = probes.select(probeId.as("probe_id"), probeVec.as("__pv"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("adc"), col("__vid"))
-    c.join(broadcast(p), col("__vid") =!= col("probe_id"))
-      .withColumn("adc", graft.functions.PqAdcScore(col("__pv"), col("__codes"),
-        mdl.map(_._2), mdl.map(_._1)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("adc"))
+    flatTopK(coded.select(codedId.as("id"), codes.as("codes")),
+      probes.select(probeId.as("probe_id"), probeVec.as("__pv")),
+      "adc", adcOf(col("codes"), mdl), k)
   }
 
   /** The composed IVF×PQ index — the full 100 TB ANN story in one
     * operator: a coarse [[kmeansFit]] model routes (IVF prunes WHICH rows
     * a probe scores), a [[pqFit]] model compresses (PQ shrinks WHAT each
     * scored row stores), and the search is an equi-join on cell id where
-    * the corpus side carries ONLY (cell, id, m ints).
-    *
-    * Per row, ONE codegen'd NearestCells pass against the baked coarse
-    * model yields both the corpus assignment (element 1) and each probe's
-    * `nprobe` search cells (elements 1..nprobe) — same zero-extra-shuffle
-    * trick as [[ivfTopK]]. ADC work per probe is ~corpus·nprobe/K instead
-    * of [[pqTopK]]'s full corpus scan. Both model collects are
-    * trained-model constants. Ordering: adc desc, id asc — deterministic.
+    * the corpus side carries ONLY (cell, id, m ints). Inline form of
+    * [[ivfPqEncode]] then [[ivfPqTopKCoded]], both models collected once.
+    * ADC work per probe is ~corpus·nprobe/K instead of [[pqTopK]]'s full
+    * corpus scan. Ordering: adc desc, id asc — deterministic.
     *
     * `rerank` > 0 switches on the standard TWO-STAGE search: the ADC pass
     * shortlists `rerank` candidates per probe (cheap, quantization-
     * approximate), then the shortlist alone is scored by EXACT cosine
     * against the stored vectors and the final `k` keep the exact order
-    * (sim desc, id asc). Recall@k improves strictly whenever ADC's
-    * code-level ordering misranks inside the shortlist — the usual case
-    * at small m — and the exact work is |probes|·rerank dot products
-    * instead of the corpus scan a fully-exact search would need: the
-    * shortlist (with its probe vectors) broadcasts back onto ONE pass
-    * over the vector table. Output gains a `sim` column (the exact
-    * score; `adc` stays for diagnostics) and `rank` becomes the exact
-    * rank. `rerank = 0` (default) = raw-ADC ranks, output unchanged. */
+    * (sim desc, id asc) — [[rerankTopK]]'s tail. Recall@k improves
+    * strictly whenever ADC's code-level ordering misranks inside the
+    * shortlist — the usual case at small m — and the exact work is
+    * |probes|·rerank dot products instead of the corpus scan a fully-exact
+    * search would need. Output gains a `sim` column (the exact score;
+    * `adc` stays for diagnostics) and `rank` becomes the exact rank.
+    * `rerank = 0` (default) = raw-ADC ranks, output unchanged. */
   def ivfPqTopK(corpus: DataFrame, id: Column, vec: Column, isProbe: Column,
       coarseModel: DataFrame, pqModel: DataFrame, dim: Int, k: Int,
       nprobe: Int = 1, rerank: Int = 0): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
     require(rerank == 0 || rerank >= k,
       s"rerank shortlist must be 0 (off) or >= k=$k; got $rerank")
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "ivfPqTopK with an empty coarse model")
+    val cents = coarseCells(coarseModel, "ivfPqTopK")
     val mdl = collectPqModel(pqModel)
-    val e = corpus.select(id.as("__vid"), vec.as("__v"), isProbe.as("__isp"))
-    val scored = e.withColumn("__sc", graft.functions.NearestCells(col("__v"),
-      cents.map(_._2), cents.map(_._1)))
-    val coded = scored.select(col("__vid"),
-      element_at(col("__sc"), 1).as("cell"),
-      pqCodesCol(col("__v"), mdl, dim).as("codes"))
-    val probes = scored.filter(col("__isp"))
-      .select(col("__vid").as("probe_id"), col("__v").as("__pv"),
-        explode(slice(col("__sc"), 1, nprobe)).as("cell"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("adc"), col("__vid"))
-    val adcRanked = coded.join(broadcast(probes), Seq("cell"))
-      .filter(col("__vid") =!= col("probe_id"))
-      .withColumn("adc", graft.functions.PqAdcScore(col("__pv"), col("codes"),
-        mdl.map(_._2), mdl.map(_._1)))
-      .withColumn("rank", row_number().over(w))
-    if (rerank == 0)
-      adcRanked.filter(col("rank") <= k)
-        .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("adc"))
-    else {
-      val shortlist = adcRanked.filter(col("rank") <= rerank)
-        .select(col("probe_id"), col("__pv"), col("__vid"), col("adc"))
-      val w2 = Window.partitionBy(col("probe_id")).orderBy(desc("sim"), col("__vid"))
-      // one scan of the vector table with the tiny shortlist broadcast in
-      e.select(col("__vid"), col("__v")).join(broadcast(shortlist), Seq("__vid"))
-        .withColumn("sim", CosineSim(col("__pv"), col("__v")))
-        .withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select(col("probe_id"), col("__vid").as("id"), col("rank"),
-          col("adc"), col("sim"))
-    }
+    val (e, probes) = corpusAndProbes(corpus, id, vec, isProbe)
+    adcTopK(ivfPqScored(ivfPqCodes(col("id"), col("__v"), cents, mdl, dim)(e),
+      probes, cents, mdl, nprobe), e, k, rerank)
   }
 
   /** The standalone exact re-rank stage for the STORED-index path: takes
@@ -526,17 +492,46 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     * k. Ordering: sim desc, id asc — deterministic. */
   def rerankTopK(shortlist: DataFrame, slProbeId: Column, slCandId: Column,
       probes: DataFrame, probeId: Column, probeVec: Column,
-      vectors: DataFrame, vecId: Column, vecCol: Column, k: Int): DataFrame = {
-    val sl = shortlist.select(slProbeId.as("probe_id"), slCandId.as("id"))
-    val p = probes.select(probeId.as("probe_id"), probeVec.as("__pv"))
-    val v = vectors.select(vecId.as("id"), vecCol.as("__cv"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("sim"), col("id"))
-    v.join(broadcast(sl.join(broadcast(p), Seq("probe_id"))), Seq("id"))
-      .withColumn("sim", CosineSim(col("__pv"), col("__cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("id"), col("rank"), col("sim"))
-  }
+      vectors: DataFrame, vecId: Column, vecCol: Column, k: Int): DataFrame =
+    exactRerank(vectors.select(vecId.as("id"), vecCol.as("__cv")),
+      shortlist.select(slProbeId.as("probe_id"), slCandId.as("id"))
+        .join(broadcast(probes.select(probeId.as("probe_id"), probeVec.as("__pv"))),
+          Seq("probe_id")), k)
+
+  /** The one exact-rerank tail: ONE pass over the vector table `v`
+    * (id, __cv) with the shortlist `sl` (probe_id, id, __pv, `keep`…)
+    * broadcast in, exact cosine, the top `k` per probe by (sim desc,
+    * id asc). */
+  private def exactRerank(v: DataFrame, sl: DataFrame, k: Int,
+      keep: String*): DataFrame =
+    rankTop(v.join(broadcast(sl), Seq("id"))
+      .withColumn("sim", CosineSim(col("__pv"), col("__cv"))), "sim", k, keep :+ "sim": _*)
+
+  /** The inline IVF tail: the ADC top `k`, or with `rerank` > 0 the ADC
+    * top `rerank` re-ranked by [[exactRerank]] over the corpus `e`. */
+  private def adcTopK(scored: DataFrame, e: DataFrame, k: Int, rerank: Int): DataFrame =
+    if (rerank == 0) rankTop(scored, "adc", k, "adc")
+    else exactRerank(e.select(col("id"), col("__v").as("__cv")),
+      rankTop(scored, "adc", rerank, "__pv", "adc").drop("rank"), k, "adc")
+
+  /** Probe-cell routing: each (probe_id, __pv) probe once per its `nprobe`
+    * nearest coarse cells. */
+  private def routed(p: DataFrame, cents: Cells, nprobe: Int): DataFrame =
+    p.withColumn("cell", explode(slice(nearest(col("__pv"), cents), 1, nprobe)))
+
+  /** The raw IVF×PQ scoring core: stored (id, cell, codes) rows equi-join
+    * the routed, broadcast probes on cell and score by ADC. */
+  private def ivfPqScored(c: DataFrame, p: DataFrame, cents: Cells,
+      mdl: IndexedSeq[Cells], nprobe: Int): DataFrame =
+    c.join(broadcast(routed(p, cents, nprobe)), Seq("cell"))
+      .filter(col("id") =!= col("probe_id"))
+      .withColumn("adc", adcOf(col("codes"), mdl))
+
+  /** The raw IVF×PQ encode core: (id, cell, codes). */
+  private def ivfPqCodes(id: Column, vec: Column, cents: Cells,
+      mdl: IndexedSeq[Cells], dim: Int): DataFrame => DataFrame =
+    _.select(id.as("id"), cellOf(vec, cents).as("cell"),
+      pqCodesCol(vec, mdl, dim).as("codes"))
 
   /** The build half of a STORED IVF×PQ index: tag each row with its
     * coarse cell (argmax-dot against the baked [[kmeansFit]] model) and
@@ -557,13 +552,28 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
     * [[graft.streaming.StreamingOps.ivfPqAppendSink]]). */
   def ivfPqEncoder(id: Column, vec: Column, coarseModel: DataFrame,
       pqModel: DataFrame, dim: Int): DataFrame => DataFrame = {
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "ivfPqEncode with an empty coarse model")
+    val cents = coarseCells(coarseModel, "ivfPqEncode")
+    ivfPqCodes(id, vec, cents, collectPqModel(pqModel), dim)
+  }
+
+  /** The search half over a STORED index ([[ivfPqEncode]] output read
+    * back — id + cell + codes, NO vectors): probes carry full vectors and
+    * route to their `nprobe` nearest cells via the same baked coarse
+    * model; ADC scores only inside probed cells, as [[ivfPqTopK]] does.
+    * With [[pqTopKCoded]] this makes the whole index family
+    * build-once/search-many: at 100 TB the index build is one pass over
+    * the embeddings, and every search afterwards reads only the compact
+    * code table plus two tiny model tables. */
+  def ivfPqTopKCoded(coded: DataFrame, codedId: Column, cell: Column,
+      codes: Column, probes: DataFrame, probeId: Column, probeVec: Column,
+      coarseModel: DataFrame, pqModel: DataFrame, k: Int,
+      nprobe: Int = 1): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
+    val cents = coarseCells(coarseModel, "ivfPqTopKCoded")
     val mdl = collectPqModel(pqModel)
-    df => df.select(id.as("id"),
-      element_at(graft.functions.NearestCells(vec,
-        cents.map(_._2), cents.map(_._1)), 1).as("cell"),
-      pqCodesCol(vec, mdl, dim).as("codes"))
+    rankTop(ivfPqScored(coded.select(codedId.as("id"), cell.as("cell"), codes.as("codes")),
+      probes.select(probeId.as("probe_id"), probeVec.as("__pv")), cents, mdl, nprobe),
+      "adc", k, "adc")
   }
 
   /** Coarse-model maintenance for a STORED index: re-route every at-rest
@@ -583,31 +593,132 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
   def reindexCells(coded: DataFrame, codedId: Column, codes: Column,
       vectors: DataFrame, vecId: Column, vecCol: Column,
       coarseModel: DataFrame): DataFrame = {
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "reindexCells with an empty coarse model")
+    val cents = coarseCells(coarseModel, "reindexCells")
     val c = coded.select(codedId.as("id"), codes.as("codes"))
     val v = vectors.select(vecId.as("id"), vecCol.as("__v"))
     c.join(v, Seq("id"))
-      .select(col("id"),
-        element_at(graft.functions.NearestCells(col("__v"),
-          cents.map(_._2), cents.map(_._1)), 1).as("cell"),
-        col("codes"))
+      .select(col("id"), cellOf(col("__v"), cents).as("cell"), col("codes"))
   }
 
-  /** Index compaction — the maintenance terminal of the at-rest ANN
-    * lifecycle (append → [[reindexCells]] → compact): rewrite the stored
-    * (id, cell, codes) table into a CELL-PARTITIONED layout with each
-    * cell's rows co-located in one task (`repartition(cell)` →
-    * `partitionBy("cell")` ⇒ exactly one file per cell instead of the
-    * one-file-per-(micro-batch × task) sprawl `ivfPqAppendSink`
-    * accumulates). The payoff is more than file count: the search side
-    * routes cells through a BROADCAST join ([[ivfPqTopKCoded]]), and a
-    * broadcast join against a partition column triggers Spark's dynamic
-    * partition pruning — after compaction a search with nprobe=p reads
-    * ~p/K of the index from disk instead of scanning everything and
-    * filtering (PqSpec asserts the `dynamicpruning` subquery in the
-    * plan and search parity with the uncompacted table). Pure layout:
-    * rows, schema, and every search result are unchanged. */
+  /** Residual product-quantization trainer — the opt-in recall tier the
+    * SURVEY §2.4 design note reserves (vs the default raw-vector pqFit
+    * lifecycle): quantize `v − c(v)` (each vector minus its coarse cell's
+    * centroid, the classic IVFADC encoding) instead of `v` itself. Inside
+    * a cell, residual magnitudes span a CELL radius, not a corpus radius,
+    * so the same (m, ksub) codebook budget spends its resolution on a
+    * smaller ball — measured on the oracle fixture (RecallSpec) the
+    * residual tier beats the equal-bytes rich tier's recall@3.
+    *
+    * The trade the default avoids: residual codes are a function of
+    * (vector, coarse model, pq model) — a coarse retrain invalidates every
+    * stored code (no [[reindexCells]] cheap path), which is why raw-vector
+    * PQ remains the default lifecycle and this tier is opt-in for the
+    * recall-critical case with a FROZEN coarse model.
+    *
+    * Mechanics: route each row (baked NearestCells argmax), subtract the
+    * selected centroid (one codegen'd [[graft.functions.CellResidual]]
+    * pass — a single IEEE subtract per component, bit-portable), then the
+    * standard [[pqFit]] machinery trains on the residual frame (same
+    * portable-hash seed rows — the hash is over the ids, which the
+    * residual frame shares). Output schema matches [[pqFit]]. */
+  def pqFitResidual(df: DataFrame, id: Column, vec: Column,
+      coarseModel: DataFrame, dim: Int, m: Int, ksub: Int,
+      iters: Int): DataFrame = {
+    val cents = coarseCells(coarseModel, "pqFitResidual")
+    val resid = df
+      .select(id.as("__rid"), vec.as("__fv"))
+      .withColumn("__cell", cellOf(col("__fv"), cents))
+      .select(col("__rid"), graft.functions.CellResidual(col("__fv"),
+        col("__cell"), cents.map(_._2), cents.map(_._1)).as("__rv"))
+    pqFit(resid, col("__rid"), col("__rv"), dim, m, ksub, iters)
+  }
+
+  /** The residual IVF×PQ encode core: (id, cell, codes of `v − c(v)`). */
+  private def ivfRpqCodes(id: Column, vec: Column, cents: Cells,
+      mdl: IndexedSeq[Cells], dim: Int): DataFrame => DataFrame =
+    _.select(id.as("id"), vec.as("__fv"))
+      .withColumn("cell", cellOf(col("__fv"), cents))
+      .withColumn("__rv", graft.functions.CellResidual(col("__fv"),
+        col("cell"), cents.map(_._2), cents.map(_._1)))
+      .select(col("id"), col("cell"), pqCodesCol(col("__rv"), mdl, dim).as("codes"))
+
+  /** The residual IVF×PQ scoring core: [[ivfPqScored]]'s join, with the
+    * score reconstructed through the cell, `adc = ⟨p, c(v)⟩ + ⟨p, r̂(v)⟩`.
+    * The cell-centroid dot comes from one [[graft.functions.PlaneDots]]
+    * pass per probe against the baked coarse model, i.e. nprobe values
+    * per probe, not per candidate; the residual ADC is one codegen'd call
+    * per candidate. Every candidate in a probed cell shares the celldot
+    * term, so the per-candidate work is exactly the raw tier's. */
+  private def ivfRpqScored(c: DataFrame, p: DataFrame, cents: Cells,
+      mdl: IndexedSeq[Cells], nprobe: Int): DataFrame = {
+    val probes = routed(p.withColumn("__dots",
+        graft.functions.PlaneDots(col("__pv"), cents.map(_._2))), cents, nprobe)
+      .withColumn("celldot", element_at(col("__dots"), array_position(
+        array(cents.map(c => lit(c._1)): _*), col("cell")).cast("int")))
+      .drop("__dots")
+    c.join(broadcast(probes), Seq("cell"))
+      .filter(col("id") =!= col("probe_id"))
+      .withColumn("adc", col("celldot") + adcOf(col("codes"), mdl))
+  }
+
+  /** The build half of a STORED residual-PQ (IVFADC) index: tag each row
+    * with its coarse cell and its RESIDUAL codes — same (id, cell, codes)
+    * persistence shape as [[ivfPqEncode]], same narrow zero-shuffle
+    * projection, but `codes` quantize `v − c(v)` under a [[pqFitResidual]]
+    * model. The coarse model must be the SAME frozen model the pq model
+    * was trained against (codes are meaningless under any other). */
+  def ivfRpqEncode(df: DataFrame, id: Column, vec: Column,
+      coarseModel: DataFrame, rpqModel: DataFrame, dim: Int): DataFrame =
+    ivfRpqEncoder(id, vec, coarseModel, rpqModel, dim)(df)
+
+  /** The reusable-encoder form of [[ivfRpqEncode]] (the residual twin of
+    * [[ivfPqEncoder]]): collects both frozen models ONCE and returns a
+    * pure `DataFrame => DataFrame`. Residual encode is still a pure
+    * per-row function of the frozen (coarse, residual-pq) model PAIR —
+    * codes never depend on other rows — so append-then-search equals
+    * rebuild-then-search exactly, same as the raw tier
+    * ([[graft.streaming.StreamingOps.ivfRpqAppendSink]], spec-asserted).
+    * The lifecycle asymmetry is only in RETRAINS: a new coarse model
+    * invalidates residual codes (no [[reindexCells]] path). */
+  def ivfRpqEncoder(id: Column, vec: Column, coarseModel: DataFrame,
+      rpqModel: DataFrame, dim: Int): DataFrame => DataFrame = {
+    val cents = coarseCells(coarseModel, "ivfRpqEncode")
+    ivfRpqCodes(id, vec, cents, collectPqModel(rpqModel), dim)
+  }
+
+  /** Residual-PQ (IVFADC) search, inline form of [[ivfRpqEncode]] then
+    * [[ivfRpqTopKCoded]], both models collected once: [[ivfPqTopK]]'s
+    * routing and join shape, scored through the cell. Ordering: adc
+    * desc, id asc. `rerank` as in [[ivfPqTopK]]. */
+  def ivfRpqTopK(corpus: DataFrame, id: Column, vec: Column, isProbe: Column,
+      coarseModel: DataFrame, rpqModel: DataFrame, dim: Int, k: Int,
+      nprobe: Int = 1, rerank: Int = 0): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
+    require(rerank == 0 || rerank >= k,
+      s"rerank shortlist must be 0 (off) or >= k=$k; got $rerank")
+    val cents = coarseCells(coarseModel, "ivfRpqTopK")
+    val mdl = collectPqModel(rpqModel)
+    val (e, probes) = corpusAndProbes(corpus, id, vec, isProbe)
+    adcTopK(ivfRpqScored(ivfRpqCodes(col("id"), col("__v"), cents, mdl, dim)(e),
+      probes, cents, mdl, nprobe), e, k, rerank)
+  }
+
+  /** The search half over a STORED residual index ([[ivfRpqEncode]] output
+    * read back — id + cell + codes, NO vectors): [[ivfPqTopKCoded]]'s
+    * broadcast-route / DPP-friendly cell equi-join, scored through the
+    * cell as [[ivfRpqTopK]] does. */
+  def ivfRpqTopKCoded(coded: DataFrame, codedId: Column, cell: Column,
+      codes: Column, probes: DataFrame, probeId: Column, probeVec: Column,
+      coarseModel: DataFrame, rpqModel: DataFrame, k: Int,
+      nprobe: Int = 1): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
+    val cents = coarseCells(coarseModel, "ivfRpqTopKCoded")
+    val mdl = collectPqModel(rpqModel)
+    rankTop(ivfRpqScored(coded.select(codedId.as("id"), cell.as("cell"), codes.as("codes")),
+      probes.select(probeId.as("probe_id"), probeVec.as("__pv")), cents, mdl, nprobe),
+      "adc", k, "adc")
+  }
+
   /** Z-ORDER curve value of two pre-normalized coordinates — the
     * multi-column data-layout primitive (the Delta/Iceberg OPTIMIZE
     * ZORDER idea as a plain column): interleave the low `bits` bits of
@@ -794,6 +905,20 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
       .write.mode("overwrite").parquet(path)
   }
 
+  /** Index compaction — the maintenance terminal of the at-rest ANN
+    * lifecycle (append → [[reindexCells]] → compact): rewrite the stored
+    * (id, cell, codes) table into a CELL-PARTITIONED layout with each
+    * cell's rows co-located in one task (`repartition(cell)` →
+    * `partitionBy("cell")` ⇒ exactly one file per cell instead of the
+    * one-file-per-(micro-batch × task) sprawl `ivfPqAppendSink`
+    * accumulates). The payoff is more than file count: the search side
+    * routes cells through a BROADCAST join ([[ivfPqTopKCoded]]), and a
+    * broadcast join against a partition column triggers Spark's dynamic
+    * partition pruning — after compaction a search with nprobe=p reads
+    * ~p/K of the index from disk instead of scanning everything and
+    * filtering (PqSpec asserts the `dynamicpruning` subquery in the
+    * plan and search parity with the uncompacted table). Pure layout:
+    * rows, schema, and every search result are unchanged. */
   def compactIndex(spark: SparkSession, inPath: String, outPath: String): Unit =
     Tables.parquet(spark, inPath)
       .repartition(col("cell"))
@@ -883,199 +1008,6 @@ private[api] trait SimilarityApi { self: GraftOps.type =>
       .groupBy(col("__sh"))
       .agg(sum(col("__df")).as("__df"), sum(col("__n")).as("__n"))
       .write.mode("overwrite").parquet(outPath)
-
-  /** The search half over a STORED index ([[ivfPqEncode]] output read
-    * back — id + cell + codes, NO vectors): probes carry full vectors and
-    * route to their `nprobe` nearest cells via the same baked coarse
-    * model; ADC scores only inside probed cells. Spec-asserted equal to
-    * the inline [[ivfPqTopK]] — together with [[pqTopKCoded]] this makes
-    * the whole index family build-once/search-many: at 100 TB the index
-    * build is one pass over the embeddings, and every search afterwards
-    * reads only the compact code table plus two tiny model tables. */
-  def ivfPqTopKCoded(coded: DataFrame, codedId: Column, cell: Column,
-      codes: Column, probes: DataFrame, probeId: Column, probeVec: Column,
-      coarseModel: DataFrame, pqModel: DataFrame, k: Int,
-      nprobe: Int = 1): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "ivfPqTopKCoded with an empty coarse model")
-    val mdl = collectPqModel(pqModel)
-    val c = coded.select(codedId.as("__vid"), cell.as("cell"), codes.as("__codes"))
-    val p = probes
-      .select(probeId.as("probe_id"), probeVec.as("__pv"),
-        explode(slice(graft.functions.NearestCells(probeVec,
-          cents.map(_._2), cents.map(_._1)), 1, nprobe)).as("cell"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("adc"), col("__vid"))
-    c.join(broadcast(p), Seq("cell"))
-      .filter(col("__vid") =!= col("probe_id"))
-      .withColumn("adc", graft.functions.PqAdcScore(col("__pv"), col("__codes"),
-        mdl.map(_._2), mdl.map(_._1)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("adc"))
-  }
-
-  /** Residual product-quantization trainer — the opt-in recall tier the
-    * SURVEY §2.4 design note reserves (vs the default raw-vector pqFit
-    * lifecycle): quantize `v − c(v)` (each vector minus its coarse cell's
-    * centroid, the classic IVFADC encoding) instead of `v` itself. Inside
-    * a cell, residual magnitudes span a CELL radius, not a corpus radius,
-    * so the same (m, ksub) codebook budget spends its resolution on a
-    * smaller ball — measured on the oracle fixture (RecallSpec) the
-    * residual tier beats the equal-bytes rich tier's recall@3.
-    *
-    * The trade the default avoids: residual codes are a function of
-    * (vector, coarse model, pq model) — a coarse retrain invalidates every
-    * stored code (no [[reindexCells]] cheap path), which is why raw-vector
-    * PQ remains the default lifecycle and this tier is opt-in for the
-    * recall-critical case with a FROZEN coarse model.
-    *
-    * Mechanics: route each row (baked NearestCells argmax), subtract the
-    * selected centroid (one codegen'd [[graft.functions.CellResidual]]
-    * pass — a single IEEE subtract per component, bit-portable), then the
-    * standard [[pqFit]] machinery trains on the residual frame (same
-    * portable-hash seed rows — the hash is over the ids, which the
-    * residual frame shares). Output schema matches [[pqFit]]. */
-  def pqFitResidual(df: DataFrame, id: Column, vec: Column,
-      coarseModel: DataFrame, dim: Int, m: Int, ksub: Int,
-      iters: Int): DataFrame = {
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "pqFitResidual with an empty coarse model")
-    val resid = df
-      .select(id.as("__rid"), vec.as("__fv"))
-      .withColumn("__cell", element_at(graft.functions.NearestCells(
-        col("__fv"), cents.map(_._2), cents.map(_._1)), 1))
-      .select(col("__rid"), graft.functions.CellResidual(col("__fv"),
-        col("__cell"), cents.map(_._2), cents.map(_._1)).as("__rv"))
-    pqFit(resid, col("__rid"), col("__rv"), dim, m, ksub, iters)
-  }
-
-  /** The build half of a STORED residual-PQ (IVFADC) index: tag each row
-    * with its coarse cell and its RESIDUAL codes — same (id, cell, codes)
-    * persistence shape as [[ivfPqEncode]], same narrow zero-shuffle
-    * projection, but `codes` quantize `v − c(v)` under a [[pqFitResidual]]
-    * model. The coarse model must be the SAME frozen model the pq model
-    * was trained against (codes are meaningless under any other). */
-  def ivfRpqEncode(df: DataFrame, id: Column, vec: Column,
-      coarseModel: DataFrame, rpqModel: DataFrame, dim: Int): DataFrame =
-    ivfRpqEncoder(id, vec, coarseModel, rpqModel, dim)(df)
-
-  /** The reusable-encoder form of [[ivfRpqEncode]] (the residual twin of
-    * [[ivfPqEncoder]]): collects both frozen models ONCE and returns a
-    * pure `DataFrame => DataFrame`. Residual encode is still a pure
-    * per-row function of the frozen (coarse, residual-pq) model PAIR —
-    * codes never depend on other rows — so append-then-search equals
-    * rebuild-then-search exactly, same as the raw tier
-    * ([[graft.streaming.StreamingOps.ivfRpqAppendSink]], spec-asserted).
-    * The lifecycle asymmetry is only in RETRAINS: a new coarse model
-    * invalidates residual codes (no [[reindexCells]] path). */
-  def ivfRpqEncoder(id: Column, vec: Column, coarseModel: DataFrame,
-      rpqModel: DataFrame, dim: Int): DataFrame => DataFrame = {
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "ivfRpqEncode with an empty coarse model")
-    val mdl = collectPqModel(rpqModel)
-    df => df.select(id.as("id"), vec.as("__fv"))
-      .withColumn("cell", element_at(graft.functions.NearestCells(
-        col("__fv"), cents.map(_._2), cents.map(_._1)), 1))
-      .withColumn("__rv", graft.functions.CellResidual(col("__fv"),
-        col("cell"), cents.map(_._2), cents.map(_._1)))
-      .select(col("id"), col("cell"), pqCodesCol(col("__rv"), mdl, dim).as("codes"))
-  }
-
-  /** Residual-PQ (IVFADC) search, inline form: identical routing and join
-    * shape to [[ivfPqTopK]] (coarse cells route, candidates live in probed
-    * cells, probes broadcast), but the score reconstructs through the cell:
-    * `adc = ⟨p, c(v)⟩ + ⟨p, r̂(v)⟩` — the cell-centroid dot (one
-    * [[graft.functions.PlaneDots]] pass per probe against the baked coarse
-    * model, computed ONCE per (probe, cell), i.e. nprobe values per probe,
-    * not per candidate) plus the residual ADC ([[graft.functions.PqAdcScore]]
-    * against the residual codebooks, one codegen'd call per candidate).
-    * Since every candidate in a probed cell shares the celldot term, the
-    * per-candidate work is exactly [[ivfPqTopK]]'s; what changes is WHERE
-    * the codebook resolution went. Ordering: adc desc, id asc. `rerank` as
-    * in [[ivfPqTopK]]: ADC shortlist → exact cosine over one vector-table
-    * pass. */
-  def ivfRpqTopK(corpus: DataFrame, id: Column, vec: Column, isProbe: Column,
-      coarseModel: DataFrame, rpqModel: DataFrame, dim: Int, k: Int,
-      nprobe: Int = 1, rerank: Int = 0): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
-    require(rerank == 0 || rerank >= k,
-      s"rerank shortlist must be 0 (off) or >= k=$k; got $rerank")
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "ivfRpqTopK with an empty coarse model")
-    val labels = cents.map(_._1)
-    val cvecs = cents.map(_._2)
-    val mdl = collectPqModel(rpqModel)
-    val e = corpus.select(id.as("__vid"), vec.as("__v"), isProbe.as("__isp"))
-    val scored = e.withColumn("__sc", graft.functions.NearestCells(col("__v"),
-      cvecs, labels))
-    val coded = scored
-      .withColumn("cell", element_at(col("__sc"), 1))
-      .withColumn("__rv", graft.functions.CellResidual(col("__v"), col("cell"),
-        cvecs, labels))
-      .select(col("__vid"), col("cell"), pqCodesCol(col("__rv"), mdl, dim).as("codes"))
-    val probes = scored.filter(col("__isp"))
-      .withColumn("__dots", graft.functions.PlaneDots(col("__v"), cvecs))
-      .select(col("__vid").as("probe_id"), col("__v").as("__pv"),
-        explode(slice(col("__sc"), 1, nprobe)).as("cell"), col("__dots"))
-      .withColumn("celldot", element_at(col("__dots"),
-        array_position(array(labels.map(lit): _*), col("cell")).cast("int")))
-      .drop("__dots")
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("adc"), col("__vid"))
-    val adcRanked = coded.join(broadcast(probes), Seq("cell"))
-      .filter(col("__vid") =!= col("probe_id"))
-      .withColumn("adc", col("celldot") + graft.functions.PqAdcScore(col("__pv"),
-        col("codes"), mdl.map(_._2), mdl.map(_._1)))
-      .withColumn("rank", row_number().over(w))
-    if (rerank == 0)
-      adcRanked.filter(col("rank") <= k)
-        .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("adc"))
-    else {
-      val shortlist = adcRanked.filter(col("rank") <= rerank)
-        .select(col("probe_id"), col("__pv"), col("__vid"), col("adc"))
-      val w2 = Window.partitionBy(col("probe_id")).orderBy(desc("sim"), col("__vid"))
-      e.select(col("__vid"), col("__v")).join(broadcast(shortlist), Seq("__vid"))
-        .withColumn("sim", CosineSim(col("__pv"), col("__v")))
-        .withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
-        .select(col("probe_id"), col("__vid").as("id"), col("rank"),
-          col("adc"), col("sim"))
-    }
-  }
-
-  /** The search half over a STORED residual index ([[ivfRpqEncode]] output
-    * read back — id + cell + codes, NO vectors): same broadcast-route /
-    * DPP-friendly cell equi-join as [[ivfPqTopKCoded]], scored through the
-    * cell like [[ivfRpqTopK]] (spec-asserted equal to the inline form). */
-  def ivfRpqTopKCoded(coded: DataFrame, codedId: Column, cell: Column,
-      codes: Column, probes: DataFrame, probeId: Column, probeVec: Column,
-      coarseModel: DataFrame, rpqModel: DataFrame, k: Int,
-      nprobe: Int = 1): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1; got $nprobe")
-    val cents = collectModel(coarseModel)
-    require(cents.nonEmpty, "ivfRpqTopKCoded with an empty coarse model")
-    val labels = cents.map(_._1)
-    val cvecs = cents.map(_._2)
-    val mdl = collectPqModel(rpqModel)
-    val c = coded.select(codedId.as("__vid"), cell.as("cell"), codes.as("__codes"))
-    val p = probes
-      .select(probeId.as("probe_id"), probeVec.as("__pv"))
-      .withColumn("__sc", graft.functions.NearestCells(col("__pv"), cvecs, labels))
-      .withColumn("__dots", graft.functions.PlaneDots(col("__pv"), cvecs))
-      .select(col("probe_id"), col("__pv"),
-        explode(slice(col("__sc"), 1, nprobe)).as("cell"), col("__dots"))
-      .withColumn("celldot", element_at(col("__dots"),
-        array_position(array(labels.map(lit): _*), col("cell")).cast("int")))
-      .drop("__dots")
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("adc"), col("__vid"))
-    c.join(broadcast(p), Seq("cell"))
-      .filter(col("__vid") =!= col("probe_id"))
-      .withColumn("adc", col("celldot") + graft.functions.PqAdcScore(col("__pv"),
-        col("__codes"), mdl.map(_._2), mdl.map(_._1)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("adc"))
-  }
 
   /** The deterministic ±1/√k projection plane family used by
     * [[randomProject]]: sign of entry (j, i) comes from the portable md5

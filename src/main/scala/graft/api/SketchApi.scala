@@ -672,13 +672,13 @@ private[api] trait SketchApi { self: GraftOps.type =>
       .agg(min(col("__c").cast("double")).as("lo"),
         max(col("__c").cast("double")).as("hi"))
 
-  private def collectSqModel(model: DataFrame): (Array[Double], Array[Double]) = {
+  private def collectSqModel(model: DataFrame): (Seq[Double], Seq[Double]) = {
     val rows = model.select(col("dim"), col("lo"), col("hi")).collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
     require(rows.nonEmpty, "sq model is empty")
     require(rows.map(_._1).toSeq == rows.indices.toSeq,
       s"sq model dims must be exactly 0..${rows.length - 1}")
-    (rows.map(_._2), rows.map(_._3))
+    (rows.map(_._2).toIndexedSeq, rows.map(_._3).toIndexedSeq)
   }
 
   /** The encode half of SQ8: adds `codes` (array<tinyint>, one byte per
@@ -690,48 +690,33 @@ private[api] trait SketchApi { self: GraftOps.type =>
     * so scores derived from codes hash-match across engines. */
   def sqEncode(df: DataFrame, vec: Column, model: DataFrame): DataFrame = {
     val (lo, hi) = collectSqModel(model)
-    df.withColumn("codes", graft.functions.Sq8Encode(vec, lo.toSeq, hi.toSeq))
+    df.withColumn("codes", graft.functions.Sq8Encode(vec, lo, hi))
   }
 
-  /** SQ8 approximate top-k: corpus rows carry ONLY their byte codes, each
-    * candidate scored by one codegen'd [[graft.functions.Sq8Dot]] — the
-    * sequential-fold dot of the full-precision probe against the row's
-    * dequantized reconstruction (lo + code·(hi−lo)/255 per dim), never
-    * materializing it. Same broadcast-probe / scan-corpus shape as
-    * [[pqTopK]]; ordering (score desc, id asc) is deterministic. */
+  /** SQ8 approximate top-k, inline form: [[sqEncode]] then
+    * [[sqTopKCoded]] over one corpus, the model collected once. */
   def sqTopK(corpus: DataFrame, id: Column, vec: Column, isProbe: Column,
       model: DataFrame, k: Int): DataFrame = {
     val (lo, hi) = collectSqModel(model)
-    val e = corpus.select(id.as("__vid"), vec.as("__v"), isProbe.as("__isp"))
-    val coded = e.select(col("__vid"),
-      graft.functions.Sq8Encode(col("__v"), lo.toSeq, hi.toSeq).as("codes"))
-    val probes = e.filter(col("__isp"))
-      .select(col("__vid").as("probe_id"), col("__v").as("__pv"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("sq"), col("__vid"))
-    coded.join(broadcast(probes), col("__vid") =!= col("probe_id"))
-      .withColumn("sq", graft.functions.Sq8Dot(col("__pv"), col("codes"),
-        lo.toSeq, hi.toSeq))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("sq"))
+    val (e, probes) = corpusAndProbes(corpus, id, vec, isProbe)
+    flatTopK(e.select(col("id"), graft.functions.Sq8Encode(col("__v"), lo, hi).as("codes")),
+      probes, "sq", graft.functions.Sq8Dot(col("__pv"), col("codes"), lo, hi), k)
   }
 
-  /** At-rest SQ8 search: scores STORED [[sqEncode]] output against
-    * full-vector probes — identical scoring/ordering to [[sqTopK]]
-    * (spec-asserted equal). The compression story made real: the corpus
+  /** At-rest SQ8 search: scores STORED [[sqEncode]] output (corpus rows
+    * carry ONLY their byte codes) against full-vector probes, each
+    * candidate by one codegen'd [[graft.functions.Sq8Dot]] — the
+    * sequential-fold dot of the full-precision probe against the row's
+    * dequantized reconstruction (lo + code·(hi−lo)/255 per dim), never
+    * materializing it. [[pqTopKCoded]]'s broadcast-probe / scan-corpus
+    * shape; ordering (score desc, id asc) is deterministic. The corpus
     * keeps 1 byte/dim and only probes retain floats. */
   def sqTopKCoded(coded: DataFrame, codedId: Column, codes: Column,
       probes: DataFrame, probeId: Column, probeVec: Column,
       model: DataFrame, k: Int): DataFrame = {
     val (lo, hi) = collectSqModel(model)
-    val c = coded.select(codedId.as("__vid"), codes.as("__codes"))
-    val p = probes.select(probeId.as("probe_id"), probeVec.as("__pv"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(desc("sq"), col("__vid"))
-    c.join(broadcast(p), col("__vid") =!= col("probe_id"))
-      .withColumn("sq", graft.functions.Sq8Dot(col("__pv"), col("__codes"),
-        lo.toSeq, hi.toSeq))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("__vid").as("id"), col("rank"), col("sq"))
+    flatTopK(coded.select(codedId.as("id"), codes.as("codes")),
+      probes.select(probeId.as("probe_id"), probeVec.as("__pv")),
+      "sq", graft.functions.Sq8Dot(col("__pv"), col("codes"), lo, hi), k)
   }
 }

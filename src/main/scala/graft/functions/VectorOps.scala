@@ -19,15 +19,21 @@ object VectorOps {
     * d0+d1+…+d(m−1) left-associated — the same order the oracle SQL
     * states). `labels(s)` holds subspace s's surviving cluster ids
     * ascending; an unknown code is a model/encode mismatch and throws
-    * rather than scoring garbage. */
+    * rather than scoring garbage, and so does a probe whose length is not
+    * the model's dim (a short one would be read past its end). */
   def adcScore(pe: ArrayData, codes: ArrayData, cb: Array[Array[Array[Double]]],
       labels: Array[Array[Int]]): Double = {
     if (codes.numElements() != cb.length) throw new IllegalStateException(
       s"pq_adc_score: codes array has ${codes.numElements()} entries but the " +
         s"model has ${cb.length} subspaces — codes/model mismatch")
+    var dim = 0
+    var s = 0
+    while (s < cb.length) { if (cb(s).nonEmpty) dim += cb(s)(0).length; s += 1 }
+    if (pe.numElements() != dim) throw new IllegalStateException(
+      s"pq_adc_score: probe has ${pe.numElements()} dims but the model has $dim")
     var acc = 0.0
     var off = 0
-    var s = 0
+    s = 0
     while (s < cb.length) {
       val code = codes.getInt(s)
       val ls = labels(s)

@@ -10,10 +10,12 @@ package graft.tools
   * round later (a VERDICT finding); this makes that gap mechanical.
   *
   * Usage:
-  *   sbt "runMain graft.tools.CheckStream [STREAMBENCH_rNN.json [run.json]]"
-  * With one arg: coverage check only. With two: coverage + the ½× rule
-  * against the current run (`run.json` = StreamBench's stdout line,
-  * `"modes":{"s1_parse":32631,...}`).
+  *   sbt "runMain graft.tools.CheckStream [STREAMBENCH_rNN.json [run.json ...]]"
+  * With one arg: coverage check only. With more: coverage + the ½× rule
+  * against the current runs (each `run.json` = one StreamBench stdout
+  * line, `"modes":{"s1_parse":32631,...}`). The envelope holds medians of
+  * three runs, so with several run files the rule compares each shape's
+  * median across them: single runs on a shared host swing by up to 2×.
   */
 object CheckStream {
   /** Streaming laws that deliberately carry NO StreamBench shape — an
@@ -66,22 +68,24 @@ object CheckStream {
     if (stale.nonEmpty)
       System.err.println(s"[check-stream] WARNING stale envelope rows " +
         s"(no such shape): ${stale.mkString(", ")}")
-    val slow: Seq[String] = args.lift(1) match {
-      case None => Nil
-      case Some(runPath) =>
-        val runText = {
-          val src = scala.io.Source.fromFile(runPath, "UTF-8")
-          try src.mkString finally src.close()
-        }
-        val cur = pairs(runText, "modes")
-        val missingRun = (shapes -- cur.keySet).toSeq.sorted
-        if (missingRun.nonEmpty)
-          System.err.println(s"[check-stream] WARNING shapes absent from " +
-            s"the current run: ${missingRun.mkString(", ")}")
-        cur.toSeq.collect {
-          case (m, rps) if frozen.contains(m) && rps < frozen(m) / 2 =>
-            f"$m (${rps}%.0f < half of frozen ${frozen(m)}%.0f rows/s)"
-        }.sorted
+    val runs = args.drop(1).toSeq.map { runPath =>
+      val src = scala.io.Source.fromFile(runPath, "UTF-8")
+      try pairs(src.mkString, "modes") finally src.close()
+    }
+    val slow: Seq[String] = if (runs.isEmpty) Nil else {
+      val cur = runs.flatMap(_.keySet).distinct.map { m =>
+        val xs = runs.flatMap(_.get(m)).sorted
+        m -> (xs((xs.size - 1) / 2) + xs(xs.size / 2)) / 2
+      }
+      val missingRun = (shapes -- cur.map(_._1)).toSeq.sorted
+      if (missingRun.nonEmpty)
+        System.err.println(s"[check-stream] WARNING shapes absent from " +
+          s"the current run: ${missingRun.mkString(", ")}")
+      val of = if (runs.size > 1) s"median of ${runs.size} runs " else ""
+      cur.collect {
+        case (m, rps) if frozen.contains(m) && rps < frozen(m) / 2 =>
+          f"$m ($of${rps}%.0f < half of frozen ${frozen(m)}%.0f rows/s)"
+      }.sorted
     }
     if (missing.nonEmpty || slow.nonEmpty) {
       if (missing.nonEmpty)
@@ -94,8 +98,11 @@ object CheckStream {
       sys.exit(1)
     }
     println(s"[check-stream] OK — all ${shapes.size} shapes frozen in " +
-      s"$frozenPath" + (if (args.length > 1) " and the current run " +
-        "clears the ½× rule" else "") +
+      s"$frozenPath" + (runs.size match {
+        case 0 => ""
+        case 1 => " and the current run clears the ½× rule"
+        case n => s" and the medians of the $n current runs clear the ½× rule"
+      }) +
       s"; ${exemptFaces.size} documented shape exemption(s): " +
       exemptFaces.keys.toSeq.sorted.mkString(", "))
   }

@@ -2624,6 +2624,30 @@ class GraftOpsSpec extends AnyFunSuite with SharedSpark {
     assert(model.orderBy("cluster", "dim").collect().toSeq == again)
   }
 
+  test("l2Normalize -> kmeansFit -> kmeansAssign over array<double> vectors") {
+    import spark.implicits._
+    val df = (0L until 24L).map { id =>
+      (id, Seq(1f + id % 3, 0.5f * (id % 4), 2f - id % 2, 0.25f))
+    }.toDF("id", "emb")
+    val unit = GraftOps.l2Normalize(df, col("emb"))
+    val model = GraftOps.kmeansFit(unit, col("id"), col("unit"), k = 3, iters = 2)
+    val collected = model.collect()
+    assert(collected.map(r => r.getInt(0) -> r.getLong(3)).distinct.map(_._2).sum == 24,
+      "every row belongs to exactly one cluster")
+    val cents = collected.map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      .groupBy(_._1).map { case (c, xs) => c -> xs.sortBy(_._2).map(_._3) }
+    assert(cents.values.forall(_.length == 4))
+    // assignment equals a driver-side argmax-dot reference (cluster-asc ties)
+    GraftOps.kmeansAssign(unit, col("unit"), model)
+      .select(col("id"), col("unit"), col("cluster")).collect().foreach { r =>
+        val v = r.getSeq[Double](1)
+        val best = cents.toSeq.map { case (c, w) =>
+          (v.zip(w).foldLeft(0.0) { case (a, (x, y)) => a + x * y }, c) }
+          .maxBy { case (d, c) => (d, -c) }._2
+        assert(r.getInt(2) == best, s"row ${r.getLong(0)}")
+      }
+  }
+
   test("fast-path applyDedup broadcasts the cluster table, no LocalRelation") {
     import spark.implicits._
     val corpus = spark.range(2000).select(col("id"), (col("id") % 7).as("grp"))

@@ -805,4 +805,19 @@ class PqSpec extends AnyFunSuite with SharedSpark {
         s"adc mismatch for (${r.getAs[Long]("probe_id")}, ${r.getAs[Long]("id")})")
     }
   }
+
+  test("model/vector dim mismatch fails loudly") {
+    import spark.implicits._
+    val short = Seq((1L, Seq(0.1f, 0.2f))).toDF("vec_id", "embedding")
+    // a short corpus vector would be encoded on its prefix
+    val enc = intercept[Exception](
+      GraftOps.pqEncode(short, col("embedding"), model, DIM).collect())
+    assert(enc.getMessage.contains(s"expected $DIM-component vectors, got 2"), enc.getMessage)
+    // a short probe would be read past its end
+    val coded = GraftOps.pqEncode(emb, col("embedding"), model, DIM)
+      .select(col("vec_id"), col("codes"))
+    val adc = intercept[Exception](GraftOps.pqTopKCoded(coded, col("vec_id"),
+      col("codes"), short, col("vec_id"), col("embedding"), model, k = 3).collect())
+    assert(adc.getMessage.contains(s"probe has 2 dims but the model has $DIM"), adc.getMessage)
+  }
 }

@@ -96,4 +96,13 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     }
     assert(jobs("build-q112")(SparkEntry.queries("q112_bm25_topk")(spark, sf001)) == 3)
   }
+
+  test("ANN build jobs per call: each model is collected once") {
+    // seed collects, fit rounds and one collect per model; a model the
+    // inline top-k collected twice would re-run its last training round
+    Seq("q48_kmeans_train" -> 4, "q50_ann_pq" -> 4, "q52_ann_ivf_pq" -> 8,
+        "q71_ann_sq8" -> 2, "q84_ann_residual_pq" -> 11).foreach { case (n, want) =>
+      assert(jobs(s"build-$n")(SparkEntry.queries(n)(spark, sf001)) == want, n)
+    }
+  }
 }
