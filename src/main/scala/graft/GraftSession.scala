@@ -37,6 +37,34 @@ import org.apache.spark.sql.SparkSession
   * session in the JVM — and later sessions cannot change it. Every entry
   * point must therefore build its session through [[configure]], before
   * anything touches `CodeGenerator`.
+  *
+  * Local files are written without forking a process. With no libhadoop
+  * on the library path, Hadoop's `RawLocalFileSystem` forks `chmod` for
+  * every file or directory it creates and `readlink` for every
+  * `getFileLinkStatus`. Spark's checkpoint file manager makes each atomic
+  * write a `create` plus a `rename` of the file and its `.crc`: 2 chmods
+  * and 8 readlinks. On a 4-core VM under the benchmark's JVM flags such a
+  * write cost 14–16 ms of JVM CPU and 33–42 ms of wall time, and 0.6 ms
+  * of each through java.nio. One benchmark `stream_events` run started
+  * 3,146 child processes, 2,272 of them `readlink` and 807 `chmod`, for
+  * the offset WAL, commit log, source log and state deltas of every
+  * micro-batch and the sink's files. So the `file` scheme
+  * is mapped, for both Hadoop APIs, to `graft.io`'s checksummed local
+  * filesystems, which do the two calls through java.nio and leave every
+  * other call, and the bytes and `.crc` files on disk, as Hadoop's:
+  *  - `spark.hadoop.fs.file.impl` is [[graft.io.NioLocalFileSystem]]
+  *    (the `FileSystem` API: parquet sinks and table writes);
+  *  - `spark.hadoop.fs.AbstractFileSystem.file.impl` is
+  *    [[graft.io.NioLocalFs]] (the `FileContext` API: checkpoint logs, the
+  *    HDFS-backed state store, RocksDB's file manager).
+  *
+  * The `FileSystem` mapping has the same ordering rule as the cache size.
+  * Hadoop's `FileSystem` cache keeps the first `file:` instance created in
+  * the JVM, so a `FileSystem.get` before the session is built through
+  * [[configure]] pins the stock class for the JVM's lifetime (Hive's
+  * `ProxyLocalFileSystem` over Hadoop's, which Spark's Hive jars register
+  * for `file:`). `FileContext` reads the conf on every call and has no
+  * such rule.
   */
 object GraftSession {
 
@@ -54,6 +82,9 @@ object GraftSession {
       // generated code compiles once per JVM; see the object doc
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // fork-free local files; see the object doc
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
       // events.parquet carries TIMESTAMP(NANOS); Spark has no nanos type, so
       // read the physical int64 and convert explicitly (Tables.load).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -311,11 +311,15 @@ object VectorOps {
 
   /** Asymmetric SQ8 score: sequential-fold dot (d ascending, left-
     * associated) of the probe against lo + code·((hi−lo)/255) per dim —
-    * the same op order the oracle SQL's list_reduce states. */
+    * the same op order the oracle SQL's list_reduce states. A probe whose
+    * length is not the model's dim throws (a short one would be read past
+    * its end). */
   def sq8Dot(pe: ArrayData, codes: ArrayData, lo: Array[Double],
       hi: Array[Double]): Double = {
     if (codes.numElements() != lo.length) throw new IllegalStateException(
       s"sq8_dot: codes array has ${codes.numElements()} entries but the model has ${lo.length}")
+    if (pe.numElements() != lo.length) throw new IllegalStateException(
+      s"sq8_dot: probe has ${pe.numElements()} dims but the model has ${lo.length}")
     var acc = 0.0
     var d = 0
     while (d < lo.length) {

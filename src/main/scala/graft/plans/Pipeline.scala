@@ -1796,7 +1796,13 @@ object PipelineCompiler {
       }
     }
 
-  /** Kahn topological order; aborts on a cycle (ref OpContainer.java:207-210). */
+  /** Kahn topological order; aborts on a cycle (ref OpContainer.java:207-210).
+    * Sinks (nodes that feed no other node) come after every other node, in
+    * the order the spec declares them. A batch sink's eager write then ends
+    * before a streaming sink declared after it starts its query: the two may
+    * write one table, and an `availableNow` query that ran alongside the
+    * write could finish, and leave `spark.streams.active`, before compile
+    * returns. */
   private[plans] def topoOrder(spec: PipelineSpec): Seq[OpNode] = {
     val byName = spec.nodes.map(n => n.name -> n).toMap
     def nodeOf(port: String): String = port.split('.').head
@@ -1818,7 +1824,8 @@ object PipelineCompiler {
     if (out.size != spec.nodes.size)
       throw new PipelineException(
         s"pipeline has a cycle involving: ${indeg.filter(_._2 > 0).keys.toSeq.sorted.mkString(", ")}")
-    out.toSeq
+    val feeds = deps.map(_._1).toSet
+    out.toSeq.filter(n => feeds(n.name)) ++ spec.nodes.filterNot(n => feeds(n.name))
   }
 
   /** Extension operators discovered at runtime via [[PipelineOperatorProvider]]

@@ -107,4 +107,19 @@ class Sq8Spec extends AnyFunSuite with SharedSpark {
       GraftOps.sqEncode(short, col("v"), model).collect())
     assert(err.getMessage != null)
   }
+
+  test("a probe shorter than the model fails loudly in both searches") {
+    import spark.implicits._
+    val model = GraftOps.sqFit(corpus, col("v"))
+    val short = Seq((100L, Seq(0.1f, 0.2f))).toDF("id", "v")
+    // inline: the short probe is also a corpus row, so encode or score fails first
+    val inline = intercept[Exception](GraftOps.sqTopK(corpus.union(short), col("id"),
+      col("v"), col("id") === 100L, model, k = 4).collect())
+    assert(inline.getMessage.contains("has 2 dims but the model has 8"), inline.getMessage)
+    val atRest = GraftOps.sqEncode(corpus, col("v"), model).select(col("id"), col("codes"))
+    val coded = intercept[Exception](GraftOps.sqTopKCoded(atRest, col("id"), col("codes"),
+      short, col("id"), col("v"), model, k = 4).collect())
+    assert(coded.getMessage.contains("sq8_dot: probe has 2 dims but the model has 8"),
+      coded.getMessage)
+  }
 }

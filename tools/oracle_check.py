@@ -113,41 +113,45 @@ def main():
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     results = {}
     import time
-    for name in sorted(oracle):
+
+    def judge(name, sql):
         t0 = time.time()
-        sql = oracle[name]
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
-            results[name] = "MISSING_SPARK_OUTPUT"; continue
+            return "MISSING_SPARK_OUTPUT"
         try:
             got = canon(pd.concat([pd.read_parquet(f) for f in sorted(files)]))
         except Exception as e:
-            results[name] = f"SPARK_READ_ERROR: {e}"; continue
+            return f"SPARK_READ_ERROR: {e}"
         try:
             exp = canon(con.sql(sql).df())
         except Exception as e:
-            results[name] = f"ORACLE_SQL_ERROR: {str(e)[:300]}"; continue
+            return f"ORACLE_SQL_ERROR: {str(e)[:300]}"
         if list(got.columns) != list(exp.columns):
-            results[name] = f"SCHEMA_MISMATCH: spark={list(got.columns)} duck={list(exp.columns)}"
-            continue
+            return f"SCHEMA_MISMATCH: spark={list(got.columns)} duck={list(exp.columns)}"
         bad_arrays = sorted(set(array_cols(got)) | set(array_cols(exp)))
         if bad_arrays:
-            results[name] = (f"ARRAY_COLUMN: {bad_arrays} — driver cannot "
-                             "canonicalize arrays; join to string in the gated query")
-            continue
+            return (f"ARRAY_COLUMN: {bad_arrays} — driver cannot "
+                    "canonicalize arrays; join to string in the gated query")
         dt = dtype_mismatches(got, exp)
         if dt:
-            results[name] = f"DTYPE_MISMATCH: {dt} — driver hash sees different scalars"
-            continue
+            return f"DTYPE_MISMATCH: {dt} — driver hash sees different scalars"
         if len(got) != len(exp):
-            results[name] = f"ROWCOUNT_MISMATCH: spark={len(got)} duck={len(exp)}"
-            continue
+            return f"ROWCOUNT_MISMATCH: spark={len(got)} duck={len(exp)}"
         bad = find_mismatch(got, exp)
         if bad:
             i, c, g, e = bad
-            results[name] = f"VALUE_MISMATCH row {i} col {c}: spark={g!r} duck={e!r}"
-        else:
-            results[name] = f"OK ({len(got)} rows, oracle {time.time() - t0:.1f} s)"
+            return f"VALUE_MISMATCH row {i} col {c}: spark={g!r} duck={e!r}"
+        return f"OK ({len(got)} rows, oracle {time.time() - t0:.1f} s)"
+
+    def decide(name, v):
+        # printed as soon as it is known, so a run cut short still shows it
+        results[name] = v
+        tag = 'PASS' if v.startswith('OK') else ('INFO' if v.startswith('ROWS_ONLY') else 'FAIL')
+        print(f"{tag:4} {name}: {v}", flush=True)
+
+    for name in sorted(oracle):
+        decide(name, judge(name, oracle[name]))
     # queries with no oracle
     for d in sorted(glob.glob(f"{outdir}/*/")):
         qn = d.rstrip('/').split('/')[-1]
@@ -156,10 +160,8 @@ def main():
             try:
                 n = sum(len(pd.read_parquet(f)) for f in glob.glob(f"{d}/*.parquet"))
             except Exception: pass
-            results[qn] = f"ROWS_ONLY ({n} rows)"
+            decide(qn, f"ROWS_ONLY ({n} rows)")
     ok = sum(1 for v in results.values() if v.startswith("OK"))
-    for k, v in sorted(results.items()):
-        print(f"{'PASS' if v.startswith('OK') else ('INFO' if v.startswith('ROWS_ONLY') else 'FAIL'):4} {k}: {v}")
     print(f"\n{ok}/{len(oracle)} oracle queries match")
 
 if __name__ == "__main__":
