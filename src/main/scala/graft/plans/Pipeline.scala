@@ -5,9 +5,11 @@ import java.nio.charset.StandardCharsets
 import javax.xml.parsers.DocumentBuilderFactory
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.functions.{col, expr}
 import graft.Tables
+import graft.streaming.StreamingOps
 
 /** Declarative dataflow-DAG pipeline: the reference's control-plane model
   * (SURVEY.md §1.3) re-done Spark-first.
@@ -240,24 +242,164 @@ object PipelineCompiler {
     * `trigger=availableNow` instead runs the catch-up mode: consume
     * everything currently available in bounded micro-batches, then STOP —
     * how a 100 TB backfill replays a stream pipeline as a finite job with
-    * the same exactly-once state/checkpoint semantics. */
-  private def triggerOf(args: Map[String, String]) =
-    args.get("trigger") match {
-      case Some("availableNow") =>
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()
-      case Some(other) =>
-        throw new PipelineException(
-          s"unknown trigger '$other' (supported: availableNow, or use triggerMs)")
-      case None => args.get("triggerMs").map(_.toLong) match {
-        case Some(ms) if ms > 0 =>
-          org.apache.spark.sql.streaming.Trigger.ProcessingTime(ms)
-        case Some(_) => org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)
-        case None    => graft.streaming.StreamingOps.ReferenceTrigger
+    * the same exactly-once state/checkpoint semantics. A negative
+    * `triggerMs`, or both args at once, fails the compile. */
+  private def triggerOf(args: Map[String, String]): Trigger =
+    (args.get("trigger"), args.get("triggerMs").map(_.toLong)) match {
+      case (Some(_), Some(_)) => throw new PipelineException(
+        "give trigger or triggerMs, not both")
+      case (Some("availableNow"), None) => Trigger.AvailableNow()
+      case (Some(other), None) => throw new PipelineException(
+        s"unknown trigger '$other' (supported: availableNow, or use triggerMs)")
+      case (None, Some(ms)) if ms < 0 => throw new PipelineException(
+        s"triggerMs must be >= 0 (0 = as fast as possible); got $ms")
+      case (None, Some(ms)) => Trigger.ProcessingTime(ms)
+      case (None, None) => StreamingOps.ReferenceTrigger
+    }
+
+  /** A streaming sink's writer: input ports, args and the query name →
+    * the writer [[streamSink]] starts. */
+  private type SinkWriter =
+    (Map[String, DataFrame], Map[String, String], String) => DataStreamWriter[Row]
+
+  /** Streaming sinks: compiling a spec that ends in one STARTS the query
+    * (the streaming analogue of the batch sinks' eager action) through
+    * [[streamSink]], which owns the start protocol — query name, trigger,
+    * shuffle partitions. Each entry only builds its writer; the log
+    * sinks' replay postures are StreamingOps's (its object doc). */
+  private val streamSinks: Map[String, SinkWriter] = Map(
+    "memoryStreamSink" -> ((in, args, _) =>
+      in("inport1").writeStream.format("memory").queryName(arg(args, "name"))
+        .outputMode(args.getOrElse("outputMode", "append"))),
+    "parquetStreamSink" -> ((in, args, name) =>
+      in("inport1").writeStream.format("parquet").queryName(name)
+        .option("path", arg(args, "path"))
+        .option("checkpointLocation", arg(args, "checkpoint"))),
+    // Incremental ANN index maintenance: the streaming completion of the
+    // ivfPqEncode/ivfPqSearch lifecycle — each micro-batch of new vectors
+    // (inport1, streaming) is encoded against the frozen models (inport2 =
+    // coarse, inport3 = pq; batch inputs, collected once at compile) and
+    // appended to the at-rest (id, cell, codes) parquet index at `path`.
+    // Search-after-append equals search-over-rebuild exactly (PqSpec).
+    // tier=residual switches the encoder to the residual (IVFADC) codes —
+    // inport3 must then be a pqFitResidual model trained against the SAME
+    // frozen coarse model on inport2.
+    "indexAppendSink" -> ((in, args, name) => {
+      val sink = args.getOrElse("tier", "raw") match {
+        case "raw" => StreamingOps.ivfPqAppendSink _
+        case "residual" => StreamingOps.ivfRpqAppendSink _
+        case other => throw new PipelineException(
+          s"indexAppendSink tier must be one of raw, residual; got '$other'")
       }
+      sink(in("inport1"), expr(arg(args, "id")), expr(arg(args, "vec")),
+        in("inport2"), in("inport3"), arg(args, "dim").toInt,
+        arg(args, "path"), name, arg(args, "checkpoint"))
+    }),
+    // Admission-index append maintenance (round 14): each micro-batch of
+    // admitted content appends its own index rows to the at-rest parquet
+    // index (append == rebuild, S19); the span tier appends MERGEABLE
+    // counts and `spanIndexFromCounts` derives the index on read.
+    "fingerprintAppendSink" -> ((in, args, name) =>
+      StreamingOps.fingerprintAppendSink(in("inport1"), expr(arg(args, "id")),
+        expr(arg(args, "text")), arg(args, "path"), name, arg(args, "checkpoint"))),
+    "nearDupAppendSink" -> ((in, args, name) => {
+      val (id, text) = (expr(arg(args, "id")), expr(arg(args, "text")))
+      val (width, hashes, bands) = (args.getOrElse("shingleWidth", "3").toInt,
+        args.getOrElse("numHashes", "16").toInt, args.getOrElse("bands", "4").toInt)
+      StreamingOps.appendSink(in("inport1"), arg(args, "path"), name,
+        arg(args, "checkpoint"))(StreamingOps.nearDupIndex(_, id, text, width, hashes, bands))
+    }),
+    // S25 semantic tier (inport1 = admitted stream, inport2 = frozen
+    // kmeans model): same per-row append == rebuild law, same
+    // model-retrain lifecycle rule as the residual-PQ sink.
+    "semanticDupAppendSink" -> ((in, args, name) =>
+      StreamingOps.semanticDupAppendSink(in("inport1"), expr(arg(args, "id")),
+        expr(arg(args, "vec")), in("inport2"), arg(args, "path"), name,
+        arg(args, "checkpoint"))),
+    "mediaDupAppendSink" -> ((in, args, name) => {
+      val (id, payload) = (expr(arg(args, "id")), expr(arg(args, "payload")))
+      val nChunks = args.getOrElse("nChunks", "4").toInt
+      val index: DataFrame => DataFrame = args.getOrElse("kind", "image") match {
+        case "image" => StreamingOps.imageDupIndex(_, id, payload, nChunks)
+        case "audio" => StreamingOps.audioDupIndex(_, id, payload, nChunks)
+        case "video" => StreamingOps.videoDupIndex(_, id, payload)
+        case other => sys.error(s"mediaDupAppendSink kind must be " +
+          s"image/audio/video; got '$other'")
+      }
+      StreamingOps.appendSink(in("inport1"), arg(args, "path"), name,
+        arg(args, "checkpoint"))(index)
+    }),
+    "spanIndexAppendSink" -> ((in, args, name) =>
+      StreamingOps.spanIndexAppendSink(in("inport1"), expr(arg(args, "id")),
+        expr(arg(args, "text")), args.getOrElse("width", "5").toInt,
+        arg(args, "path"), name, arg(args, "checkpoint"))),
+    // S20 upsert family: per-batch winners append to a parquet log
+    "upsertAppendSink" -> ((in, args, name) =>
+      StreamingOps.upsertAppendSink(in("inport1"),
+        arg(args, "key").split(",").map(_.trim).toSeq, arg(args, "version"),
+        arg(args, "tiebreak"), arg(args, "path"), name, arg(args, "checkpoint"))),
+    // S26 golden-record family: per-batch per-field winners append
+    "goldenRecordAppendSink" -> ((in, args, name) =>
+      StreamingOps.goldenRecordAppendSink(in("inport1"),
+        arg(args, "key").split(",").map(_.trim).toSeq, arg(args, "version"),
+        arg(args, "tiebreak"), arg(args, "fields").split(",").map(_.trim).toSeq,
+        arg(args, "path"), name, arg(args, "checkpoint"))),
+    // S29/S30 sketch-algebra streaming faces: per-batch sketches append
+    "cmsAppendSink" -> ((in, args, name) =>
+      StreamingOps.cmsAppendSink(in("inport1"), arg(args, "key"),
+        arg(args, "depth").toInt, arg(args, "width").toInt, arg(args, "path"),
+        name, arg(args, "checkpoint"))),
+    "kmvAppendSink" -> ((in, args, name) =>
+      StreamingOps.kmvAppendSink(in("inport1"), arg(args, "group"),
+        arg(args, "value"), arg(args, "k").toInt, arg(args, "path"), name,
+        arg(args, "checkpoint"))),
+    // S31 Gram/PCA model-stat streaming face: per-batch packed Gram
+    // summaries append
+    "gramAppendSink" -> ((in, args, name) =>
+      StreamingOps.gramAppendSink(in("inport1"), arg(args, "vec"),
+        arg(args, "dim").toInt, arg(args, "path"), name, arg(args, "checkpoint"))),
+    // S32 scoring faces: apply a stored model table (ridge | logistic |
+    // pca, re-read once per batch) or the S31 gram log's live ridge
+    // refit to every micro-batch as a pure narrow map; each batch's
+    // scored rows land in its own partition under `path`
+    "scoreStreamSink" -> ((in, args, name) =>
+      StreamingOps.scoreStreamSink(in("inport1"), arg(args, "vec"),
+        arg(args, "dim").toInt, arg(args, "model"), arg(args, "kind"),
+        arg(args, "path"), name, arg(args, "checkpoint"))),
+    "ridgeScoreStreamSink" -> ((in, args, name) =>
+      StreamingOps.ridgeScoreStreamSink(in("inport1"), arg(args, "vec"),
+        arg(args, "dim").toInt, arg(args, "gramLog"),
+        arg(args, "lambdaPpm").toLong, arg(args, "path"), name,
+        arg(args, "checkpoint"))),
+    // R3 KafkaOutput: declared for real-broker deployments (needs the
+    // spark-sql-kafka connector jar — absent in this offline container,
+    // see README "Kafka connectivity"; memoryStreamSink is the test twin).
+    "kafkaOutput" -> ((in, args, _) =>
+      StreamingOps.toKafkaJson(in("inport1")).writeStream.format("kafka")
+        .option("kafka.bootstrap.servers", arg(args, "brokers"))
+        .option("topic", arg(args, "topic"))
+        .option("checkpointLocation", arg(args, "checkpoint"))))
+
+  /** Start the writer a [[SinkWriter]] builds. The writer gets its query
+    * name — the `name` arg, default the op name — under which the query
+    * is discoverable in `spark.streams.active`; `triggerOf` picks the
+    * trigger; the optional `shufflePartitions` arg applies to this query
+    * alone — a query over small micro-batches should run FEWER shuffle
+    * partitions than the session default, since stateful streaming pays
+    * a per-partition per-batch state-store tax (see
+    * StreamingOps.sizedShufflePartitions; BASELINE.md has the measured
+    * 8-vs-32-partition replay numbers). A sink returns no ports (ref R3
+    * KafkaOutput, KafkaOutput.java:18-19). */
+  private def streamSink(op: String, writer: SinkWriter): PipelineOperator =
+    (spark, in, args) => {
+      withQueryShufflePartitions(spark, args) {
+        writer(in, args, args.getOrElse("name", op)).trigger(triggerOf(args)).start()
+      }
+      Map.empty
     }
 
   /** Sealed operator registry (ref R8 parity, minus reflection). */
-  val registry: Map[String, PipelineOperator] = Map(
+  val registry: Map[String, PipelineOperator] = Map[String, PipelineOperator](
     // Sources. "parquetInput" doubles for KafkaInput in batch tests; the
     // streaming twin is readStream on the same schema (StreamingOps).
     "parquetInput" -> ((spark, _, args) =>
@@ -419,14 +561,16 @@ object PipelineCompiler {
     // value over two integer columns (stats collected eagerly, like any
     // trainer); `zorderSink` is the range-partitioned layout terminal.
     "zorder" -> ((_, in, args) => {
+      val curve = args.getOrElse("curve", "z")
+      if (curve != "z" && curve != "hilbert") throw new PipelineException(
+        s"zorder curve must be one of z, hilbert; got '$curve'")
       val df = in("inport1")
       val bits = args.getOrElse("bits", "12").toInt
       val Seq(xn, yn) = graft.api.GraftOps.zorderNormalizeCols(df,
         Seq(expr(arg(args, "x")) -> bits, expr(arg(args, "y")) -> bits),
         "zorder")
       val curveCol =
-        if (args.getOrElse("curve", "z") == "hilbert")
-          graft.api.GraftOps.hilbertValue(xn, yn, bits)
+        if (curve == "hilbert") graft.api.GraftOps.hilbertValue(xn, yn, bits)
         else graft.api.GraftOps.zorderValue(xn, yn, bits)
       Map("outport1" -> df.withColumn(
         args.getOrElse("as", "zvalue"), curveCol.cast("bigint")))
@@ -1465,265 +1609,36 @@ object PipelineCompiler {
         args.getOrElse("format", "parquet"))
       Map.empty
     }),
-    // Streaming sinks: compiling a spec that ends in one STARTS the query
-    // (the streaming analogue of the batch sinks' eager action); the
-    // handle is discoverable as spark.streams.active by queryName, and the
-    // trigger honors `triggerMs` / defaults to the reference 10 s cadence.
-    // All of them honor an optional `shufflePartitions` arg: stateful
-    // streaming pays a per-partition per-batch state-store tax, so a
-    // query over small micro-batches should run FEWER shuffle partitions
-    // than the session default (see StreamingOps.sizedShufflePartitions;
-    // BASELINE.md has the measured 8-vs-32-partition replay numbers).
-    "memoryStreamSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        in("inport1").writeStream.format("memory")
-          .queryName(arg(args, "name"))
-          .outputMode(args.getOrElse("outputMode", "append"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    "parquetStreamSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        in("inport1").writeStream.format("parquet")
-          .queryName(args.getOrElse("name", "parquetStreamSink"))
-          .option("path", arg(args, "path"))
-          .option("checkpointLocation", arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    // Incremental ANN index maintenance: the streaming completion of the
-    // ivfPqEncode/ivfPqSearch lifecycle — each micro-batch of new vectors
-    // (inport1, streaming) is encoded against the frozen models (inport2 =
-    // coarse, inport3 = pq; batch inputs, collected once at compile) and
-    // appended to the at-rest (id, cell, codes) parquet index at `path`.
-    // Search-after-append equals search-over-rebuild exactly (PqSpec).
-    "indexAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        // tier=residual switches the encoder to the residual (IVFADC)
-        // codes — inport3 must then be a pqFitResidual model trained
-        // against the SAME frozen coarse model on inport2
-        val sink =
-          if (args.getOrElse("tier", "raw") == "residual")
-            graft.streaming.StreamingOps.ivfRpqAppendSink(in("inport1"),
-              expr(arg(args, "id")), expr(arg(args, "vec")),
-              in("inport2"), in("inport3"), dim = arg(args, "dim").toInt,
-              path = arg(args, "path"),
-              queryName = args.getOrElse("name", "indexAppendSink"),
-              checkpoint = arg(args, "checkpoint"))
-          else
-            graft.streaming.StreamingOps.ivfPqAppendSink(in("inport1"),
-              expr(arg(args, "id")), expr(arg(args, "vec")),
-              in("inport2"), in("inport3"), dim = arg(args, "dim").toInt,
-              path = arg(args, "path"),
-              queryName = args.getOrElse("name", "indexAppendSink"),
-              checkpoint = arg(args, "checkpoint"))
-        sink.trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    // Admission-index append maintenance (round 14): each micro-batch of
-    // admitted content appends its own index rows to the at-rest parquet
-    // index (append == rebuild, S19); the span tier appends MERGEABLE
-    // counts and `spanIndexFromCounts` derives the index on read.
-    "fingerprintAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.fingerprintAppendSink(in("inport1"),
-          expr(arg(args, "id")), expr(arg(args, "text")),
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "fingerprintAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    "nearDupAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.nearDupAppendSink(in("inport1"),
-          expr(arg(args, "id")), expr(arg(args, "text")),
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "nearDupAppendSink"),
-          checkpoint = arg(args, "checkpoint"),
-          shingleWidth = args.getOrElse("shingleWidth", "3").toInt,
-          numHashes = args.getOrElse("numHashes", "16").toInt,
-          bands = args.getOrElse("bands", "4").toInt)
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    // S25 semantic tier (inport1 = admitted stream, inport2 = frozen
-    // kmeans model): same per-row append == rebuild law, same
-    // model-retrain lifecycle rule as the residual-PQ sink.
-    "semanticDupAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.semanticDupAppendSink(in("inport1"),
-          expr(arg(args, "id")), expr(arg(args, "vec")), in("inport2"),
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "semanticDupAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    "mediaDupAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        val sink = args.getOrElse("kind", "image") match {
-          case "image" => graft.streaming.StreamingOps.imageDupAppendSink(
-            in("inport1"), expr(arg(args, "id")), expr(arg(args, "payload")),
-            arg(args, "path"), args.getOrElse("name", "mediaDupAppendSink"),
-            arg(args, "checkpoint"),
-            nChunks = args.getOrElse("nChunks", "4").toInt)
-          case "audio" => graft.streaming.StreamingOps.audioDupAppendSink(
-            in("inport1"), expr(arg(args, "id")), expr(arg(args, "payload")),
-            arg(args, "path"), args.getOrElse("name", "mediaDupAppendSink"),
-            arg(args, "checkpoint"),
-            nChunks = args.getOrElse("nChunks", "4").toInt)
-          case "video" => graft.streaming.StreamingOps.videoDupAppendSink(
-            in("inport1"), expr(arg(args, "id")), expr(arg(args, "payload")),
-            arg(args, "path"), args.getOrElse("name", "mediaDupAppendSink"),
-            arg(args, "checkpoint"))
-          case other => sys.error(s"mediaDupAppendSink kind must be " +
-            s"image/audio/video; got '$other'")
-        }
-        sink.trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    "spanIndexAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.spanIndexAppendSink(in("inport1"),
-          expr(arg(args, "id")), expr(arg(args, "text")),
-          width = args.getOrElse("width", "5").toInt,
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "spanIndexAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
     "spanIndexFromCounts" -> ((_, in, args) =>
       Map("outport1" -> graft.api.GraftOps.spanIndexFromCounts(in("inport1"),
         minDf = args.getOrElse("minDf", "2").toInt,
         minCount = args.getOrElse("minCount", "0").toInt))),
-    // S20 upsert family: per-batch winners append to a parquet log,
-    // state = reduce-on-read (tombstones filtered at read only),
-    // compaction = the same reduction materialized.
-    "upsertAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.upsertAppendSink(in("inport1"),
-          key = arg(args, "key").split(",").map(_.trim).toSeq,
-          version = arg(args, "version"), tiebreak = arg(args, "tiebreak"),
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "upsertAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
+    // Read faces of the streaming log sinks (streamSinks): state =
+    // reduce-on-read by each log's merge law — S20 upsert (tombstones
+    // filtered at read only), S26 golden record, S29/S30 sketches, S31
+    // Gram summary (pcaFitFromSummary turns it into a PCA model).
     "upsertState" -> ((s, _, args) =>
       Map("outport1" -> graft.streaming.StreamingOps.upsertState(s,
         arg(args, "path"),
         key = arg(args, "key").split(",").map(_.trim).toSeq,
         version = arg(args, "version"), tiebreak = arg(args, "tiebreak"),
         isDelete = expr(arg(args, "isDelete"))))),
-    // S26 golden-record family: per-batch per-field winners append to a
-    // parquet log; state = reduce-on-read (== batch goldenRecord).
-    "goldenRecordAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.goldenRecordAppendSink(in("inport1"),
-          key = arg(args, "key").split(",").map(_.trim).toSeq,
-          version = arg(args, "version"), tiebreak = arg(args, "tiebreak"),
-          fields = arg(args, "fields").split(",").map(_.trim).toSeq,
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "goldenRecordAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
     "goldenRecordState" -> ((s, _, args) =>
       Map("outport1" -> graft.streaming.StreamingOps.goldenRecordState(s,
         arg(args, "path"),
         key = arg(args, "key").split(",").map(_.trim).toSeq,
         version = arg(args, "version"),
         fields = arg(args, "fields").split(",").map(_.trim).toSeq))),
-    // S29/S30 sketch-algebra streaming faces: per-batch sketches append
-    // to a parquet log; state = reduce-on-read by each sketch's merge law.
-    "cmsAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.cmsAppendSink(in("inport1"),
-          key = arg(args, "key"), depth = arg(args, "depth").toInt,
-          width = arg(args, "width").toInt, path = arg(args, "path"),
-          queryName = args.getOrElse("name", "cmsAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
     "cmsState" -> ((s, _, args) =>
       Map("outport1" -> graft.streaming.StreamingOps.cmsState(s,
         arg(args, "path")))),
-    "kmvAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.kmvAppendSink(in("inport1"),
-          group = arg(args, "group"), value = arg(args, "value"),
-          k = arg(args, "k").toInt, path = arg(args, "path"),
-          queryName = args.getOrElse("name", "kmvAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
     "kmvState" -> ((s, _, args) =>
       Map("outport1" -> graft.streaming.StreamingOps.kmvState(s,
         arg(args, "path"), k = arg(args, "k").toInt))),
-    // S31 Gram/PCA model-stat streaming face: per-batch packed Gram
-    // summaries append; state = idx-wise sum (== batch gramSummaryRows);
-    // pcaFitFromSummary turns the state into a fresh PCA model.
-    "gramAppendSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.gramAppendSink(in("inport1"),
-          vec = arg(args, "vec"), dim = arg(args, "dim").toInt,
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "gramAppendSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
     "gramState" -> ((s, _, args) =>
       Map("outport1" -> graft.streaming.StreamingOps.gramState(s,
         arg(args, "path")))),
-    // S32 scoring faces: apply a stored model table (ridge | logistic |
-    // pca, re-read once per batch) or the S31 gram log's live ridge
-    // refit to every micro-batch as a pure narrow map; scored rows
-    // append to `path`
-    "scoreStreamSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.scoreStreamSink(in("inport1"),
-          vec = arg(args, "vec"), dim = arg(args, "dim").toInt,
-          modelPath = arg(args, "model"), modelKind = arg(args, "kind"),
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "scoreStreamSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
-    "ridgeScoreStreamSink" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.ridgeScoreStreamSink(in("inport1"),
-          vec = arg(args, "vec"), dim = arg(args, "dim").toInt,
-          gramLog = arg(args, "gramLog"),
-          lambdaPpm = arg(args, "lambdaPpm").toLong,
-          path = arg(args, "path"),
-          queryName = args.getOrElse("name", "ridgeScoreStreamSink"),
-          checkpoint = arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }),
+    // the upsert log's compaction = the same reduction materialized
     "compactUpsertLogSink" -> ((s, _, args) => {
       graft.api.GraftOps.compactUpsertLog(s, arg(args, "in"),
         arg(args, "out"),
@@ -1749,21 +1664,7 @@ object PipelineCompiler {
       graft.api.GraftOps.compactSpanCounts(s, arg(args, "in"),
         arg(args, "out"))
       Map.empty
-    }),
-    // R3 KafkaOutput: declared for real-broker deployments (needs the
-    // spark-sql-kafka connector jar — absent in this offline container,
-    // see README "Kafka connectivity"; memoryStreamSink is the test twin).
-    "kafkaOutput" -> ((s, in, args) => {
-      withQueryShufflePartitions(s, args) {
-        graft.streaming.StreamingOps.toKafkaJson(in("inport1"))
-          .writeStream.format("kafka")
-          .option("kafka.bootstrap.servers", arg(args, "brokers"))
-          .option("topic", arg(args, "topic"))
-          .option("checkpointLocation", arg(args, "checkpoint"))
-          .trigger(triggerOf(args)).start()
-      }
-      Map.empty
-    }))
+    })) ++ streamSinks.map { case (op, w) => op -> streamSink(op, w) }
 
   /** Apply a streaming sink's optional `shufflePartitions` arg around its
     * `.start()`: Spark's StreamExecution clones the session when the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -18,6 +18,31 @@ import org.apache.spark.sql.types.StructType
   * Scale posture: all stateful ops are keyed by the natural partition key
   * and bounded by watermarks, so state size is O(active keys × window),
   * never O(stream).
+  *
+  * Replay postures of the `foreachBatch` log sinks: exactly-once output
+  * is the offset write-ahead log plus a sink that is idempotent on a
+  * replayed batch — a batch whose write finished but whose commit-log
+  * entry did not is re-run, with the same batch id and input, when the
+  * query restarts from its checkpoint. Each log sink writes through the
+  * one core of its posture:
+  *  - APPEND ([[appendSink]]): the replay re-appends the same rows (each
+  *    is a pure function of the batch). The read face collapses them
+  *    where it reduces by max or distinct (upsert, golden record, kmv);
+  *    in the index tiers (fingerprint, near-dup, media, semantic, ivfPq,
+  *    ivfRpq) they are duplicate rows a compaction pass dedups; span
+  *    counts sum, so a replay over-counts them.
+  *  - STAMPED ([[stampedAppendSink]]): rows carry `batch_id` and the
+  *    checkpoint lifetime's `sink_query_id` ([[checkpointQueryId]]); the
+  *    read face ([[collapseReplays]]) takes the max per (lifetime, batch,
+  *    cell) before summing, so a replay counts once while a second
+  *    checkpoint lifetime, whose batch ids restart at 0, still sums. For
+  *    summed logs: cms, gram.
+  *  - OVERWRITE ([[batchOverwriteSink]]): each batch overwrites
+  *    `path/sink_query_id=<qid>/batch_id=<id>`, so the replay replaces its
+  *    first attempt. For outputs a replay may change (a refreshed model):
+  *    score, ridgeScore.
+  * Read faces of logs whose newer files carry a column older files lack
+  * (`sink_query_id`, `sink_k`, `sink_dim`) read through [[readLog]].
   */
 object StreamingOps {
 
@@ -125,7 +150,12 @@ object StreamingOps {
     * → LSH band keys, same codegen'd expressions and parameters as
     * `GraftOps.minhashNearDup`, so batch and streaming agree on what "near
     * duplicate" means). The caller persists/reuses it across the stream's
-    * lifetime — the library never caches on your behalf. */
+    * lifetime — the library never caches on your behalf. Grown per
+    * micro-batch by [[appendSink]] over this function: band rows are a
+    * pure per-row function of (text, the baked hash family), so append ==
+    * rebuild (S19) — with the SAME shingleWidth / numHashes / bands as the
+    * original build (a mismatch makes appended rows unreachable, not
+    * wrong). */
   def nearDupIndex(corpus: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, numHashes: Int = 16, bands: Int = 4): DataFrame = {
     val par = corpus.sparkSession.sparkContext.defaultParallelism
@@ -280,7 +310,9 @@ object StreamingOps {
     * nChunks−1 by pigeonhole; 4×16-bit default covers radius ≤ 3, build
     * at nChunks = 8 for the JPEG-re-encode hamming-4..7 regime). Build
     * once in batch; caller-persisted; the flag side must use the SAME
-    * nChunks. */
+    * nChunks. Grown per micro-batch by [[appendSink]] over this function
+    * (append == rebuild, S16/S19), at the `nChunks` the index was first
+    * built at. */
   def imageDupIndex(corpus: DataFrame, id: Column, payload: Column,
       nChunks: Int = 4): DataFrame =
     bandIndex64(graft.operators.MultimodalOps.imageAHash(
@@ -305,7 +337,9 @@ object StreamingOps {
     * axis: decode every corpus clip once
     * ([[graft.operators.MultimodalOps.audioFingerprint]], the 64-bit
     * energy-envelope hash of real PCM), keep decodable rows, band-explode.
-    * Build once in batch; caller-persisted. */
+    * Build once in batch; caller-persisted. Grown per micro-batch by
+    * [[appendSink]] over this function (append == rebuild, S17/S19), at
+    * the `nChunks` the index was first built at. */
   def audioDupIndex(corpus: DataFrame, id: Column, payload: Column,
       nChunks: Int = 4): DataFrame =
     bandIndex64(graft.operators.MultimodalOps.audioFingerprint(
@@ -330,7 +364,8 @@ object StreamingOps {
     * rows at flag time (frame indices are an ok-prefix, so the sorted
     * collect IS the signature), rather than duplicated onto every band
     * row (which would make the persisted index O(frames²) per video).
-    * Build once in batch; caller-persisted. */
+    * Build once in batch; caller-persisted. Grown per micro-batch by
+    * [[appendSink]] over this function (append == rebuild, S18/S19). */
   def videoDupIndex(corpus: DataFrame, id: Column, payload: Column): DataFrame =
     graft.operators.MultimodalOps.videoFrameHashVec(
         corpus.select(id.cast("long").as("doc_id"), payload.as("payload")))
@@ -466,15 +501,12 @@ object StreamingOps {
 
   /** The streaming query's STABLE id, read from `<checkpoint>/metadata`
     * (Spark writes it at query start, before the first batch runs). This
-    * is the one discriminator with exactly the lifetime the summed
-    * append logs ([[cmsAppendSink]]/[[gramAppendSink]]) need: it stays
-    * the SAME across restarts from one checkpoint (so an at-least-once
-    * replay of batch N still collapses with its first attempt) and is
-    * FRESH for a new checkpoint (where batch ids restart at 0 — without
-    * it, two distinct lifetimes' batch-0 summaries would silently
-    * max-collapse into each other and corrupt the summed state). The
-    * per-START `runId` would be wrong here: a batch replayed across a
-    * restart carries a new runId and would double-count. */
+    * is the one discriminator with exactly the lifetime the stamped and
+    * overwrite postures need: it stays the SAME across restarts from one
+    * checkpoint (so a replay of batch N still meets its first attempt)
+    * and is FRESH for a new checkpoint (where batch ids restart at 0).
+    * The per-START `runId` would be wrong here: a batch replayed across a
+    * restart carries a new runId. */
   private[streaming] def checkpointQueryId(
       spark: org.apache.spark.sql.SparkSession, checkpoint: String): String = {
     val p = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
@@ -497,6 +529,79 @@ object StreamingOps {
     idNode.asText
   }
 
+  /** [[foreachBatchSink]] whose writes also get the checkpoint lifetime's
+    * query id, read once on the first batch and kept for the query. */
+  private def queryIdSink(stream: DataFrame, queryName: String,
+      checkpoint: String)(write: (DataFrame, Long, String) => Unit) = {
+    var qid: String = null
+    foreachBatchSink(stream, queryName, checkpoint) { (batch, id) =>
+      if (qid == null) qid = checkpointQueryId(batch.sparkSession, checkpoint)
+      write(batch, id, qid)
+    }
+  }
+
+  private def appendTo(path: String)(rows: DataFrame): Unit =
+    rows.write.mode("append").parquet(path)
+
+  /** The APPEND posture: each micro-batch's `rows` append to the parquet
+    * log at `path`, at least once — see the object doc for what absorbs
+    * a replayed batch. Returns the writer; call `.start()` (optionally
+    * with a trigger) to run. */
+  def appendSink(stream: DataFrame, path: String, queryName: String,
+      checkpoint: String)(rows: DataFrame => DataFrame): DataStreamWriter[Row] =
+    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
+      appendTo(path)(rows(batch))
+    }
+
+  /** The STAMPED posture: [[appendSink]] with every row tagged by its
+    * `batch_id` and the checkpoint lifetime's `sink_query_id` (then the
+    * `trailing` columns), so [[collapseReplays]] counts a replayed batch
+    * once. For logs whose read face SUMS. */
+  private def stampedAppendSink(stream: DataFrame, path: String,
+      queryName: String, checkpoint: String, trailing: Column*)(
+      rows: DataFrame => DataFrame): DataStreamWriter[Row] =
+    queryIdSink(stream, queryName, checkpoint) { (batch, id, qid) =>
+      appendTo(path)(rows(batch).select(col("*") +: lit(id).as("batch_id") +:
+        lit(qid).as("sink_query_id") +: trailing: _*))
+    }
+
+  /** The OVERWRITE posture: each micro-batch's `rows` overwrite the
+    * partition directory `path/sink_query_id=<qid>/batch_id=<id>`, so a
+    * replay replaces its first attempt wholesale (last attempt wins) and a
+    * second checkpoint lifetime's batch 0 never clobbers the first's.
+    * Readers `spark.read.parquet(path)`: both levels surface as columns. */
+  private def batchOverwriteSink(stream: DataFrame, path: String,
+      queryName: String, checkpoint: String)(
+      rows: DataFrame => DataFrame): DataStreamWriter[Row] =
+    queryIdSink(stream, queryName, checkpoint) { (batch, id, qid) =>
+      rows(batch).write.mode("overwrite")
+        .parquet(s"$path/sink_query_id=$qid/batch_id=$id")
+    }
+
+  /** A log read with `mergeSchema`: a log mixing files written before a
+    * column was added (`sink_query_id`, `sink_k`, `sink_dim`) with newer
+    * ones must not let Spark take its schema from an OLD footer and drop
+    * the column for every row. */
+  private def readLog(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(path)
+
+  /** Read side of [[stampedAppendSink]]: the max `value` per (lifetime,
+    * batch, cell) — a replay re-emits the same value for the same stamp —
+    * then the sum per cell. Rows that predate `sink_query_id` share one
+    * sentinel lifetime (the old batch-id-only collapse). */
+  private def collapseReplays(log: DataFrame, cell: Seq[String],
+      value: String): DataFrame = {
+    val old = lit("pre-upgrade")
+    val run =
+      if (log.columns.contains("sink_query_id")) coalesce(col("sink_query_id"), old)
+      else old
+    log.groupBy(run.as("__run") +: col("batch_id") +: cell.map(col): _*)
+      .agg(max(col(value)).as(value))
+      .groupBy(cell.map(col): _*)
+      .agg(sum(col(value)).as(value))
+  }
+
   /** Incremental maintenance of a STORED IVF×PQ index: every arriving
     * micro-batch is encoded against the SAME frozen coarse/PQ models
     * (collected ONCE here, not per batch) and its (id, cell, codes) rows
@@ -507,22 +612,15 @@ object StreamingOps {
     * rebuild-then-search over the union: the stored index stays valid as
     * the corpus grows, no re-encode of existing rows ever needed.
     *
-    * Delivery: parquet-append under foreachBatch is at-least-once across
-    * failure/retry — a re-run batch appends duplicate (id, cell, codes)
-    * rows (identical by determinism). Duplicates are NOT free for search:
-    * a duplicated candidate id can occupy two top-k slots and displace a
-    * distinct neighbor, so search-after-crash-retry may differ from
-    * search-over-rebuild. For exactly-once layouts dedup on id downstream
-    * or write batch-id-deterministic file paths. Returns the writer — call `.start()`
-    * (optionally with a trigger) to run. */
+    * Append posture. Duplicates from a replayed batch are NOT free for
+    * search: a duplicated candidate id can occupy two top-k slots and
+    * displace a distinct neighbor, so search-after-replay may differ from
+    * search-over-rebuild until the index is compacted. */
   def ivfPqAppendSink(stream: DataFrame, id: Column, vec: Column,
       coarseModel: DataFrame, pqModel: DataFrame, dim: Int, path: String,
-      queryName: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val encode = graft.api.GraftOps.ivfPqEncoder(id, vec, coarseModel, pqModel, dim)
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      encode(batch).write.mode("append").parquet(path)
-    }
-  }
+      queryName: String, checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.ivfPqEncoder(id, vec, coarseModel, pqModel, dim))
 
   /** The residual-tier twin of [[ivfPqAppendSink]]: micro-batches encode
     * through [[graft.api.GraftOps.ivfRpqEncoder]] (frozen coarse +
@@ -534,12 +632,9 @@ object StreamingOps {
     * WHOLE index (appended batches included) must be re-encoded. */
   def ivfRpqAppendSink(stream: DataFrame, id: Column, vec: Column,
       coarseModel: DataFrame, rpqModel: DataFrame, dim: Int, path: String,
-      queryName: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val encode = graft.api.GraftOps.ivfRpqEncoder(id, vec, coarseModel, rpqModel, dim)
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      encode(batch).write.mode("append").parquet(path)
-    }
-  }
+      queryName: String, checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.ivfRpqEncoder(id, vec, coarseModel, rpqModel, dim))
 
   /** ADMISSION-INDEX append maintenance (round 14) — the
     * [[ivfPqAppendSink]] idea applied to the S14–S18 admission indexes:
@@ -549,86 +644,40 @@ object StreamingOps {
     * original batch-built corpus. Every index row is a pure per-row
     * function of its payload (no model, no other rows), so
     * append-then-flag EXACTLY equals rebuild-then-flag over the union
-    * (spec'd: S19, and the batch union laws) — with the same
-    * at-least-once delivery caveat as [[ivfPqAppendSink]]: a
-    * crash-retried batch appends duplicate index rows, which duplicate
-    * FLAG rows (never wrong flags) until a compaction pass dedups the
-    * index. Feed these sinks the ADMITTED stream (post
-    * [[fingerprintAdmit]]/flag filtering), or the raw one to index
-    * everything that arrives. */
+    * (spec'd: S19, and the batch union laws). Append posture: a replayed
+    * batch appends duplicate index rows, which duplicate FLAG rows (never
+    * wrong flags) until a compaction pass dedups the index. Feed these
+    * sinks the ADMITTED stream (post [[fingerprintAdmit]]/flag
+    * filtering), or the raw one to index everything that arrives. The
+    * other per-row tiers append through [[appendSink]] with their index
+    * function ([[nearDupIndex]], [[imageDupIndex]], [[audioDupIndex]],
+    * [[videoDupIndex]]). */
   def fingerprintAppendSink(stream: DataFrame, id: Column, text: Column,
       path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      fingerprintIndex(batch, id, text).write.mode("append").parquet(path)
-    }
-
-  /** [[fingerprintAppendSink]] for the S10 TEXT near-dup band index —
-    * MinHash band rows are a pure per-row function of (text, the baked
-    * hash family), so the same append == rebuild law holds. Band
-    * parameters must match the index being grown (same shingleWidth /
-    * numHashes / bands as the original [[nearDupIndex]] build — a
-    * mismatch makes appended rows unreachable, not wrong). */
-  def nearDupAppendSink(stream: DataFrame, id: Column, text: Column,
-      path: String, queryName: String, checkpoint: String,
-      shingleWidth: Int = 3, numHashes: Int = 16,
-      bands: Int = 4): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      nearDupIndex(batch, id, text, shingleWidth, numHashes, bands)
-        .write.mode("append").parquet(path)
-    }
-
-  /** [[fingerprintAppendSink]] for the image band index (S16) — `nChunks`
-    * must match the banding the index was originally built at. */
-  def imageDupAppendSink(stream: DataFrame, id: Column, payload: Column,
-      path: String, queryName: String, checkpoint: String,
-      nChunks: Int = 4): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      imageDupIndex(batch, id, payload, nChunks)
-        .write.mode("append").parquet(path)
-    }
-
-  /** [[fingerprintAppendSink]] for the audio band index (S17) — same
-    * build-time `nChunks` contract. */
-  def audioDupAppendSink(stream: DataFrame, id: Column, payload: Column,
-      path: String, queryName: String, checkpoint: String,
-      nChunks: Int = 4): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      audioDupIndex(batch, id, payload, nChunks)
-        .write.mode("append").parquet(path)
-    }
-
-  /** [[fingerprintAppendSink]] for the video frame-signature index
-    * (S18). */
-  def videoDupAppendSink(stream: DataFrame, id: Column, payload: Column,
-      path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      videoDupIndex(batch, id, payload).write.mode("append").parquet(path)
-    }
+      checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(fingerprintIndex(_, id, text))
 
   /** The S25 SEMANTIC tier's append maintenance — same law as the other
     * per-row tiers because a cell assignment is a pure per-row function
     * of (vector, the FROZEN model): append-then-flag == rebuild-then-
-    * flag over the union exactly, with the usual at-least-once retry
-    * caveat. Same model-lifecycle rule as [[ivfRpqAppendSink]]: if the
-    * kmeans model is ever retrained, the whole index (appended batches
-    * included) must be re-assigned — appended rows carry the OLD cell
-    * geometry and would silently stop matching re-routed arrivals. */
+    * flag over the union exactly, in the append posture. Same
+    * model-lifecycle rule as [[ivfRpqAppendSink]]: if the kmeans model is
+    * ever retrained, the whole index (appended batches included) must be
+    * re-assigned — appended rows carry the OLD cell geometry and would
+    * silently stop matching re-routed arrivals. */
   def semanticDupAppendSink(stream: DataFrame, id: Column, vec: Column,
       model: DataFrame, path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpoint: String): DataStreamWriter[Row] = {
     // collect the trained constants ONCE at sink build, not per batch
     val cents = graft.api.GraftOps.collectModel(model)
     require(cents.nonEmpty, "semanticDupAppendSink with an empty model")
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
+    appendSink(stream, path, queryName, checkpoint) { batch =>
       batch.select(id.as("dup_of"), vec.as("__cv"))
         .filter(col("__cv").isNotNull)
         .withColumn("cluster",
           element_at(graft.functions.NearestCells(col("__cv"),
             cents.map(_._2), cents.map(_._1)), 1))
         .select(col("cluster"), col("dup_of"), col("__cv"))
-        .write.mode("append").parquet(path)
     }
   }
 
@@ -638,14 +687,14 @@ object StreamingOps {
     * and the reader derives the index with
     * [[graft.api.GraftOps.spanIndexFromCounts]]. Exact under the
     * each-doc-arrives-once contract (distinct-doc counts then merge as
-    * plain sums); the S19 law pins incremental == one-batch. */
+    * plain sums); the S19 law pins incremental == one-batch. Append
+    * posture, so a replayed batch's counts add twice (the over-count
+    * [[graft.api.GraftOps.compactSpanCounts]] documents). */
   def spanIndexAppendSink(stream: DataFrame, id: Column, text: Column,
       width: Int, path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      graft.api.GraftOps.spanIndexCounts(batch, id, text, width)
-        .write.mode("append").parquet(path)
-    }
+      checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.spanIndexCounts(_, id, text, width))
 
   /** S20 — continuously-maintained upsert table (the streaming twin of
     * [[graft.api.GraftOps.applyChanges]], completing the changelog
@@ -663,19 +712,15 @@ object StreamingOps {
     * latestByKey(all changes), whatever the chunking — S20 pins
     * stream == batch over unordered chunks. Tombstones stay IN the log
     * (and in compacted state) so an out-of-order older update can never
-    * resurrect a deleted key; only the read face filters them. An
-    * at-least-once retry re-appends the identical winner rows, which
-    * the read-side reduction collapses — same crash caveat and cure as
-    * every other append sink (S19). Columns are passed BY NAME so a
+    * resurrect a deleted key; only the read face filters them. Append
+    * posture: a replay re-appends the identical winner rows, which the
+    * read-side reduction collapses. Columns are passed BY NAME so a
     * restarted sink binds against the restored plan. */
   def upsertAppendSink(stream: DataFrame, key: Seq[String], version: String,
       tiebreak: String, path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      graft.api.GraftOps.latestByKey(batch, key.map(col),
-          col(version), col(tiebreak))
-        .write.mode("append").parquet(path)
-    }
+      checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.latestByKey(_, key.map(col), col(version), col(tiebreak)))
 
   /** Read face of [[upsertAppendSink]]'s log: the current table — one
     * winning row per key, tombstones filtered HERE (never from the
@@ -698,18 +743,14 @@ object StreamingOps {
     * never a per-batch read-modify-write of O(keys) state. Per-field
     * max over the (version, tiebreak) total order is associative, so
     * state == batch [[graft.api.GraftOps.goldenRecord]] over all
-    * changes for ANY chunking (law S26); an at-least-once retry
-    * re-appends identical winner structs, which the read-side max
-    * collapses (the S19 caveat and cure). Columns by NAME so a
-    * restarted sink binds against the restored plan. */
+    * changes for ANY chunking (law S26); a replay re-appends identical
+    * winner structs, which the read-side max collapses. Columns by NAME
+    * so a restarted sink binds against the restored plan. */
   def goldenRecordAppendSink(stream: DataFrame, key: Seq[String],
       version: String, tiebreak: String, fields: Seq[String], path: String,
-      queryName: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      graft.api.GraftOps.goldenRecordDelta(batch, key, version, tiebreak,
-          fields)
-        .write.mode("append").parquet(path)
-    }
+      queryName: String, checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.goldenRecordDelta(_, key, version, tiebreak, fields))
 
   /** Read face of [[goldenRecordAppendSink]]'s log: per key, each
     * field's surviving value (the max winner struct's `x`) plus
@@ -730,64 +771,24 @@ object StreamingOps {
     * of [[graft.api.GraftOps.cmsSketch]], the S19/S20/S26 append +
     * reduce-on-read posture applied to the sketch algebra): each
     * micro-batch's OWN sketch cells append to a parquet log at `path`
-    * with the batch id (≤ depth·width rows per batch — the log grows
-    * with batches, never with keys), and [[cmsState]] folds the log by
-    * the q150 merge law (sketch of a union == cell-wise sum), so state
-    * == batch cmsSketch over everything for ANY chunking (law S29).
-    * Retry absorption is NOT free for a summed sketch the way it is for
-    * the max/distinct sinks — a re-appended batch would double-count —
-    * so cells carry `batch_id` plus the checkpoint lifetime's stable
-    * `sink_query_id` ([[checkpointQueryId]]) and the read side collapses
-    * replayed batches by max-per-(query id, batch id, cell) BEFORE
-    * summing (a retried foreachBatch re-emits identical cells for the
-    * same id — the S19 caveat with the sum-specific cure; spec'd). The
-    * query-id scope matters: batch ids RESTART AT 0 under a fresh
-    * checkpoint, so a path that outlives its checkpoint (or is shared
-    * by two queries) would otherwise silently max-collapse DISTINCT
-    * batches into each other; with the id, separate lifetimes sum. */
+    * (≤ depth·width rows per batch — the log grows with batches, never
+    * with keys), and [[cmsState]] folds the log by the q150 merge law
+    * (sketch of a union == cell-wise sum), so state == batch cmsSketch
+    * over everything for ANY chunking (law S29). A summed sketch cannot
+    * absorb a replay for free, so this sink is in the stamped posture. */
   def cmsAppendSink(stream: DataFrame, key: String, depth: Int, width: Int,
       path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    // the stable query id (cached after the first batch) disambiguates
-    // CHECKPOINT LIFETIMES: under a fresh checkpoint batch ids restart
-    // at 0, and without it two distinct batches sharing an id would
-    // silently max-collapse on read — see [[checkpointQueryId]]
-    var qid: String = null
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, id) =>
-      if (qid == null) qid = checkpointQueryId(batch.sparkSession, checkpoint)
-      graft.api.GraftOps.cmsSketch(batch, col(key), depth, width)
-        .withColumn("batch_id", lit(id))
-        .withColumn("sink_query_id", lit(qid))
-        .write.mode("append").parquet(path)
-    }
-  }
+      checkpoint: String): DataStreamWriter[Row] =
+    stampedAppendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.cmsSketch(_, col(key), depth, width))
 
   /** Read face of [[cmsAppendSink]]'s log: one row per live cell —
     * row-equal to batch [[graft.api.GraftOps.cmsSketch]] over every row
     * ever streamed (law S29); feed it to
     * [[graft.api.GraftOps.cmsQuery]] unchanged. */
   def cmsState(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    // mergeSchema: a log mixing pre-upgrade files (no sink_query_id
-    // column) with post-upgrade ones must not let Spark sample its
-    // schema from an OLD footer and silently drop the column for every
-    // row — that would reintroduce the fresh-checkpoint batch-0
-    // max-collapse this column exists to prevent
-    val log = spark.read.option("mergeSchema", "true").parquet(path)
-    // replay collapse is scoped per CHECKPOINT LIFETIME: (query id,
-    // batch id) — batch ids alone restart at 0 under a fresh checkpoint
-    // and would silently merge distinct batches. Logs (or rows) that
-    // predate the sink_query_id column can't be disambiguated; they
-    // keep the old batch-id-only collapse under one sentinel lifetime.
-    val runKey =
-      if (log.columns.contains("sink_query_id"))
-        coalesce(col("sink_query_id"), lit("pre-upgrade"))
-      else lit("pre-upgrade")
-    log.groupBy(runKey.as("__run"), col("batch_id"), col("j"), col("bucket"))
-      .agg(max(col("c")).as("c")) // collapse at-least-once re-appends
-      .groupBy(col("j"), col("bucket"))
-      .agg(sum(col("c")).as("c"))
-  }
+      path: String): DataFrame =
+    collapseReplays(readLog(spark, path), Seq("j", "bucket"), "c")
 
   /** S30 — continuously-maintained KMV distinct sketch (the streaming
     * face of [[graft.api.GraftOps.kmvSketch]]): each micro-batch's own
@@ -795,19 +796,17 @@ object StreamingOps {
     * [[kmvState]] re-derives the global bottom-k from the log — any
     * hash in the TRUE bottom-k of the union is in its own batch's
     * bottom-k, so state == batch kmvSketch over everything for ANY
-    * chunking (law S30). Hash values are content-deterministic, so an
-    * at-least-once retry re-appends identical (grp, h) rows and the
-    * read-side distinct collapses them (the S19 cure, free here). The
-    * sink's `k` is persisted with every appended row (`sink_k`) so the
-    * read face can PROVE the law's premise instead of assuming it. */
+    * chunking (law S30). Hash values are content-deterministic, so a
+    * replay re-appends identical (grp, h) rows and the read-side
+    * distinct collapses them (append posture). The sink's `k` is
+    * persisted with every appended row (`sink_k`) so the read face can
+    * PROVE the law's premise instead of assuming it. */
   def kmvAppendSink(stream: DataFrame, group: String, value: String,
       k: Int, path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, _) =>
-      graft.api.GraftOps.kmvSketch(batch, col(group), col(value), k)
-        .withColumn("sink_k", lit(k))
-        .write.mode("append").parquet(path)
-    }
+      checkpoint: String): DataStreamWriter[Row] =
+    appendSink(stream, path, queryName, checkpoint)(
+      graft.api.GraftOps.kmvSketch(_, col(group), col(value), k)
+        .withColumn("sink_k", lit(k)))
 
   /** Read face of [[kmvAppendSink]]'s log: the global per-group
     * bottom-k — row-equal to batch [[graft.api.GraftOps.kmvSketch]]
@@ -823,9 +822,7 @@ object StreamingOps {
     * the rows that carry one. */
   def kmvState(spark: org.apache.spark.sql.SparkSession, path: String,
       k: Int): DataFrame = {
-    // mergeSchema: never let a pre-upgrade footer hide the sink_k
-    // column of newer appends (the cmsState note)
-    val log = spark.read.option("mergeSchema", "true").parquet(path)
+    val log = readLog(spark, path)
     if (log.columns.contains("sink_k")) {
       val agg = log.agg(min(col("sink_k")),
         count(lit(1)), count(col("sink_k"))).first()
@@ -852,37 +849,21 @@ object StreamingOps {
 
   /** S31 — continuously-maintained Gram/PCA model statistic (the
     * streaming face of [[graft.api.GraftOps.gramSummaryRows]]): each
-    * micro-batch's own packed Gram summary appends tagged with the
-    * batch id (1 + dim + dim(dim+1)/2 rows per batch — model-sized,
-    * never row-scale), and [[gramState]] folds the log by the summary's
-    * merge law (summary of a union == idx-wise Long sum), so state ==
-    * batch gramSummaryRows over everything for ANY chunking (law S31).
-    * Like the S29 cells, a summed statistic cannot absorb an
-    * at-least-once replay for free — rows carry `batch_id` plus the
-    * checkpoint lifetime's stable `sink_query_id` and the read side
-    * collapses replays by max-per-(query id, batch id, idx) BEFORE
-    * summing (batch ids restart at 0 under a fresh checkpoint; the
-    * query id keeps distinct lifetimes from max-collapsing — the
-    * cmsAppendSink note). Feed [[gramState]]'s output to
-    * [[graft.api.GraftOps.pcaFitFromSummary]] for a fresh PCA model
-    * per read — streaming model maintenance with no history re-scan. */
+    * micro-batch's own packed Gram summary appends (1 + dim +
+    * dim(dim+1)/2 rows per batch — model-sized, never row-scale), and
+    * [[gramState]] folds the log by the summary's merge law (summary of
+    * a union == idx-wise Long sum), so state == batch gramSummaryRows
+    * over everything for ANY chunking (law S31). Like the S29 cells, a
+    * summed statistic is in the stamped posture. Feed [[gramState]]'s
+    * output to [[graft.api.GraftOps.pcaFitFromSummary]] for a fresh PCA
+    * model per read — streaming model maintenance with no history
+    * re-scan. */
   def gramAppendSink(stream: DataFrame, vec: String, dim: Int,
       path: String, queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    // stable query id per checkpoint lifetime — see [[checkpointQueryId]]
-    // and the cmsAppendSink note: a fresh checkpoint restarts batch ids
-    // at 0, and a summed statistic must never max-collapse two DISTINCT
-    // batches that merely share an id
-    var qid: String = null
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, id) =>
-      if (qid == null) qid = checkpointQueryId(batch.sparkSession, checkpoint)
-      graft.api.GraftOps.gramSummaryRows(batch, col(vec), dim)
-        .withColumn("batch_id", lit(id))
-        .withColumn("sink_query_id", lit(qid))
-        .withColumn("sink_dim", lit(dim))
-        .write.mode("append").parquet(path)
-    }
-  }
+      checkpoint: String): DataStreamWriter[Row] =
+    stampedAppendSink(stream, path, queryName, checkpoint,
+        lit(dim).as("sink_dim"))(
+      graft.api.GraftOps.gramSummaryRows(_, col(vec), dim))
 
   /** Read face of [[gramAppendSink]]'s log: the (idx, v) packed Gram
     * summary — row-equal to batch
@@ -894,9 +875,7 @@ object StreamingOps {
     * read fails loudly on a mixed-dim log. */
   def gramState(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
-    // mergeSchema: never let a pre-upgrade footer hide the sink_dim /
-    // sink_query_id columns of newer appends (the cmsState note)
-    val log = spark.read.option("mergeSchema", "true").parquet(path)
+    val log = readLog(spark, path)
     if (log.columns.contains("sink_dim")) {
       val dims = log.select(col("sink_dim")).filter(col("sink_dim").isNotNull)
         .distinct().collect().map(_.getInt(0)).sorted
@@ -904,17 +883,7 @@ object StreamingOps {
         s"gramState: log at $path mixes summaries of different dims " +
           s"(${dims.mkString(", ")}) — their packed layouts must never sum")
     }
-    // replay collapse scoped per checkpoint lifetime (the cmsState
-    // posture): batch ids restart at 0 under a fresh checkpoint, and a
-    // summed Gram must never max-collapse two distinct batch-0s
-    val runKey =
-      if (log.columns.contains("sink_query_id"))
-        coalesce(col("sink_query_id"), lit("pre-upgrade"))
-      else lit("pre-upgrade")
-    log.groupBy(runKey.as("__run"), col("batch_id"), col("idx"))
-      .agg(max(col("v")).as("v")) // collapse at-least-once re-appends
-      .groupBy(col("idx"))
-      .agg(sum(col("v")).as("v"))
+    collapseReplays(log, Seq("idx"), "v")
   }
 
   /** S32 — the streaming SCORING face over a STORED model table:
@@ -941,31 +910,20 @@ object StreamingOps {
     * vectors and a model table missing its intercept/mean rows fail
     * loudly inside the batch (the batch faces' own guards).
     *
-    * At-least-once cure: foreachBatch can REPLAY a batch (append
-    * succeeded, checkpoint commit didn't) — and by then the model may
-    * have been refreshed, so a replayed append would write CONFLICTING
-    * score rows no read-side dedup could adjudicate. Each batch
-    * therefore OVERWRITES its own partition directory
-    * `path/sink_query_id=<qid>/batch_id=<id>` instead of appending: a
-    * replay replaces its first attempt wholesale (last attempt wins,
-    * consistent within the batch — exactly-once output from an
-    * at-least-once contract), and the query-id level keeps a second
-    * checkpoint lifetime's batch-0 from clobbering the first's (the
-    * gramAppendSink discriminator). Readers just
-    * `spark.read.parquet(path)` — both levels surface as columns. */
+    * Overwrite posture: by the time a batch replays, the model may have
+    * been refreshed, so a replayed append would write CONFLICTING score
+    * rows no read-side dedup could adjudicate. */
   def scoreStreamSink(stream: DataFrame, vec: String, dim: Int,
       modelPath: String, modelKind: String, path: String,
       queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
+      checkpoint: String): DataStreamWriter[Row] = {
     val kinds = Set("ridge", "logistic", "pca")
     require(kinds(modelKind),
       s"scoreStreamSink: unknown modelKind '$modelKind' " +
         s"(expected one of ${kinds.toSeq.sorted.mkString(", ")})")
-    var qid: String = null
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, id) =>
-      if (qid == null) qid = checkpointQueryId(batch.sparkSession, checkpoint)
+    batchOverwriteSink(stream, path, queryName, checkpoint) { batch =>
       val model = graft.Tables.parquet(batch.sparkSession, modelPath)
-      val scored = modelKind match {
+      modelKind match {
         case "ridge" =>
           graft.api.GraftOps.ridgeApply(batch, col(vec), model, dim)
         case "logistic" =>
@@ -973,8 +931,6 @@ object StreamingOps {
         case "pca" =>
           graft.api.GraftOps.pcaProject(batch, col(vec), model, dim)
       }
-      scored.write.mode("overwrite")
-        .parquet(s"$path/sink_query_id=$qid/batch_id=$id")
     }
   }
 
@@ -997,34 +953,25 @@ object StreamingOps {
     * packed-layout check, an un-fittable state (n < 2, rank-deficient
     * at λ=0) fails loudly in the solve — never silent zero scores.
     *
-    * At-least-once cure (sharper here than in [[scoreStreamSink]]: a
-    * replayed batch refolds a possibly-GROWN gram log, so its re-fit
+    * Overwrite posture, for a sharper reason than [[scoreStreamSink]]'s:
+    * a replayed batch refolds a possibly-GROWN gram log, so its re-fit
     * model — and every score and `model_n` — can legitimately differ
-    * from the first attempt's): each batch OVERWRITES its own
-    * `path/sink_query_id=<qid>/batch_id=<id>` partition directory, so
-    * the replay REPLACES the first attempt (one consistent
-    * model-per-batch in the log, never two conflicting copies), and
-    * distinct checkpoint lifetimes keep distinct directories. */
+    * from the first attempt's; the log keeps one consistent
+    * model-per-batch, never two conflicting copies. */
   def ridgeScoreStreamSink(stream: DataFrame, vec: String, dim: Int,
       gramLog: String, lambdaPpm: Long, path: String,
       queryName: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    var qid: String = null
-    foreachBatchSink(stream, queryName, checkpoint) { (batch, id) =>
-      if (qid == null) qid = checkpointQueryId(batch.sparkSession, checkpoint)
-      val s = batch.sparkSession
+      checkpoint: String): DataStreamWriter[Row] =
+    batchOverwriteSink(stream, path, queryName, checkpoint) { batch =>
       // one tiny log fold shared by the refit and the provenance stamp
       // (localCheckpoint: the state is model-sized × batches)
-      val state = gramState(s, gramLog).localCheckpoint(true)
+      val state = gramState(batch.sparkSession, gramLog).localCheckpoint(true)
       val model =
         graft.api.GraftOps.ridgeFitFromSummary(state, dim, lambdaPpm)
       val n = state.filter(col("idx") === 0).head().getLong(1)
       graft.api.GraftOps.ridgeApply(batch, col(vec), model, dim)
         .withColumn("model_n", lit(n))
-        .write.mode("overwrite")
-        .parquet(s"$path/sink_query_id=$qid/batch_id=$id")
     }
-  }
 
   /** Streaming heavy-hitter candidate summary — the streaming twin of
     * [[graft.api.GraftOps.heavyHittersSketch]]'s sketch half: one

@@ -3352,6 +3352,200 @@ class PipelineCompilerSpec extends AnyFunSuite with SharedSpark {
       "XML winnow report == API")
   }
 
+  test("declarative stream sinks start under their op name; each log read back == the batch twin") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import spark.implicits._
+    import graft.api.GraftOps
+    import graft.streaming.StreamingOps
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq; case x => x }.mkString("|")).toSeq.sorted
+    // query ids by name, terminal errors by id: an availableNow query
+    // may end before compile returns, and is still found and awaited
+    val started = new java.util.concurrent.ConcurrentHashMap[String, java.util.UUID]()
+    val ended = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit =
+        Option(e.name).foreach(started.put(_, e.id))
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.put(e.id, e.exception.getOrElse(""))
+    }
+    // one fileStreamInput over `in`, plus viewInput side ports, into `op`
+    // with trigger=availableNow; runs the query named `op` to its end and
+    // returns the log path
+    def runSink(op: String, in: DataFrame, ddl: String,
+        args: Map[String, String], sides: Map[String, String] = Map.empty): String = {
+      val staging = tmp("cov-in"); in.write.mode("overwrite").parquet(staging)
+      val path = tmp("cov-log")
+      val all = args ++ Map("path" -> path, "checkpoint" -> tmp("cov-ck"),
+        "trigger" -> "availableNow")
+      val xml = s"""
+        <pipeline>
+          <operator name="src" class="fileStreamInput">
+            <arg key="path" value="$staging"/><arg key="format" value="parquet"/>
+            <arg key="schema" value="${ddl.replace("<", "&lt;").replace(">", "&gt;")}"/>
+          </operator>
+          ${sides.map { case (p, v) => s"""<operator name="side_$p" class="viewInput">
+            <arg key="table" value="$v"/></operator>""" }.mkString}
+          <operator name="sink" class="$op">
+            ${all.map { case (k, v) => s"""<arg key="$k" value="$v"/>""" }.mkString}
+          </operator>
+          <connect from="src.outport1" to="sink.inport1"/>
+          ${sides.keys.map(p => s"""<connect from="side_$p.outport1" to="sink.$p"/>""").mkString}
+        </pipeline>"""
+      started.clear()
+      val before = spark.conf.get("spark.sql.shuffle.partitions")
+      PipelineCompiler.compile(PipelineSpec.parseXml(xml), spark)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
+        s"$op compile must restore the session's shuffle-partition conf")
+      val id = Option(started.get(op))
+        .getOrElse(fail(s"$op did not start a query named $op"))
+      val deadline = System.nanoTime() + 120L * 1000000000L
+      while (!ended.containsKey(id) && System.nanoTime() < deadline) Thread.sleep(50)
+      Option(spark.streams.get(id)).foreach(_.stop())
+      val err = Option(ended.get(id))
+        .getOrElse(fail(s"$op did not finish its availableNow run"))
+      assert(err.isEmpty, s"$op failed: $err")
+      path
+    }
+    val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "the quick brown fox jumps over the lazy cat"),
+      (3L, "a different sentence about streams and their sinks"),
+      (4L, "the quick brown fox jumps over the lazy dog")).toDF("id", "text")
+    val docsDdl = "id BIGINT, text STRING"
+    def v(xs: Double*): Seq[Float] = xs.map(_.toFloat)
+    val vecs = Seq((1L, v(1.0, 0.02, 0.0)), (2L, v(0.98, 0.05, 0.0)),
+      (3L, v(0.0, 0.01, 1.0)), (4L, v(0.02, 0.0, 0.97))).toDF("id", "vec")
+    val fit = GraftOps.kmeansFit(vecs, col("id"), col("vec"), k = 2, iters = 2)
+    val model = spark.createDataFrame(
+      java.util.Arrays.asList(fit.collect(): _*), fit.schema)
+    model.createOrReplaceTempView("cov_sem_model")
+    val rnd = new scala.util.Random(61)
+    def png(seed: Int): Array[Byte] = {
+      val r = new scala.util.Random(seed)
+      val img = new java.awt.image.BufferedImage(16, 16,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until 16; x <- 0 until 16) {
+        val g = r.nextInt(256); img.setRGB(x, y, (g << 16) | (g << 8) | g) }
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
+    def wav(): Array[Byte] = {
+      val pcm = Array.fill(512)(rnd.nextInt(256).toByte)
+      val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(new javax.sound.sampled.AudioInputStream(
+          new java.io.ByteArrayInputStream(pcm), fmt, 256L),
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      bos.toByteArray
+    }
+    def gif(s: Int): Array[Byte] = graft.operators.MultimodalOps.syntheticGrayGif(
+      8, 8, 3, (f, x, y) => math.abs((s * 7919 + f * 997 + x * 131 + y * 31) % 256))
+    val corrupt = Array[Byte](9, 9, 9)
+    val media = Map(
+      "image" -> Seq((1L, png(1)), (2L, png(2)), (3L, png(1)), (4L, corrupt)),
+      "audio" -> Seq((1L, wav()), (2L, wav()), (3L, corrupt)),
+      "video" -> Seq((1L, gif(1)), (2L, gif(2)), (3L, corrupt)))
+      .map { case (k, s) => k -> s.toDF("id", "payload") }
+    val mediaTwin = Map[String, DataFrame => DataFrame](
+      "image" -> (StreamingOps.imageDupIndex(_, col("id"), col("payload"))),
+      "audio" -> (StreamingOps.audioDupIndex(_, col("id"), col("payload"))),
+      "video" -> (StreamingOps.videoDupIndex(_, col("id"), col("payload"))))
+    val changes = Seq((1L, 1L, 10L, "u", "a1"), (2L, 5L, 11L, "u", "b1"),
+      (3L, 9L, 13L, "d", ""), (1L, 3L, 14L, "u", "a2"),
+      (2L, 2L, 15L, "u", "bOLD"), (3L, 5L, 16L, "u", "cOLD"))
+      .toDF("k", "v", "seq", "op", "payload")
+    val golden = Seq[(Long, Long, Long, Option[String], Option[String])](
+      (1L, 5L, 10L, Some("e5"), None), (1L, 3L, 11L, Some("eOLD"), Some("p3")),
+      (2L, 1L, 12L, Some("x1"), Some("y1")), (2L, 4L, 14L, None, Some("y4")))
+      .toDF("k", "v", "seq", "email", "phone")
+    val keys = Seq(("g1", "a"), ("g1", "b"), ("g2", "a"), ("g1", "a"),
+      ("g1", "c"), ("g2", "d")).toDF("g", "v")
+    val updArgs = Map("key" -> "k", "version" -> "v", "tiebreak" -> "seq")
+    // one row per sink: the log is read back through `read` (the op's
+    // read face, or the index itself) and compared with the batch `twin`
+    final case class Case(op: String, args: Map[String, String], in: DataFrame,
+        ddl: String, read: String => DataFrame, twin: DataFrame,
+        sides: Map[String, String] = Map.empty)
+    val parquet: String => DataFrame = spark.read.parquet(_)
+    val cases = Seq(
+      Case("parquetStreamSink", Map.empty, docs, docsDdl, parquet, docs),
+      Case("nearDupAppendSink", Map("id" -> "id", "text" -> "text"), docs, docsDdl,
+        parquet, StreamingOps.nearDupIndex(docs, col("id"), col("text"))),
+      Case("semanticDupAppendSink", Map("id" -> "id", "vec" -> "vec"), vecs,
+        "id BIGINT, vec ARRAY<FLOAT>", parquet,
+        StreamingOps.semanticDupIndex(vecs, col("id"), col("vec"), model),
+        sides = Map("inport2" -> "cov_sem_model")),
+      Case("spanIndexAppendSink", Map("id" -> "id", "text" -> "text"), docs, docsDdl,
+        p => GraftOps.spanIndexFromCounts(spark.read.parquet(p)),
+        GraftOps.spanIndexFromCounts(
+          GraftOps.spanIndexCounts(docs, col("id"), col("text"), 5))),
+      Case("upsertAppendSink", updArgs + ("shufflePartitions" -> "3"), changes,
+        "k BIGINT, v BIGINT, seq BIGINT, op STRING, payload STRING",
+        p => StreamingOps.upsertState(spark, p, Seq("k"), "v", "seq", col("op") === "d"),
+        GraftOps.applyChanges(changes, Seq(col("k")), col("v"), col("seq"),
+          col("op") === "d")),
+      Case("goldenRecordAppendSink", updArgs + ("fields" -> "email,phone"), golden,
+        "k BIGINT, v BIGINT, seq BIGINT, email STRING, phone STRING",
+        p => StreamingOps.goldenRecordState(spark, p, Seq("k"), "v", Seq("email", "phone")),
+        GraftOps.goldenRecord(golden, Seq(col("k")), "v", "seq", Seq("email", "phone"))),
+      Case("cmsAppendSink", Map("key" -> "v", "depth" -> "3", "width" -> "8"), keys,
+        "g STRING, v STRING", StreamingOps.cmsState(spark, _),
+        GraftOps.cmsSketch(keys, col("v"), 3, 8)),
+      Case("kmvAppendSink", Map("group" -> "g", "value" -> "v", "k" -> "2"), keys,
+        "g STRING, v STRING", StreamingOps.kmvState(spark, _, 2),
+        GraftOps.kmvSketch(keys, col("g"), col("v"), 2))) ++
+      Seq("image", "audio", "video").map(kind => Case("mediaDupAppendSink",
+        Map("kind" -> kind, "id" -> "id", "payload" -> "payload"), media(kind),
+        "id BIGINT, payload BINARY", parquet, mediaTwin(kind)(media(kind))))
+    spark.streams.addListener(listener)
+    try cases.foreach { c =>
+      val want = rows(c.twin)
+      assert(want.nonEmpty, s"${c.op}: the batch twin must not be empty")
+      assert(rows(c.read(runSink(c.op, c.in, c.ddl, c.args, c.sides))) == want,
+        s"${c.op} ${c.args.getOrElse("kind", "")}: log read back != batch twin")
+    } finally spark.streams.removeListener(listener)
+    // kafkaOutput starts through the same protocol; without the connector
+    // jar the start fails under the node's name
+    val connector = scala.util.Try(
+      Class.forName("org.apache.spark.sql.kafka010.KafkaSourceProvider")).isSuccess
+    if (!connector) {
+      val e = intercept[PipelineException](runSink("kafkaOutput", docs, docsDdl,
+        Map("brokers" -> "localhost:9092", "topic" -> "t")))
+      assert(e.getMessage.startsWith("sink run failed."), e.getMessage)
+    }
+  }
+
+  test("an unknown tier or curve, a negative triggerMs, or trigger with triggerMs fails the compile") {
+    val dir = java.nio.file.Files.createTempDirectory("bad-arg-in")
+    java.nio.file.Files.writeString(dir.resolve("a.json"), """{"id": 1}""" + "\n")
+    val src = OpNode("src", "fileStreamInput",
+      Map("schema" -> "id BIGINT", "path" -> dir.toUri.toString))
+    def sink(args: (String, String)*) = PipelineSpec(
+      Seq(src, OpNode("sink", "memoryStreamSink", Map("name" -> "bad_arg_out") ++ args)),
+      Seq(Edge("src.outport1", "sink.inport1")))
+    val cases = Seq(
+      PipelineSpec(Seq(OpNode("ix", "indexAppendSink", Map("tier" -> "residul",
+        "id" -> "id", "vec" -> "vec", "dim" -> "2", "path" -> "p",
+        "checkpoint" -> "c"))), Nil) -> "indexAppendSink tier must be one of raw, residual",
+      PipelineSpec(Seq(OpNode("zo", "zorder", Map("curve" -> "hilbrt",
+        "x" -> "a", "y" -> "b"))), Nil) -> "zorder curve must be one of z, hilbert",
+      sink("triggerMs" -> "-5") -> "triggerMs must be >= 0",
+      sink("trigger" -> "availableNow", "triggerMs" -> "0") ->
+        "give trigger or triggerMs, not both")
+    cases.foreach { case (spec, msg) =>
+      val e = intercept[PipelineException](PipelineCompiler.compile(spec, spark))
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    assert(!spark.streams.active.exists(_.name == "bad_arg_out"),
+      "a rejected trigger starts no query")
+  }
+
   test("bad operator args fail-fast with node name") {
     val spec = PipelineSpec(
       nodes = Seq(OpNode("in", "parquetInput", Map("dir" -> sf001, "table" -> "nope"))),

@@ -1706,6 +1706,104 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       "two batch deltas (2 + 3 keys) plus the retried delta (3 keys)")
   }
 
+  /** Feed two files through `sink` (one per micro-batch), stop, delete the
+    * last commit-log entry and restart from the same checkpoint: Spark then
+    * re-runs batch 1 through the sink's own write. Returns `snap` taken
+    * after the first run and again after the replay. */
+  private def replayLastBatch[T](files: Seq[org.apache.spark.sql.DataFrame])(
+      sink: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])(
+      snap: => T): (T, T) = {
+    val root = Files.createTempDirectory("graft-replay")
+    val src = root.resolve("src"); Files.createDirectory(src)
+    val ck = root.resolve("ck").toString
+    files.zipWithIndex.foreach { case (df, i) =>
+      val tmp = root.resolve(s"tmp-$i").toString
+      df.coalesce(1).write.parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
+      val dest = src.resolve(f"f-$i%02d.parquet")
+      Files.move(part.toPath, dest)
+      dest.toFile.setLastModified(1704103200000L + i * 2000L)
+    }
+    def run(): Seq[Long] = {
+      val q = sink(spark.readStream.schema(files.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src.toString), ck).start()
+      try q.processAllAvailable() finally q.stop()
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    }
+    assert(run() == Seq(0L, 1L), "one batch per file")
+    val first = snap
+    Seq("1", ".1.crc").foreach(f => Files.deleteIfExists(java.nio.file.Paths.get(ck, "commits", f)))
+    assert(run() == Seq(1L), "the restart re-runs the uncommitted batch 1")
+    (first, snap)
+  }
+
+  test("real replay, append posture: a re-run upsert batch re-appends its winners and the read face absorbs them") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-replay-ups").toString
+    val files = Seq(
+      Seq((1L, 1L, 10L, "u", "a1"), (2L, 5L, 11L, "u", "b1"), (3L, 9L, 13L, "d", "")),
+      Seq((1L, 3L, 14L, "u", "a2"), (2L, 2L, 15L, "u", "bOLD"), (4L, 1L, 17L, "u", "d1")))
+      .map(_.toDF("k", "v", "seq", "op", "payload"))
+    val ((state0, log0), (state1, log1)) = replayLastBatch(files) { (s, ck) =>
+      StreamingOps.upsertAppendSink(s, Seq("k"), "v", "seq", dir, "replay_ups", ck)
+    } {
+      (StreamingOps.upsertState(spark, dir, Seq("k"), "v", "seq", col("op") === "d")
+        .collect().map(_.toSeq).toSet, spark.read.parquet(dir).count())
+    }
+    assert(log1 > log0, s"the replay appended again: $log0 -> $log1 rows")
+    assert(state1 == state0, s"replayed upsert state $state1 != $state0")
+    assert(state0.map(r => (r(0), r(4))) == Set((1L, "a2"), (2L, "b1"), (4L, "d1")))
+  }
+
+  test("real replay, stamped posture: a re-run cms batch collapses with its first attempt") {
+    import spark.implicits._
+    import graft.api.GraftOps
+    val dir = Files.createTempDirectory("graft-replay-cms").toString
+    val chunks = Seq(Seq(("g1", "a"), ("g1", "b"), ("g2", "a")),
+      Seq(("g1", "c"), ("g2", "a"), ("g1", "a")))
+    val ((cells0, log0), (cells1, log1)) =
+      replayLastBatch(chunks.map(_.toDF("g", "v"))) { (s, ck) =>
+        StreamingOps.cmsAppendSink(s, "v", 3, 8, dir, "replay_cms", ck)
+      } {
+        (StreamingOps.cmsState(spark, dir).collect().map(_.toSeq).toSet,
+          spark.read.parquet(dir).count())
+      }
+    assert(log1 > log0, s"the replay appended again: $log0 -> $log1 rows")
+    assert(cells1 == cells0, "replayed cms state == the run that never replayed")
+    assert(cells0 == GraftOps.cmsSketch(chunks.flatten.toDF("g", "v"), col("v"), 3, 8)
+      .collect().map(_.toSeq).toSet, "cms state == batch cmsSketch")
+  }
+
+  test("real replay, overwrite posture: a re-run score batch replaces its own partition") {
+    import spark.implicits._
+    import graft.api.GraftOps
+    val train = Seq((Seq(1.0f, 0.0f), 2.25), (Seq(0.0f, 1.0f), -0.75),
+      (Seq(1.0f, 1.0f), 1.25), (Seq(-1.0f, 0.5f), -2.25)).toDF("vec", "y")
+    val mdir = Files.createTempDirectory("graft-replay-model").toString
+    GraftOps.ridgeFit(train, col("vec"), col("y"), 2, 0L)
+      .write.mode("overwrite").parquet(mdir)
+    val dir = Files.createTempDirectory("graft-replay-score").toString
+    val files = Seq(Seq((1L, Seq(0.5f, -0.25f)), (2L, Seq(-1.0f, 1.0f))),
+      Seq((3L, Seq(0.25f, 0.75f)), (4L, Seq(0.0f, 0.0f)), (5L, Seq(1.0f, 2.0f))))
+      .map(_.toDF("id", "vec"))
+    def partitions(): Seq[String] = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("sink_query_id=")).toSeq
+      .flatMap(q => q.listFiles().filter(_.getName.startsWith("batch_id="))
+        .map(b => s"${q.getName}/${b.getName}")).sorted
+    val ((parts0, rows0), (parts1, rows1)) = replayLastBatch(files) { (s, ck) =>
+      StreamingOps.scoreStreamSink(s, "vec", 2, mdir, "ridge", dir, "replay_score", ck)
+    } {
+      (partitions(), spark.read.parquet(dir).select("id", "score", "batch_id")
+        .collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq)
+    }
+    assert(parts0.size == 2 && parts0.forall(_.startsWith(parts0.head.takeWhile(_ != '/'))),
+      s"one query-id level, one partition per batch id: $parts0")
+    assert(parts1 == parts0, s"the replay wrote no new partition: $parts1")
+    assert(rows1 == rows0 && rows0.map(_.head) == Seq(1L, 2L, 3L, 4L, 5L),
+      s"each scored row once after the replay: $rows1")
+  }
+
   test("S22: streaming transition steps aggregate to batch transitionCounts; NULL states; late fails loudly") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
